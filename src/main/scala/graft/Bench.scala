@@ -260,8 +260,6 @@ object Bench {
           val b0 = System.currentTimeMillis()
           graft.streaming.ReplicationJob.processBatch(spark, batch, cfg, id)
           val commitMs = System.currentTimeMillis()
-          System.err.println(s"[bench] $tag batch $id " +
-            s"process_ms=${commitMs - b0} files=${batch.inputFiles.length}")
           // slice membership from the checkpoint's source-offset log for
           // this batch id (a tiny driver-side file, written at trigger
           // start — zero Spark jobs between batches, so measurement adds
@@ -277,6 +275,8 @@ object Bench {
             if (fromOffsets.nonEmpty) fromOffsets
             else batch.select((col("event_id") / W).cast("long").as("s"))
               .distinct().collect().toSeq.map(_.getLong(0))
+          System.err.println(s"[bench] $tag batch $id " +
+            s"process_ms=${commitMs - b0} files=${slices.size}")
           slices.foreach(s =>
             visible.merge(s, commitMs, (a, b) => math.min(a, b)))
         }

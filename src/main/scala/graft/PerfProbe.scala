@@ -26,7 +26,11 @@ object PerfProbe {
     spark.sparkContext.setLogLevel("WARN")
     graft.util.LogHygiene.muteBoundedWindowWarn()
     @volatile var stages = List.empty[(Int, String, Long, Long, Long, Int, Long)]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
@@ -57,11 +61,13 @@ object PerfProbe {
       val t0 = System.nanoTime(); val c1 = fn(spark, sfDir).count()
       val t1 = System.nanoTime()
       clearCaches()
+      Thread.sleep(500) // let the async listener bus drain the cold run
       stages = Nil
+      jobs.set(0)
       val t2 = System.nanoTime(); val c2 = fn(spark, sfDir).count()
       val t3 = System.nanoTime()
-      println(f"PERF $n%-28s cold=${(t1 - t0) / 1e9}%8.2fs warm=${(t3 - t2) / 1e9}%8.2fs rows=$c1%d jobs_warm=${stages.map(_._1).distinct.size}%d")
       Thread.sleep(500) // let the async listener bus drain
+      println(f"PERF $n%-28s cold=${(t1 - t0) / 1e9}%8.2fs warm=${(t3 - t2) / 1e9}%8.2fs rows=$c1%d jobs_warm=${jobs.get}%d")
       val top = stages.sortBy(-_._3)
       println(f"  stages_warm=${stages.size}%d wall_sum=${stages.map(_._3).sum / 1e3}%.1fs")
       top.take(10).foreach { case (id, nm, wall, run, gc, nt, sw) =>

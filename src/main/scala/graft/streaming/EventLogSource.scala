@@ -1,8 +1,9 @@
 package graft.streaming
 
-import java.io.BufferedInputStream
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util
 import scala.jdk.CollectionConverters._
 
@@ -85,10 +86,18 @@ object EventLogSource {
     }
   }
 
+  /** Bytes per read of a segment file. Every scan and reader reads the log
+    * in chunks of this size; a line may span any number of chunks.
+    */
+  val ReadChunkBytes: Int = 1 << 16
+
   /** Scan forward from `fromByte`, consuming at most `maxLines` lines.
     * Returns (linesRead, byteAfterLastLine, reachedEof). This is the
     * single byte/row accounting primitive — offsets and readers must
-    * agree on it.
+    * agree on it, and both split lines through the same [[LineCursor]].
+    * `reachedEof` is also set when the `maxLines`-th line ends exactly at
+    * EOF, so a walk that spends its budget on a segment's last line still
+    * learns that segment's row count.
     *
     * `countUnterminated`: whether a final line with no trailing newline
     * counts. TRUE for closed segments and batch reads (the writer moved
@@ -101,36 +110,88 @@ object EventLogSource {
     */
   def scanLines(file: Path, fromByte: Long, maxLines: Long,
       countUnterminated: Boolean = true): (Long, Long, Boolean) = {
-    val in = new BufferedInputStream(Files.newInputStream(file))
+    val in = new LineCursor(file, fromByte)
     try {
-      var toSkip = fromByte
-      while (toSkip > 0) {
-        val skipped = in.skip(toSkip)
-        if (skipped <= 0) return (0L, fromByte, true) // past EOF: nothing here
-        toSkip -= skipped
-      }
       var lines = 0L
       var byte = fromByte
-      var sinceNewline = 0L
       var eof = false
       while (lines < maxLines && !eof) {
-        val b = in.read()
-        if (b < 0) {
-          eof = true
-          if (sinceNewline > 0 && countUnterminated) {
-            lines += 1; byte += sinceNewline; sinceNewline = 0
-          }
-        } else if (b == '\n') {
-          lines += 1; byte += sinceNewline + 1; sinceNewline = 0
-        } else sinceNewline += 1
+        val len = in.skipLine()
+        if (len < 0) eof = true
+        else if (in.terminated) { lines += 1; byte += len + 1 }
+        else if (countUnterminated) { lines += 1; byte += len }
+        // an uncounted unterminated tail: the next skipLine reports EOF
       }
-      if (!eof && lines == maxLines && in.read() < 0) eof = true
-      (lines, byte, eof)
+      (lines, byte, eof || !in.hasMore)
     } finally in.close()
   }
 
   def countRows(dir: String, seg: String): Long =
     scanLines(Paths.get(dir, seg), 0L, Long.MaxValue)._1
+}
+
+/** Forward, '\n'-ONLY line cursor over one segment file from byte
+  * `fromByte`, reading [[EventLogSource.ReadChunkBytes]] at a time. A
+  * BufferedReader.readLine would also split on a lone '\r' INSIDE a
+  * payload, desyncing a reader's row numbering from the planner's counts —
+  * rows silently dropped from the slice and every later offset shifted.
+  * A position past EOF reads as EOF.
+  */
+private[streaming] final class LineCursor(file: Path, fromByte: Long)
+    extends java.io.Closeable {
+  private val ch = FileChannel.open(file, StandardOpenOption.READ)
+  ch.position(fromByte)
+  private val buf = new Array[Byte](EventLogSource.ReadChunkBytes)
+  private val chunk = ByteBuffer.wrap(buf)
+  private var pos = 0
+  private var lim = 0
+  private val line = new java.io.ByteArrayOutputStream(256)
+
+  /** Whether the line last consumed ended in '\n' (false: an EOF tail). */
+  var terminated: Boolean = false
+
+  def size: Long = ch.size()
+
+  private def fill(): Boolean = {
+    chunk.clear()
+    lim = math.max(ch.read(chunk), 0)
+    pos = 0
+    lim > 0
+  }
+
+  /** Consume the next line through its '\n', or to EOF. Returns its
+    * byte length without the '\n', or −1 at EOF; with `keep` its bytes
+    * are left in `line`.
+    */
+  private def nextLine(keep: Boolean): Long = {
+    if (keep) line.reset()
+    var len = 0L
+    var done = false
+    terminated = false
+    while (!done) {
+      if (pos == lim && !fill()) done = true
+      else {
+        var i = pos
+        while (i < lim && buf(i) != '\n') i += 1
+        if (keep) line.write(buf, pos, i - pos)
+        len += i - pos
+        terminated = i < lim
+        done = terminated
+        pos = if (terminated) i + 1 else i
+      }
+    }
+    if (terminated || len > 0) len else -1L
+  }
+
+  def skipLine(): Long = nextLine(keep = false)
+
+  /** The next line decoded as UTF-8, or null at EOF. */
+  def readLine(): String =
+    if (nextLine(keep = true) < 0) null else line.toString(StandardCharsets.UTF_8)
+
+  def hasMore: Boolean = pos < lim || fill()
+
+  override def close(): Unit = ch.close()
 }
 
 /** Stream position: rows [0, `row`) of segment `seg` are consumed, as are
@@ -191,9 +252,15 @@ final class EventLogScan(path: String, maxRowsPerTrigger: Long,
 /** Micro-batch planning: `latestOffset(start, limit)` walks forward from
   * `start` by at most the admitted row count — rate control happens here,
   * in the source, not by post-hoc filtering (Spark then checkpoints
-  * exactly what was admitted). The walk scans only the bytes it admits
-  * (the offset carries the byte anchor), so a trigger is O(admitted),
-  * not O(log).
+  * exactly what was admitted). Each admitted byte is scanned once on the
+  * driver, in [[EventLogSource.ReadChunkBytes]] chunks:
+  *  - the walk starts at the offset's byte anchor and stops at the
+  *    admitted row count, so a trigger is O(admitted), not O(log);
+  *  - the walk records the row count of every closed segment it reaches
+  *    EOF on, and `planInputPartitions` takes closed-segment bounds from
+  *    those counts instead of scanning the segments again;
+  *  - the executor reader then reads its slice once more, from the
+  *    slice's byte anchor — the only other pass over those bytes.
   */
 final class EventLogMicroBatchStream(path: String, maxRows: Long,
     admissionChannel: Option[String] = None,
@@ -203,8 +270,10 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
 
   private def segs = EventLogSource.segments(path)
 
-  /** Row counts of CLOSED segments, cached by name (append-only: only the
-    * tail may grow, and the walk never re-scans consumed bytes anyway).
+  /** Row counts of CLOSED segments, by name (append-only: only the tail
+    * may grow). The `latestOffset` walk records each closed segment it
+    * reaches EOF on; a segment planned without that walk (the first batch
+    * after a restart) is counted once here.
     */
   private val closedCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
 
@@ -341,6 +410,9 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
       row += taken
       byte = newByte
       budget -= taken
+      // a closed segment walked to EOF: `row` is its row count, so
+      // planInputPartitions never scans it again
+      if (eof && seg < ss.length - 1) closedCounts.putIfAbsent(ss(seg), row)
       if (budget > 0 && eof && seg < ss.length - 1) { seg += 1; row = 0L; byte = 0L }
       else walking = false // budget spent, or at the (possibly growing) tail
     }
@@ -396,38 +468,19 @@ object EventLogReaderFactory extends PartitionReaderFactory {
     val slice = partition.asInstanceOf[EventLogSlice]
     new PartitionReader[InternalRow] {
       // seek straight to the slice: no O(from) line-skip per batch
-      private val in = new BufferedInputStream(
-        Files.newInputStream(Paths.get(slice.dir, slice.seg)))
-      locally {
-        var toSkip = slice.fromByte
-        while (toSkip > 0) {
-          val skipped = in.skip(toSkip)
-          require(skipped > 0, s"byte offset ${slice.fromByte} past EOF of ${slice.seg}")
-          toSkip -= skipped
-        }
-      }
-      // '\n'-ONLY line splitting, matching scanLines' byte accounting: a
-      // BufferedReader.readLine would also split on lone '\r' INSIDE a
-      // payload, desyncing the reader's row numbering from the planner's
-      // counts — rows silently dropped from the slice and every later
-      // offset shifted
-      private def readLineLf(): String = {
-        var b = in.read()
-        if (b < 0) return null
-        val buf = new java.io.ByteArrayOutputStream(128)
-        while (b >= 0 && b != '\n') { buf.write(b); b = in.read() }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      }
+      private val in = new LineCursor(Paths.get(slice.dir, slice.seg), slice.fromByte)
+      require(slice.fromByte <= in.size,
+        s"byte offset ${slice.fromByte} past EOF of ${slice.seg}")
+      private val segment = UTF8String.fromString(slice.seg)
       private var pos = slice.from
       private var current: String = _
       override def next(): Boolean =
         if (pos < slice.until) {
-          current = readLineLf()
+          current = in.readLine()
           if (current == null) false else { pos += 1; true }
         } else false
       override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(current),
-          UTF8String.fromString(slice.seg), pos - 1)
+        InternalRow(UTF8String.fromString(current), segment, pos - 1)
       override def close(): Unit = in.close()
     }
   }

@@ -27,7 +27,17 @@ import graft.sink.ParquetStateStore
   * Scale: the only shuffle per micro-batch is the per-key compaction
   * (map-side partial max_by first); DLQ and upsert writes are
   * append/merge. Kafka sources swap in for the file source unchanged
-  * (`readStream.format("kafka")` + the same transform chain).
+  * (`readStream.format("kafka")` + the same transform chain). Each
+  * micro-batch is sized from its own input, not by a setting:
+  *  - the batch is packed with a narrow coalesce to at most
+  *    `defaultParallelism` partitions before it is tagged, so the tag
+  *    barrier, the control aggregate, the compaction's map side and the
+  *    DLQ write run one task per core, not one per source slice;
+  *  - the DLQ write keeps the batch's rows per task: ceil(P × dlq_n /
+  *    batch_n) tasks of the batch's P.
+  * Both follow from the core count and the batch's error share, which
+  * change per deployment and per batch; a fixed user setting would be
+  * wrong for one or the other.
   */
 object ReplicationJob {
 
@@ -205,8 +215,15 @@ object ReplicationJob {
     // existing state (the steady-state upsert plan) — `obs.get` blocks
     // forever from the second micro-batch on. Measured here; the explicit
     // tiny aggregate on the cached frame is deterministic instead.
+    //
+    // Packed first with a narrow coalesce to at most one partition per
+    // core: a source hands over one partition per segment slice / file /
+    // topic partition, and every stage over the tagged batch would
+    // otherwise inherit that count. coalesce never shuffles and never adds
+    // partitions.
     val tagged = graft.util.Materialize.stable(
-      batch.withColumn("error_type", err).withColumn("_is_truncate", isTruncate))
+      batch.coalesce(spark.sparkContext.defaultParallelism)
+        .withColumn("error_type", err).withColumn("_is_truncate", isTruncate))
     // visible to the finally block: if anything on the main thread throws
     // while the concurrent upsert is still running, the cached batch must
     // not be unpersisted out from under the in-flight job — drain first
@@ -215,6 +232,7 @@ object ReplicationJob {
     // Batch-level control aggregates: DLQ count + failed_at watermark,
     // TRUNCATE count + (ts, event_id) watermark. One job over cached rows.
     def ctlRow() = tagged.agg(
+      count(lit(1)).as("batch_n"),
       count(when(col("error_type").isNotNull, 1)).as("dlq_n"),
       // coalesce: a batch whose DLQ rows ALL have null ts_us (fully
       // malformed envelopes — the case the DLQ exists for) must get a
@@ -302,11 +320,21 @@ object ReplicationJob {
     // dlqCount == invalidCount invariant). `failed_at_us` is derived from
     // batch content (max event ts), not wall clock, so a replay writes
     // byte-identical rows.
+    //
+    // The write runs as many tasks as the batch would need for the DLQ
+    // rows at the batch's own rows per task: ceil(P × dlq_n / batch_n) of
+    // the P tagged partitions, which lies in [1, P] as 0 < dlq_n ≤ batch_n
+    // — one task and one file for a few malformed rows, all P for an
+    // all-malformed batch.
     var dlqErr: Throwable = null
-    if (ctl.getAs[Long]("dlq_n") > 0) {
+    val (dlqN, batchN) = (ctl.getAs[Long]("dlq_n"), ctl.getAs[Long]("batch_n"))
+    if (dlqN > 0) {
+      val parts = tagged.rdd.getNumPartitions
+      val dlqParts = ((parts * dlqN + batchN - 1) / batchN).toInt
       // a DLQ failure must not leak a still-running upsert job past the
       // finally-block unpersist: record it, await the upsert, then throw
-      try dlq.withColumn("failed_at_us", lit(ctl.getAs[Long]("dlq_max_ts")))
+      try dlq.coalesce(dlqParts)
+        .withColumn("failed_at_us", lit(ctl.getAs[Long]("dlq_max_ts")))
         .withColumn("resolution_status", lit("PENDING"))
         .withColumn("resolved_at_us", lit(null).cast("long"))
         .withColumn("_batch_id", lit(batchId))

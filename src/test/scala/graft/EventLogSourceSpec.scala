@@ -20,6 +20,51 @@ class EventLogSourceSpec extends SparkSpecBase {
     Files.writeString(Paths.get(dir, name),
       (from until from + n).map(i => s"""{"event_id":$i}""").mkString("", "\n", "\n"))
 
+  /** Byte-at-a-time reference for [[EventLogSource.scanLines]]: the same
+    * contract read one byte per call, kept only to check the chunked scan.
+    */
+  private def refScanLines(file: java.nio.file.Path, fromByte: Long, maxLines: Long,
+      countUnterminated: Boolean): (Long, Long, Boolean) = {
+    val in = new java.io.BufferedInputStream(Files.newInputStream(file))
+    try {
+      var toSkip = fromByte
+      while (toSkip > 0) {
+        val skipped = in.skip(toSkip)
+        if (skipped <= 0) return (0L, fromByte, true)
+        toSkip -= skipped
+      }
+      var lines = 0L
+      var byte = fromByte
+      var sinceNewline = 0L
+      var eof = false
+      while (lines < maxLines && !eof) {
+        val b = in.read()
+        if (b < 0) {
+          eof = true
+          if (sinceNewline > 0 && countUnterminated) {
+            lines += 1; byte += sinceNewline; sinceNewline = 0
+          }
+        } else if (b == '\n') {
+          lines += 1; byte += sinceNewline + 1; sinceNewline = 0
+        } else sinceNewline += 1
+      }
+      if (!eof && lines == maxLines && in.read() < 0) eof = true
+      (lines, byte, eof)
+    } finally in.close()
+  }
+
+  /** Rows the executor reader returns for the slice [from, until). */
+  private def readSlice(dir: String, seg: String, from: Long, until: Long,
+      fromByte: Long): Seq[String] = {
+    val r = graft.streaming.EventLogReaderFactory.createReader(
+      graft.streaming.EventLogSlice(dir, seg, from, until, fromByte))
+    try {
+      val out = Seq.newBuilder[String]
+      while (r.next()) out += r.get().getUTF8String(0).toString
+      out.result()
+    } finally r.close()
+  }
+
   test("batch read returns every line with segment/offset provenance") {
     val dir = tmpDir("evlog")
     writeSeg(dir, "seg-000.log", 7)
@@ -352,5 +397,146 @@ class EventLogSourceSpec extends SparkSpecBase {
       s"LWW winners wrong: $state") // user 1: ts 300 = event 1; user 2: event 4
     val dlq = spark.read.parquet(s"$base/dlq").select("event_id").collect().map(_.getLong(0))
     assert(dlq.toSeq == Seq(5L), s"invalid event must route to DLQ, got ${dlq.toSeq}")
+  }
+
+  test("chunked scanLines agrees with the byte-at-a-time reference over generated logs") {
+    val chunk = EventLogSource.ReadChunkBytes
+    val rnd = new scala.util.Random(17)
+    // ASCII, a lone CR, and 2-, 3- and 4-byte UTF-8 characters
+    val alphabet = Seq("a", "b", "{", "\"", "\r", "\u00e9", "\u20ac", "\ud83d\ude00")
+    def line(n: Int): String = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val dir = tmpDir("evgen")
+    val files = (0 until 6).map { i =>
+      val lines = Seq.fill(5 + rnd.nextInt(40))(line(rnd.nextInt(200))) ++
+        // a line longer than the read buffer
+        (if (i % 2 == 0) Seq(line(chunk + rnd.nextInt(chunk))) else Nil) ++
+        Seq.fill(rnd.nextInt(10))(line(rnd.nextInt(200)))
+      // odd files end in an unterminated tail line
+      val body = lines.mkString("\n") + (if (i % 2 == 1) "" else "\n")
+      val f = Paths.get(dir, f"seg-$i%03d.log")
+      Files.write(f, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f
+    }
+    files.foreach { f =>
+      val size = Files.size(f)
+      // every line start, a few byte positions that are not line starts,
+      // EOF itself and two positions past it
+      val starts = Iterator.iterate((0L, 0L, false)) { case (_, b, _) =>
+        refScanLines(f, b, 1L, countUnterminated = true)
+      }.drop(1).takeWhile(_._1 > 0).map(_._2).toSeq
+      val froms = (0L +: starts) ++ Seq.fill(4)((rnd.nextDouble() * size).toLong) ++
+        Seq(size, size + 1, size + chunk)
+      for {
+        from <- froms.distinct
+        maxLines <- Seq(0L, 1L, 2L, 7L, Long.MaxValue)
+        cu <- Seq(true, false)
+      } {
+        val got = EventLogSource.scanLines(f, from, maxLines, countUnterminated = cu)
+        val want = refScanLines(f, from, maxLines, countUnterminated = cu)
+        assert(got == want, s"${f.getFileName} from=$from maxLines=$maxLines " +
+          s"countUnterminated=$cu: got $got, reference $want")
+      }
+    }
+  }
+
+  test("scanLines edge cases: CR, unterminated tail, long line, EOF positions") {
+    val chunk = EventLogSource.ReadChunkBytes
+    val dir = tmpDir("evedge")
+    def check(name: String, body: Array[Byte], from: Long, maxLines: Long,
+        cu: Boolean, want: (Long, Long, Boolean)): Unit = {
+      val f = Paths.get(dir, name)
+      Files.write(f, body)
+      val got = EventLogSource.scanLines(f, from, maxLines, countUnterminated = cu)
+      assert(got == want, s"$name from=$from maxLines=$maxLines cu=$cu: $got")
+      assert(got == refScanLines(f, from, maxLines, cu), s"$name disagrees with the reference")
+    }
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    // a CR inside a payload is data
+    check("cr.log", "x\ry\nz\n".getBytes(utf8), 0L, Long.MaxValue, cu = true, (2L, 6L, true))
+    // an unterminated tail counts only for a closed segment
+    val tail = "ab\ncd".getBytes(utf8)
+    check("tail.log", tail, 0L, Long.MaxValue, cu = true, (2L, 5L, true))
+    check("tail.log", tail, 0L, Long.MaxValue, cu = false, (1L, 3L, true))
+    check("tail.log", tail, 3L, Long.MaxValue, cu = false, (0L, 3L, true))
+    // a line longer than the read buffer, then a short one
+    val long = ("z" * (2 * chunk + 5) + "\nq\n").getBytes(utf8)
+    check("long.log", long, 0L, 1L, cu = true, (1L, 2L * chunk + 6, false))
+    check("long.log", long, 0L, Long.MaxValue, cu = true, (2L, 2L * chunk + 8, true))
+    // fromByte at EOF and past it
+    check("eof.log", "ab\n".getBytes(utf8), 3L, 5L, cu = true, (0L, 3L, true))
+    check("eof.log", "ab\n".getBytes(utf8), 9L, 5L, cu = true, (0L, 9L, true))
+    check("eof.log", "ab\n".getBytes(utf8), 9L, 0L, cu = true, (0L, 9L, true))
+    // maxLines ending exactly at EOF sets the eof flag; one short of it not
+    check("exact.log", "a\nb\nc\n".getBytes(utf8), 0L, 3L, cu = true, (3L, 6L, true))
+    check("exact.log", "a\nb\nc\n".getBytes(utf8), 0L, 2L, cu = true, (2L, 4L, false))
+    // …also when the last line ends exactly on a read-buffer boundary
+    val edge = ("y" * (chunk - 1) + "\n").getBytes(utf8)
+    check("edge.log", edge, 0L, 1L, cu = true, (1L, chunk.toLong, true))
+  }
+
+  test("the reader decodes UTF-8 across read-buffer boundaries and from any slice anchor") {
+    val chunk = EventLogSource.ReadChunkBytes
+    val dir = tmpDir("evutf")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    // a 3-byte character starting one byte before the first buffer
+    // boundary, a 4-byte one straddling the second, a CR, an empty line
+    // and an unterminated tail
+    val lines = Seq(
+      "a" * (chunk - 1) + "\u20ac" + "b",
+      "c" * (chunk - 6) + "\ud83d\ude00" + "d\re",
+      "",
+      "tail \u00e9")
+    Files.write(Paths.get(dir, "seg-000.log"), lines.mkString("\n").getBytes(utf8))
+    // every slice [from, until) read from its byte anchor
+    val f = Paths.get(dir, "seg-000.log")
+    for (from <- lines.indices; until <- from to lines.length) {
+      val (_, fromByte, _) = EventLogSource.scanLines(f, 0L, from.toLong)
+      assert(readSlice(dir, "seg-000.log", from.toLong, until.toLong, fromByte) ==
+        lines.slice(from, until), s"slice [$from, $until)")
+    }
+    // and the batch read returns the same rows through Spark
+    val df = spark.read.format(Fmt).option("path", dir).load()
+    assert(df.orderBy("offset").select("value").as[String].collect().toSeq == lines)
+  }
+
+  test("a batch replayed after a checkpoint resume plans and reads the same rows and offsets") {
+    // 4 segments of 5 rows, 12 rows a trigger: the second batch spans the
+    // rest of seg-002 and all of seg-003. Deleting that batch's commit
+    // makes the restarted query plan it again from the offset log alone,
+    // on a fresh source that has not walked it, so closed-segment bounds
+    // come from a count instead of the walk.
+    val dir = tmpDir("evresume")
+    (0 until 4).foreach(i => writeSeg(dir, f"seg-$i%03d.log", 5, from = 5 * i))
+    val ck = tmpDir("ck")
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(String, Long, String)])]
+    def drain(): Unit = {
+      val q = spark.readStream.format(Fmt).option("path", dir)
+        .option("maxRowsPerTrigger", 12).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val rows = b.select("segment", "offset", "value").as[(String, Long, String)]
+            .collect().toSeq.sorted
+          batches.synchronized { batches += id -> rows }
+          (): Unit
+        }
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+    }
+    drain()
+    val first = batches.toList
+    assert(first.map(_._2.size) == List(12, 8), s"batch sizes: ${first.map(_._2.size)}")
+    assert(first.flatMap(_._2).map(_._3) == (0 until 20).map(i => s"""{"event_id":$i}"""),
+      "every row exactly once, in (segment, offset) order")
+    val lastId = first.last._1
+    val offsetLog = Paths.get(ck, "offsets", lastId.toString)
+    val offsetsBefore = Files.readString(offsetLog)
+    Files.delete(Paths.get(ck, "commits", lastId.toString))
+    Files.deleteIfExists(Paths.get(ck, "commits", s".$lastId.crc"))
+    batches.clear()
+    drain()
+    assert(batches.toList == List(first.last),
+      s"the replayed batch must deliver the same rows: ${batches.toList}")
+    assert(Files.readString(offsetLog) == offsetsBefore, "the offset log must not change")
   }
 }

@@ -43,6 +43,76 @@ class ReplicationSpec extends SparkSpecBase {
       Seq("user_id"), Seq(col("_cdc_timestamp_micros"), col("_last_event_id")))
   }
 
+  private def ev(id: Long, ts: Long, uid: Long, et: String, v: Double = 1.0) =
+    s"""{"event_id":$id,"ts":${ts * 1000},"user_id":$uid,"event_type":"$et","value":$v}"""
+
+  /** A commit-log batch decoded as `ReplicationJob.start` decodes it, read
+    * through the source's batch scan: one partition per segment.
+    */
+  private def commitLogBatch(segs: Seq[Seq[String]]) = {
+    import java.nio.file.{Files, Paths}
+    val dir = tmpDir("packlog")
+    segs.zipWithIndex.foreach { case (lines, i) =>
+      Files.writeString(Paths.get(dir, f"seg-$i%03d.log"), lines.mkString("", "\n", "\n"))
+    }
+    spark.read.format(classOf[graft.streaming.EventLogSource].getName)
+      .option("path", dir).load()
+      .select(from_json(col("value"), ReplicationJob.eventSchema).as("e"))
+      .select(col("e.*"))
+      .withColumn("ts_us", expr("ts div 1000"))
+  }
+
+  private def dlqFiles(cfg: Config, batchId: Long): Long = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(cfg.dlqDir, s"_batch_id=$batchId"))
+    try s.filter(_.getFileName.toString.endsWith(".parquet")).count()
+    finally s.close()
+  }
+
+  Seq("local", "persist").foreach { mode =>
+    test(s"$mode mode: a 10-slice batch with a few malformed rows writes one DLQ file") {
+      import spark.implicits._
+      withSQLConf("spark.graft.materialize" -> mode) {
+        // 10 segments of 20 events; ids 7, 57, 107 and 157 carry an unknown type
+        val segs = (0 until 10).map(sg => (0 until 20).map { j =>
+          val id = sg * 20L + j
+          ev(id, 1000L + id, id % 37, if (id % 50 == 7) "bogus_type" else "view")
+        })
+        val batch = commitLogBatch(segs)
+        assert(batch.rdd.getNumPartitions == 10)
+        val cfg = freshCfg()
+        ReplicationJob.processBatch(spark, batch, cfg, batchId = 3L)
+        assert(dlqFiles(cfg, 3L) == 1L, "a few malformed rows take one DLQ task")
+        val dlq = spark.read.parquet(cfg.dlqDir)
+          .select("event_id", "error_type", "failed_at_us", "resolution_status", "_batch_id")
+          .as[(Long, String, Long, String, Long)].collect().toSet
+        // failed_at_us is the batch's max malformed ts_us
+        assert(dlq == Set(7L, 57L, 107L, 157L).map(id =>
+          (id, "SCHEMA_MISMATCH", 1157L, "PENDING", 3L)), s"DLQ rows: $dlq")
+        assert(ReplicationJob.targetState(spark, cfg).count() == 37L)
+      }
+    }
+
+    test(s"$mode mode: an all-malformed batch writes one DLQ file per tagged partition") {
+      withSQLConf("spark.graft.materialize" -> mode) {
+        // every row is malformed, so the DLQ write keeps all P partitions of
+        // the tagged batch and its file count reads P: packed to at most one
+        // partition per core, never more than the batch's own slices
+        val cores = spark.sparkContext.defaultParallelism
+        Seq(10, 3).zipWithIndex.foreach { case (slices, b) =>
+          val segs = (0 until slices).map(sg => (0 until 20).map { j =>
+            val id = sg * 20L + j
+            ev(id, 1000L + id, id, "bogus_type")
+          })
+          val cfg = freshCfg()
+          ReplicationJob.processBatch(spark, commitLogBatch(segs), cfg, batchId = b.toLong)
+          assert(dlqFiles(cfg, b.toLong) == math.min(slices, cores).toLong,
+            s"$slices slices on $cores cores")
+          assert(spark.read.parquet(cfg.dlqDir).count() == slices * 20L)
+        }
+      }
+    }
+  }
+
   test("poison batch: all-null malformed rows route to DLQ without crashing") {
     import spark.implicits._
     val cfg = freshCfg()
@@ -170,8 +240,6 @@ class ReplicationSpec extends SparkSpecBase {
     // checkpoint + idempotent-LWW construction (reference
     // test_crash_recovery.py:343, SC-007 "≤30s, zero events lost").
     val dir = tmpDir("crashlog")
-    def ev(id: Long, ts: Long, uid: Long, et: String, v: Double) =
-      s"""{"event_id":$id,"ts":${ts * 1000},"user_id":$uid,"event_type":"$et","value":$v}"""
     Files.writeString(Paths.get(dir, "seg-000.log"),
       (1L to 5L).map(i => ev(i, i * 100, i, "view", 1.0)).mkString("", "\n", "\n"))
     Files.writeString(Paths.get(dir, "seg-001.log"),
