@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark: per-query wall clock over SPARK_GRAFT_SF_DIR plus a
   * replication-pipeline throughput metric (events/s through
@@ -29,22 +28,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      // default: one shuffle partition per core; SPARK_GRAFT_SHUFFLE
-      // overrides for cluster-shaped runs (the scale-audit artifact)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
+    // default: one shuffle partition per core; SPARK_GRAFT_SHUFFLE
+    // overrides for cluster-shaped runs (the scale-audit artifact)
+    val spark = Harness.session(
+      sys.env.get("SPARK_GRAFT_SHUFFLE").fold(Harness.cores)(_.toInt))
     // host-load breadcrumb: a high 1-min loadavg at start explains a
     // slow pass-1 better than any per-query number — now also emitted
     // into the JSON artifact (round-15 verdict #1), not just stderr
@@ -73,23 +60,6 @@ object Bench {
         contentionRatio = math.max(contentionRatio, pos.max / pos.min)
     }
 
-    def clearCaches(): Unit = {
-      // BLOCKING unpersist: clearCaches runs OUTSIDE the timed window, so
-      // a synchronous removal costs the measurement nothing — while the
-      // async form let a heavy query's thousands of localCheckpoint
-      // blocks still be draining when the next trial's t0 started
-      // (measured as the only RISING trial sequence in r12,
-      // dedup_clusters_incremental 3.51 -> 5.71 across retries).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      // One GC per timing too: across three controlled runs, the
-      // per-timing GC produced the cleanest profile (contention 4.7 vs
-      // 34-57 with GC only at phase boundaries) — dead localCheckpoint
-      // blocks from earlier queries otherwise stall a later query's
-      // allocation mid-trial, which reads as a random 10-60× outlier.
-      System.gc()
-    }
-
     // Let the ContextCleaner actually reclaim unpersisted blocks:
     // cleaning is driven by GC of the RDD objects, so late in a
     // 200-query session thousands of dead localCheckpoint blocks still
@@ -102,7 +72,7 @@ object Bench {
 
     /** Wall-clock one action; Left(error) on throw (never a fake time). */
     def timeOnce(label: String)(body: => Unit): Either[String, Double] = {
-      clearCaches()
+      Harness.clearCaches(spark)
       val t0 = System.nanoTime()
       val r = try { body; Right((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.StageInfo
 
 /** Cross-SF shuffle-BYTES scaling audit (round-16 verdict #1) — the scale
   * axis the other three audits don't measure: [[ScaleAudit]] proves plans
@@ -38,9 +37,14 @@ object BytesAudit {
   final case class Bytes(shuffleRead: Long, shuffleWrite: Long,
       memSpill: Long, diskSpill: Long) {
     def shuffleTotal: Long = shuffleRead + shuffleWrite
-    def plus(o: Bytes): Bytes = Bytes(shuffleRead + o.shuffleRead,
-      shuffleWrite + o.shuffleWrite, memSpill + o.memSpill,
-      diskSpill + o.diskSpill)
+  }
+
+  /** The byte totals of the completed stages [[Harness.measure]] saw. */
+  def bytes(stages: Seq[StageInfo]): Bytes = {
+    val ms = stages.flatMap(s => Option(s.taskMetrics))
+    Bytes(ms.map(_.shuffleReadMetrics.totalBytesRead).sum,
+      ms.map(_.shuffleWriteMetrics.bytesWritten).sum,
+      ms.map(_.memoryBytesSpilled).sum, ms.map(_.diskBytesSpilled).sum)
   }
 
   /** Below this large-scale shuffle volume a query cannot be a scaling
@@ -64,94 +68,25 @@ object BytesAudit {
       largeBytes.toDouble / math.max(smallBytes, BasisFloorBytes).toDouble >
         c * factor
 
-  /** Run `body` with a stage-metrics listener attached and return the
-    * shuffle/spill bytes its stages accumulated. The listener bus is
-    * asynchronous, so the snapshot must not race late completion events:
-    * rather than a fixed sleep (which silently under-counts on a loaded
-    * host — exactly the false PASS this audit exists to prevent), the
-    * listener also counts `onStageSubmitted`, and the drain polls until
-    * every submitted stage's completion event has arrived (skipped stages
-    * never emit a submit, so the counts reconcile exactly). `settleMs`
-    * remains only as the hard timeout fallback for a stage whose
-    * completion event the bus genuinely dropped.
-    */
-  def measure(spark: SparkSession, settleMs: Long = 15000)(body: => Unit): Bytes = {
-    @volatile var acc = Bytes(0, 0, 0, 0)
-    val submitted = new java.util.concurrent.atomic.AtomicLong(0)
-    val completed = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-        submitted.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) acc = acc.plus(Bytes(
-          m.shuffleReadMetrics.totalBytesRead,
-          m.shuffleWriteMetrics.bytesWritten,
-          m.memoryBytesSpilled, m.diskBytesSpilled))
-        completed.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // Primary drain: LiveListenerBus.waitUntilEmpty — deterministic, blocks
-      // until every queued event (submits AND completions) has been delivered.
-      // It is `private[spark]` in Scala but public in bytecode, so reflection;
-      // if the API ever moves, fall through to the counter reconciliation.
-      val busDrained =
-        try {
-          val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-            .invoke(spark.sparkContext)
-          bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-            .invoke(bus, java.lang.Long.valueOf(settleMs))
-          true
-        } catch { case scala.util.control.NonFatal(_) => false }
-      // Cross-check (and fallback when reflection is unavailable): body's
-      // actions have returned, so all events are already posted in order;
-      // poll until every observed submit has its completion.
-      val deadline = System.nanoTime() + settleMs * 1000000L
-      while (completed.get() < submitted.get() && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      if (completed.get() < submitted.get())
-        System.err.println(s"[bytes] WARN listener drain " +
-          s"${if (busDrained) "reconciliation failed after waitUntilEmpty"
-              else "timed out (waitUntilEmpty unavailable)"}: " +
-          s"${completed.get()}/${submitted.get()} stage completions seen")
-    }
-    finally spark.sparkContext.removeSparkListener(listener)
-    acc
-  }
-
   def main(args: Array[String]): Unit = {
     val sfSmall = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val sfLarge = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SF_FACTOR", "10").toDouble
     val c = sys.env.getOrElse("SPARK_GRAFT_BYTES_C", "2").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      // the PRODUCTION shuffle config, not ScaleAudit's forced width:
-      // bytes are a volume property; the audit measures what the gate
-      // queries actually move, AQE re-planning included
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
+    // the PRODUCTION shuffle config, not ScaleAudit's forced width:
+    // bytes are a volume property; the audit measures what the gate
+    // queries actually move, AQE re-planning included
+    val spark = Harness.session(
+      sys.env.get("SPARK_GRAFT_SHUFFLE").fold(32)(_.toInt))
 
     val targets = if (args.nonEmpty) args.toSeq else ScaleAudit.heavy
     def pass(sfDir: String): Map[String, Bytes] = targets.map { name =>
-      val b = measure(spark) {
+      val b = bytes(Harness.measure(spark) {
         // noop sink, not count(): count() lets Catalyst prune columns the
         // gate query actually materializes (the ScaleAudit rationale)
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-      }
+      }.stages)
       graft.util.Materialize.releaseTracked(spark)
       System.err.println(f"[bytes] $sfDir%-28s $name%-34s " +
         f"shuffle=${b.shuffleTotal}%12d spill=${b.memSpill + b.diskSpill}%12d")

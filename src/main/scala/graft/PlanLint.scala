@@ -299,17 +299,7 @@ object PlanLint {
       case s :: o :: Nil => (s, o)
       case _ => sys.error("usage: PlanLint <sfDir> <outJson>")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
+    val spark = Harness.session()
     val hits = run(spark, sfDir)
     // post-AQE re-walk of the ScaleAudit heavy list: the static section
     // covers every gate cheaply; the executed section EXECUTES the

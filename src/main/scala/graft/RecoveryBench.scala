@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured crash-recovery time (r17 verdict #2 — SC-007, reference
@@ -33,21 +32,10 @@ import org.apache.spark.sql.functions._
 object RecoveryBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nSegments = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_SEGMENTS", "20").toInt
     val killAfter = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_KILL_AFTER", "14").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
+    val spark = Harness.session(
+      sys.env.get("SPARK_GRAFT_SHUFFLE").fold(Harness.cores)(_.toInt))
 
     val ev = Tables.events(spark, sfDir)
     val nEvents = ev.count()

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Cluster-shape audit: run the heaviest gate queries with shuffle
   * parallelism forced to a cluster-like width (default 256 — what a
   * ~1000-core cluster's AQE would coalesce toward at this data size) and
@@ -93,53 +90,32 @@ object ScaleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val width = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.sql.shuffle.partitions", width.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.session(width, Seq(
       // coalescing OFF: a 256-wide exchange must RUN 256 tasks here, so a
       // partial collapse (8 tasks) is observable instead of being folded
       // into AQE's local-volume coalesce; skew splitting stays enabled.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       // widen the scans too: sf0.1 files are small enough to read in 1-2
       // tasks at the 128m default, which would hide a scan-side collapse
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
-
-    @volatile var stages = List.empty[Int]
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        stages ::= sc.stageInfo.numTasks
-    }
-    spark.sparkContext.addSparkListener(listener)
+      "spark.sql.files.maxPartitionBytes" -> "4m"))
 
     // optional argv: audit exactly these queries instead of the built-in
     // list (the width-1024 stress runs name the 5 heaviest explicitly)
     val targets = if (args.nonEmpty) args.toSeq else heavy
     var collapsed = List.empty[String]
     val out = targets.map { name =>
-      stages = Nil
-      val t0 = System.nanoTime()
       // noop sink, not count(): count() lets Catalyst prune every
       // unreferenced projection (e.g. a reassembly collect_list under a
       // final groupBy), so the audit would measure a cheaper plan than
       // the gate query actually runs
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // listener events are async; settle before snapshotting the counts
-      Thread.sleep(2000)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val m = Harness.measure(spark) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+      }
       graft.util.Materialize.releaseTracked(spark)
-      val st = stages
-      val maxTasks = if (st.isEmpty) 0 else st.max
+      val maxTasks = m.stages.map(_.numTasks).maxOption.getOrElse(0)
       if (maxTasks < width) collapsed ::= name
-      f""""$name":{"stages":${st.size},"max_tasks":$maxTasks,"wall_s":$dt%.2f}"""
+      f""""$name":{"stages":${m.stages.size},"max_tasks":$maxTasks,"wall_s":${m.seconds}%.2f}"""
     }
     val coll = collapsed.reverse.map(n => s""""$n"""").mkString("[", ",", "]")
     println(s"""{"shuffle":$width,"collapsed":$coll,"queries":{${out.mkString(",")}}}""")

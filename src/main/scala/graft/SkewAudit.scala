@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Dedup, Packing, TextAnalysis}
@@ -26,28 +25,11 @@ object SkewAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bound = sys.env.getOrElse("SPARK_GRAFT_SKEW_BOUND", "12").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.session(32, Seq(
       // keep exchanges at the forced width so every stage has enough
       // tasks for a median (skew SPLITTING stays on; same rationale as
       // ScaleAudit — this is an observability knob, not a perf setting)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
-
-    @volatile var tasks = List.empty[(Int, Long)] // (stageId, runtime ms)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          tasks ::= (te.stageId, te.taskMetrics.executorRunTime)
-    })
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
 
     val docs = Tables.documents(spark, sfDir)
     val boiler = "COMMON LICENSE HEADER PARAGRAPH REPEATED ACROSS THE CORPUS"
@@ -124,15 +106,13 @@ object SkewAudit {
 
     var violations = List.empty[String]
     val out = runs.map { case (name, mk) =>
-      tasks = Nil
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      Thread.sleep(2000) // listener events are async
-      val dt = (System.nanoTime() - t0) / 1e9
+      val run = Harness.measure(spark) {
+        mk().write.format("noop").mode("overwrite").save()
+      }
       graft.util.Materialize.releaseTracked(spark)
       // straggler ratio of the HEAVIEST stage (by summed task time) with
       // enough tasks for a median to mean something
-      val byStage = tasks.groupBy(_._1).filter(_._2.size >= 4)
+      val byStage = run.tasks.groupBy(_._1).filter(_._2.size >= 4)
       val (ratio, mx, med) =
         if (byStage.isEmpty) (1.0, 0L, 0L)
         else {
@@ -141,7 +121,7 @@ object SkewAudit {
           (heavy.last.toDouble / m, heavy.last, m)
         }
       if (ratio > bound) violations ::= name
-      f""""$name":{"stages":${byStage.size},"max_ms":$mx,"median_ms":$med,"ratio":$ratio%.2f,"wall_s":$dt%.2f}"""
+      f""""$name":{"stages":${byStage.size},"max_ms":$mx,"median_ms":$med,"ratio":$ratio%.2f,"wall_s":${run.seconds}%.2f}"""
     }
     val viol = violations.reverse.map(n => s""""$n"""").mkString("[", ",", "]")
     println(s"""{"bound":$bound,"violations":$viol,"queries":{${out.mkString(",")}}}""")

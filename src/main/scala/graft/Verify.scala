@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,7 @@ object Verify {
       case s :: o :: rest => (s, o, rest.toSet)
       case _ => sys.error("usage: Verify <sfDir> <outDir> [query ...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.driver.bindAddress", "127.0.0.1")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.LogHygiene.muteBoundedWindowWarn()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     val lintHits = scala.collection.mutable.ListBuffer.empty[PlanLint.Hit]
     SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }.foreach { case (name, fn) =>

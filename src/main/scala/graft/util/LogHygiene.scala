@@ -1,7 +1,7 @@
 package graft.util
 
-/** Targeted log-noise control for the driver entry points (Verify /
-  * Bench / PerfProbe / PlanLint / audits).
+/** Targeted log-noise control for the tool entry points: every
+  * session [[graft.Harness.session]] builds calls it.
   *
   * `WindowExec` logs "No Partition Defined for Window operation!" once
   * per EXECUTION of every unpartitioned window. Every unpartitioned

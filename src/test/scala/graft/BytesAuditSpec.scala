@@ -30,10 +30,13 @@ class BytesAuditSpec extends SparkSpecBase {
     spark.range(n).select((col("id") % (n / 2)).as("v")).distinct()
       .write.format("noop").mode("overwrite").save()
 
+  private def measured(body: => Unit): BytesAudit.Bytes =
+    BytesAudit.bytes(Harness.measure(spark)(body).stages)
+
   test("a quadratic pair-generator is flagged superlinear at 10x data; " +
     "a linear distinct is not") {
-    val quadSmall = BytesAudit.measure(spark) { quadraticPairs(300L) }
-    val quadLarge = BytesAudit.measure(spark) { quadraticPairs(3000L) }
+    val quadSmall = measured { quadraticPairs(300L) }
+    val quadLarge = measured { quadraticPairs(3000L) }
     assert(quadLarge.shuffleTotal >= BytesAudit.FloorBytes,
       s"fixture too small to exercise the floor: ${quadLarge.shuffleTotal}")
     assert(BytesAudit.isSuperlinear(
@@ -41,8 +44,8 @@ class BytesAuditSpec extends SparkSpecBase {
       s"9M pairs from 10x rows must flag: small=${quadSmall.shuffleTotal} " +
         s"large=${quadLarge.shuffleTotal}")
 
-    val linSmall = BytesAudit.measure(spark) { linearDistinct(300000L) }
-    val linLarge = BytesAudit.measure(spark) { linearDistinct(3000000L) }
+    val linSmall = measured { linearDistinct(300000L) }
+    val linLarge = measured { linearDistinct(3000000L) }
     assert(linLarge.shuffleTotal >= BytesAudit.FloorBytes,
       s"control must clear the floor so the PASS is meaningful: ${linLarge.shuffleTotal}")
     assert(!BytesAudit.isSuperlinear(

@@ -1,0 +1,82 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+
+/** The tool harness: `measure` returns exact, drained scheduler counts
+  * with no settle sleep, and it stays the only session builder and
+  * listener in `src/main`.
+  */
+class HarnessSpec extends SparkSpecBase {
+
+  /** 64 range tasks shuffled into 16: under AQE the map stage runs as its
+    * own job and the result job skips it, so 2 jobs, 2 stages, 80 tasks.
+    */
+  private def twoStage(): Unit =
+    spark.range(0, 100000, 1, 64).repartition(16)
+      .write.format("noop").mode("overwrite").save()
+
+  /** Holds the listener bus up 10 ms per task event, so counts read
+    * before the bus drains come up short instead of racing to complete.
+    */
+  private def withSlowBus[A](body: => A): A = {
+    val slow = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = Thread.sleep(10)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try body finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("measure returns exact job, stage and task counts as soon as it returns") {
+    withSQLConf("spark.sql.adaptive.enabled" -> "true") { withSlowBus {
+      val m = Harness.measure(spark)(twoStage())
+      assert(m.jobs == 2)
+      assert(m.stages.map(_.numTasks).sorted == Seq(16, 64))
+      assert(m.tasks.size == 80)
+      assert(m.tasks.groupBy(_._1).map { case (id, ts) => id -> ts.size } ==
+        m.stages.map(s => s.stageId -> s.numTasks).toMap)
+      assert(m.seconds > 0)
+    }}
+  }
+
+  test("a second measure sees none of the first one's events") {
+    withSQLConf("spark.sql.adaptive.enabled" -> "true") { withSlowBus {
+      val first = Harness.measure(spark)(twoStage())
+      val second = Harness.measure(spark) {
+        spark.range(0, 1000, 1, 8).write.format("noop").mode("overwrite").save()
+        7
+      }
+      assert(second.value == 7)
+      assert(second.jobs == 1)
+      assert(second.stages.map(_.numTasks) == Seq(8))
+      assert(second.tasks.size == 8)
+      val firstIds = first.stages.map(_.stageId).toSet
+      assert(firstIds.size == 2)
+      assert(second.stages.forall(s => !firstIds(s.stageId)))
+      assert(second.tasks.forall { case (id, _) => !firstIds(id) })
+    }}
+  }
+
+  test("SparkSession.builder() and addSparkListener appear only in Harness.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files: Seq[Path] = {
+      val s = Files.walk(root)
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    // code only: a doc comment may show the builder as usage
+    def code(src: String): String =
+      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val offenders = for {
+      f <- files if f.getFileName.toString != "Harness.scala"
+      pat <- Seq("SparkSession.builder()", "addSparkListener")
+      if code(Files.readString(f)).contains(pat)
+    } yield s"$pat in $f"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(files.exists(_.getFileName.toString == "Harness.scala"))
+  }
+}
