@@ -156,10 +156,10 @@ object Bench {
     //     (events become capturable when the log segment lands, the same
     //     boundary the reference's Kafka produce timestamp marks);
     //   - the ENGINE's own micro-batch pipeline (ReplicationJob
-    //     .processBatch: validate → DLQ → LWW compact → bucketed-state
-    //     upsert) consumes them through a real streaming query; the
-    //     COMMIT-VISIBLE time of a segment is the wall clock right after
-    //     its batch's processBatch returns;
+    //     .processBatch: validate → DLQ → one LWW fold of the batch's raw
+    //     rows into the bucketed state) consumes them through a real
+    //     streaming query; the COMMIT-VISIBLE time of a segment is the
+    //     wall clock right after its batch's processBatch returns;
     //   - per-event latency = commit_visible(batch of segment) −
     //     land(segment), expanded to event weight and reduced by the
     //     engine's exact percentile (the A7 machinery), P50/P95/P99.

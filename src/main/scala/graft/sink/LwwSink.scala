@@ -5,6 +5,7 @@ import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ops.Lww
 
@@ -20,10 +21,12 @@ import graft.ops.Lww
   *    executed inside `foreachBatch` in production; no live Postgres exists
   *    in this container, so it is exercised by unit tests on the SQL text.
   *  - [[ParquetStateStore]] is the runnable local target: a parquet-backed
-  *    state table where upsert = LWW-fold of (current state ∪ batch).
-  *    Because the fold is the same commutative/idempotent max-by, replaying
-  *    a batch (foreachBatch is at-least-once) cannot regress state — this
-  *    is the exactly-once construction of SURVEY.md §7.4(1).
+  *    state table where upsert = LWW-fold of (current state ∪ batch). The
+  *    batch is the micro-batch's RAW valid rows, any number per key: the
+  *    fold is the same associative, commutative, idempotent max-by, so
+  *    one fold over state ∪ raw rows equals folding the batch first, and
+  *    replaying a batch (foreachBatch is at-least-once) cannot regress
+  *    state — this is the exactly-once construction of SURVEY.md §7.4(1).
   *
   * Scale note: ParquetStateStore rewrites the state table per batch, which
   * is the correct *semantic* model but at 100 TB the target would be a
@@ -126,6 +129,9 @@ final class ParquetStateStore(
 
   private val path: Path = Paths.get(dir)
   private val oldPath: Path = Paths.get(dir + ".old")
+  // the schema JSON [[swapIn]] keeps beside the data; underscore prefix:
+  // Spark's file index treats it as metadata (like _SUCCESS), never data
+  private val schemaFile = "_graft_schema"
 
   /** Crash recovery for [[swapIn]]'s two-move window: a death between
     * `move(path → old)` and `move(tmp → path)` leaves only the `.old`
@@ -146,18 +152,27 @@ final class ParquetStateStore(
     Files.exists(path.resolve("_SUCCESS"))
   }
 
-  def read(): DataFrame = { recoverIfInterrupted(); spark.read.parquet(dir) }
+  /** The state table. Read with the schema [[swapIn]] stored next to the
+    * data, so no Spark job infers it from the parquet footers; a store
+    * written without the schema file is inferred as before.
+    */
+  def read(): DataFrame = {
+    recoverIfInterrupted()
+    val stored = path.resolve(schemaFile)
+    if (Files.exists(stored))
+      spark.read.schema(DataType.fromJson(Files.readString(stored)).asInstanceOf[StructType])
+        .parquet(dir)
+    else spark.read.parquet(dir)
+  }
 
-  /** LWW-merge `batch` into the current state. Idempotent: merging the
-    * same batch twice is a no-op (max-by fold).
+  /** LWW-merge `batch` into the current state in one fold. `batch` holds
+    * raw rows, any number per key; with no state yet the batch is folded
+    * alone. Idempotent: merging the same batch twice is a no-op (max-by
+    * fold).
     */
   def upsert(batch: DataFrame): Unit = {
-    val merged =
-      if (exists)
-        Lww.latestPerKey(StateLayout.padUnion(read(), batch), keys,
-          Seq(col(tsCol), col(tieCol)))
-      else batch
-    swapIn(merged)
+    val rows = if (exists) StateLayout.padUnion(read(), batch) else batch
+    swapIn(Lww.latestPerKey(rows, keys, Seq(col(tsCol), col(tieCol))))
   }
 
   /** TTL purge (S15 delete side — the PLpgSQL expiry trigger of
@@ -206,9 +221,14 @@ final class ParquetStateStore(
     n
   }
 
+  /** Write `next` to a sibling tmp dir, with its schema beside the data
+    * for [[read]], then swap it in: the schema and the data it describes
+    * move together.
+    */
   private def swapIn(next: DataFrame): Unit = {
     val tmp = dir + ".tmp"
     next.write.mode(SaveMode.Overwrite).parquet(tmp)
+    Files.writeString(Paths.get(tmp, schemaFile), next.schema.json)
     // atomic-ish swap: state readers see old or new, never partial
     val old = dir + ".old"
     if (Files.exists(path)) {
@@ -597,12 +617,15 @@ final class BucketedParquetStateStore(
     ()
   }
 
-  /** LWW-merge a (pre-compacted, one row per key) batch into state. */
+  /** LWW-merge `batch` (raw rows, any number per key) into the buckets
+    * it touches, in one fold with their state; with no state yet the
+    * batch is folded alone.
+    */
   def upsert(batch: DataFrame): Unit = {
     ensureBucketCount()
     val b = batch.withColumn("_bucket", pmod(hash(keys.map(col): _*), lit(numBuckets)))
     val merged =
-      if (!exists) b
+      if (!exists) Lww.latestPerKey(b, keys, Seq(col(tsCol), col(tieCol)))
       else {
         val present = b.select("_bucket").distinct().collect().map(_.getInt(0)).toSeq
         val state = spark.read.parquet(dir)

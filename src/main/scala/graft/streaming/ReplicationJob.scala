@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, Future, TimeoutException}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -10,8 +13,8 @@ import graft.sink.ParquetStateStore
 
 /** The always-on replication path (reference lifecycle SURVEY.md §3.1):
   *
-  *   readStream → normalize → validate/split → per-key LWW compaction →
-  *   foreachBatch { DLQ append; LWW upsert into target state }
+  *   readStream → normalize → validate/split →
+  *   foreachBatch { DLQ append; LWW fold of the batch into target state }
   *
   * with `checkpointLocation` for resume. Exactly-once delivery is the
   * checkpoint + idempotent-upsert construction (ST4/ST5): foreachBatch is
@@ -24,15 +27,18 @@ import graft.sink.ParquetStateStore
   * individually against persisted target state. State lives in the target
   * table, not in Spark's state store, so streaming state stays O(batch).
   *
-  * Scale: the only shuffle per micro-batch is the per-key compaction
-  * (map-side partial max_by first); DLQ and upsert writes are
-  * append/merge. Kafka sources swap in for the file source unchanged
+  * Scale: the only shuffle per micro-batch is the LWW fold, one max_by
+  * over state ∪ the batch's raw valid rows (map-side partial max_by
+  * first); the control row rides on the tag barrier's own job, and the
+  * DLQ write is an append. A steady-state parquet batch runs four Spark
+  * jobs: the tag barrier, the fold's map stage, the state write and the
+  * DLQ write. Kafka sources swap in for the file source unchanged
   * (`readStream.format("kafka")` + the same transform chain). Each
   * micro-batch is sized from its own input, not by a setting:
   *  - the batch is packed with a narrow coalesce to at most
   *    `defaultParallelism` partitions before it is tagged, so the tag
-  *    barrier, the control aggregate, the compaction's map side and the
-  *    DLQ write run one task per core, not one per source slice;
+  *    barrier, the fold's map side and the DLQ write run one task per
+  *    core, not one per source slice;
   *  - the DLQ write keeps the batch's rows per task: ceil(P × dlq_n /
   *    batch_n) tasks of the batch's P.
   * Both follow from the core count and the batch's error share, which
@@ -52,6 +58,26 @@ object ReplicationJob {
         t.setDaemon(true)
         t
       }))
+
+  /** The control row observed on the tag barrier, or a clear failure when
+    * it is not delivered in `timeout` or arrives without its aggregates.
+    * The row travels through the asynchronous query-execution listener
+    * bus, normally within milliseconds of the barrier returning; a row
+    * that never arrives must fail the batch (the stream replays it), not
+    * hang the trigger.
+    */
+  private[graft] def controlRow(row: Future[Row], batchId: Long,
+      timeout: FiniteDuration = 30.seconds): Row = {
+    val r =
+      try Await.result(row, timeout)
+      catch { case _: TimeoutException => throw new IllegalStateException(
+        s"batch $batchId: control row not delivered within $timeout of the tag " +
+          "barrier; failing the batch so the stream replays it") }
+    if (r.length == 0) throw new IllegalStateException(
+      s"batch $batchId: the tag barrier delivered an empty control row; " +
+        "failing the batch so the stream replays it")
+    r
+  }
 
   /** Fixture event-stream schema (TESTDATA `events`, ns timestamps read
     * as long per Tables' convention).
@@ -120,7 +146,8 @@ object ReplicationJob {
       stateBuckets: Option[Int] = None,
       /** Opt-in RED metrics (ST11/heartbeat + /metrics surface): when set,
         * each batch records events/errors/latency into the registry. Off
-        * by default — recording adds two small per-batch aggregations.
+        * by default — recording adds one conditional count per valid type
+        * and error type to the batch's control row (no extra job).
         */
       metrics: Option[graft.ops.Metrics.Registry] = None,
       /** FR-024 dynamic backpressure: when set, the sink reports batch
@@ -166,7 +193,7 @@ object ReplicationJob {
       monitors: Seq[TableMonitors.TableMonitor] = Nil)
 
   /** One micro-batch of the sink side: validation split → DLQ append →
-    * LWW compaction → idempotent upsert. Exposed for batch tests and
+    * idempotent LWW fold into the target. Exposed for batch tests and
     * reused verbatim by the stream.
     *
     * `batchId` keys the DLQ write's partition overwrite — identical ids
@@ -203,47 +230,72 @@ object ReplicationJob {
           .otherwise(general)
       else general
     val isTruncate = col("event_type") === cfg.truncateType && col("ts_us").isNotNull
-    // Materialize the tagged micro-batch ONCE: the batch feeds up to four
-    // consumers (control aggregates, LWW upsert, DLQ write, metrics), and
-    // without a barrier each action re-reads the source — for a Kafka
-    // micro-batch that is a broker re-fetch per consumer. Batch size is
-    // bounded by admission control (maxRowsPerTrigger/maxFilesPerTrigger),
-    // so this caches O(batch), never O(stream).
+    // Batch-level control aggregates: DLQ count + failed_at watermark,
+    // TRUNCATE count + (ts, event_id) watermark, the valid ts_us range and,
+    // when metrics are on, the per-operation and per-error counts.
+    val isErr = col("error_type").isNotNull
+    val validTruncate = !isErr && col("_is_truncate")
+    val validTypes = cfg.validTypes.distinct
+    val ctlAggs = Seq(
+      count(lit(1)).as("batch_n"),
+      count(when(isErr, 1)).as("dlq_n"),
+      // coalesce: a batch whose DLQ rows ALL have null ts_us (fully
+      // malformed envelopes — the case the DLQ exists for) must get a
+      // deterministic failed_at_us = 0, not a null.
+      coalesce(max(when(isErr, col("ts_us"))), lit(0L)).as("dlq_max_ts"),
+      count(when(validTruncate, 1)).as("trunc_n"),
+      max(when(validTruncate, struct(col("ts_us"), col("event_id")))).as("trunc_max"),
+      min(when(!isErr, col("ts_us"))).as("ts_min"),
+      max(when(!isErr, col("ts_us"))).as("ts_max")) ++
+      (if (cfg.metrics.isEmpty) Nil
+       else validTypes.zipWithIndex.map { case (t, i) =>
+         count(when(!isErr && col("event_type") === t, 1)).as(s"op_$i")
+       } ++ EventOps.ErrorTypes.zipWithIndex.map { case (e, i) =>
+         count(when(col("error_type") === e, 1)).as(s"err_$i")
+       })
+    // Materialize the tagged micro-batch ONCE: the batch feeds up to three
+    // consumers (LWW upsert, DLQ write, monitors), and without a barrier
+    // each action re-reads the source — for a Kafka micro-batch that is a
+    // broker re-fetch per consumer. Batch size is bounded by admission
+    // control (maxRowsPerTrigger/maxFilesPerTrigger), so this caches
+    // O(batch), never O(stream).
     //
-    // NOT an `observe` on the upsert job: Spark's Observation does not
-    // deliver metrics when the CollectMetrics node feeds a union with
-    // existing state (the steady-state upsert plan) — `obs.get` blocks
-    // forever from the second micro-batch on. Measured here; the explicit
-    // tiny aggregate on the cached frame is deterministic instead.
+    // The control row is an `observe` on the barrier's OWN action: the
+    // eager localCheckpoint / checkpoint / persist count runs the
+    // CollectMetrics node exactly once over every tagged row, so the row
+    // costs no job of its own. That is safe where an observe on the upsert
+    // job was not: there the CollectMetrics node fed a union with existing
+    // state, and Spark never delivered the metrics from the second
+    // micro-batch on. Every later consumer reads the materialized rows, so
+    // the node runs nowhere else. Delivery is still asynchronous (a
+    // query-execution listener), hence the bounded wait in [[controlRow]].
     //
     // Packed first with a narrow coalesce to at most one partition per
     // core: a source hands over one partition per segment slice / file /
     // topic partition, and every stage over the tagged batch would
     // otherwise inherit that count. coalesce never shuffles and never adds
     // partitions.
+    val obs = Observation()
     val tagged = graft.util.Materialize.stable(
       batch.coalesce(spark.sparkContext.defaultParallelism)
-        .withColumn("error_type", err).withColumn("_is_truncate", isTruncate))
+        .withColumn("error_type", err).withColumn("_is_truncate", isTruncate)
+        .observe(obs, ctlAggs.head, ctlAggs.tail: _*))
     // visible to the finally block: if anything on the main thread throws
     // while the concurrent upsert is still running, the cached batch must
     // not be unpersisted out from under the in-flight job — drain first
-    var pendingUpsert: scala.concurrent.Future[Unit] = null
+    var pendingUpsert: Future[Unit] = null
     try {
-    // Batch-level control aggregates: DLQ count + failed_at watermark,
-    // TRUNCATE count + (ts, event_id) watermark. One job over cached rows.
-    def ctlRow() = tagged.agg(
-      count(lit(1)).as("batch_n"),
-      count(when(col("error_type").isNotNull, 1)).as("dlq_n"),
-      // coalesce: a batch whose DLQ rows ALL have null ts_us (fully
-      // malformed envelopes — the case the DLQ exists for) must get a
-      // deterministic failed_at_us = 0, not a null.
-      coalesce(max(when(col("error_type").isNotNull, col("ts_us"))), lit(0L))
-        .as("dlq_max_ts"),
-      count(when(col("error_type").isNull && col("_is_truncate"), 1)).as("trunc_n"),
-      max(when(col("error_type").isNull && col("_is_truncate"),
-        struct(col("ts_us"), col("event_id")))).as("trunc_max"),
-      min(when(col("error_type").isNull, col("ts_us"))).as("ts_min"),
-      max(when(col("error_type").isNull, col("ts_us"))).as("ts_max")).head()
+    val ctl = controlRow(obs.future, batchId)
+    // The ts-sanity guard runs before any write starts: it exists to stop
+    // a mis-derived batch from reaching the target.
+    cfg.tsSanityBoundsUs.foreach { case (lo, hi) =>
+      if (!ctl.isNullAt(ctl.fieldIndex("ts_min"))) {
+        val (mn, mx) = (ctl.getAs[Long]("ts_min"), ctl.getAs[Long]("ts_max"))
+        if (mn < lo || mx > hi) throw new IllegalStateException(
+          s"batch $batchId ts_us range [$mn, $mx] outside sane [$lo, $hi] — " +
+            "source timestamp unit likely flipped mid-stream (re-probe the footer)")
+      }
+    }
     val valid = tagged.filter(col("error_type").isNull).drop("error_type", "_is_truncate")
     val dlq = tagged.filter(col("error_type").isNotNull).drop("_is_truncate")
     // Truncate events are table-wide control operations, not rows: they
@@ -253,10 +305,14 @@ object ReplicationJob {
       .withColumn("_cdc_deleted", col("event_type") === cfg.deleteType)
       .withColumn("_cdc_timestamp_micros", col("ts_us"))
       .withColumn("_last_event_id", col("event_id"))
-    val compacted = Lww.latestPerKey(enriched, cfg.pk,
-      Seq(col("_cdc_timestamp_micros"), col("_last_event_id")))
+    // The parquet stores fold the raw rows together with state in one
+    // max_by (the fold is associative and idempotent, so compacting the
+    // batch first would only add a shuffle). The JDBC executor writes one
+    // row per key, so that arm compacts the batch first.
     def runUpsert(): Unit = cfg.jdbcTarget match {
       case Some(t) =>
+        val compacted = Lww.latestPerKey(enriched, cfg.pk,
+          Seq(col("_cdc_timestamp_micros"), col("_last_event_id")))
         if (cfg.autoEvolveTarget) {
           val dialect = graft.types.TypeMapper.dialectOf(t.url)
           val wanted = t.cols.map(c =>
@@ -277,43 +333,22 @@ object ReplicationJob {
       case None => cfg.stateBuckets match {
         case Some(nb) =>
           new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id", nb).upsert(compacted)
+            "_cdc_timestamp_micros", "_last_event_id", nb).upsert(enriched)
         case None =>
           new ParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id").upsert(compacted)
+            "_cdc_timestamp_micros", "_last_event_id").upsert(enriched)
       }
     }
-    // The three per-batch actions up to the truncate barrier — control
-    // aggregate, LWW upsert, DLQ write — are INDEPENDENT jobs over the
-    // same cached batch (the upsert consumes the valid/compacted frames,
-    // the control row feeds only the DLQ/truncate branches), so the
-    // upsert runs CONCURRENTLY with the control-agg + DLQ pair instead
-    // of serializing three scheduler round-trips: per-trigger fixed cost
-    // is the floor under the end-to-end latency SLO (spec.md:212's P95
-    // ≤ 2 s — Bench's latency leg measures it), and overlapping the
-    // independent jobs removes ~a third of it. Replay semantics are
-    // unchanged: all actions complete (or the batch throws) before the
+    // The two per-batch writes up to the truncate barrier — LWW upsert and
+    // DLQ write — are INDEPENDENT jobs over the same materialized batch,
+    // so the upsert runs CONCURRENTLY with the DLQ write instead of
+    // serializing two scheduler round-trips: per-trigger fixed cost is
+    // the floor under the end-to-end latency SLO (spec.md:212's P95 ≤ 2 s
+    // — Bench's latency leg measures it). Replay semantics are unchanged:
+    // both writes complete (or the batch throws) before the
     // truncate/monitor/metrics tail, and a failed batch replays into the
-    // same idempotent writes regardless of which action failed first.
-    // EXCEPTION: when the ts-sanity guard is configured, the control row
-    // must be inspected BEFORE any write starts — the guard exists to
-    // stop a mis-derived batch from reaching the target — so the jobs
-    // serialize exactly as before.
-    val (ctl, upsertFut) = cfg.tsSanityBoundsUs match {
-      case Some((lo, hi)) =>
-        val c = ctlRow()
-        if (!c.isNullAt(c.fieldIndex("ts_min"))) {
-          val (mn, mx) = (c.getAs[Long]("ts_min"), c.getAs[Long]("ts_max"))
-          if (mn < lo || mx > hi) throw new IllegalStateException(
-            s"batch $batchId ts_us range [$mn, $mx] outside sane [$lo, $hi] — " +
-              "source timestamp unit likely flipped mid-stream (re-probe the footer)")
-        }
-        pendingUpsert = scala.concurrent.Future(runUpsert())(ReplicationJob.sinkEc)
-        (c, pendingUpsert)
-      case None =>
-        pendingUpsert = scala.concurrent.Future(runUpsert())(ReplicationJob.sinkEc)
-        (ctlRow(), pendingUpsert)
-    }
+    // same idempotent writes regardless of which write failed first.
+    pendingUpsert = Future(runUpsert())(ReplicationJob.sinkEc)
     // DLQ write must be idempotent under at-least-once foreachBatch: a
     // replayed micro-batch overwrites its own `_batch_id` partition rather
     // than blind-appending (which would duplicate DLQ rows and break the
@@ -344,8 +379,7 @@ object ReplicationJob {
         .parquet(cfg.dlqDir)
       catch { case t: Throwable => dlqErr = t }
     }
-    scala.concurrent.Await.result(upsertFut,
-      scala.concurrent.duration.Duration.Inf)
+    Await.result(pendingUpsert, Duration.Inf)
     if (dlqErr != null) throw dlqErr
     // Apply the batch's TRUNCATE watermark (max (ts, event_id) among its
     // truncate events) AFTER the upsert: only rows that LOSE the LWW
@@ -353,7 +387,7 @@ object ReplicationJob {
     // already-stored rows newer than the truncate survive, and a replayed
     // batch re-applies the same filter — idempotent by construction.
     if (ctl.getAs[Long]("trunc_n") > 0) {
-      val w = ctl.getAs[org.apache.spark.sql.Row]("trunc_max")
+      val w = ctl.getAs[Row]("trunc_max")
       val (tTs, tTie) = (w.getLong(0), w.getLong(1))
       cfg.jdbcTarget match {
         case Some(t) =>
@@ -378,11 +412,10 @@ object ReplicationJob {
     // on a panel-side bound.
     cfg.monitors.foreach(_.recordBatch(valid, batchId))
     cfg.metrics.foreach { r =>
-      val byOp = valid.groupBy("event_type").count()
-        .collect().map(x => x.getString(0) -> x.getLong(1)).toSeq
-      val byErr = dlq.groupBy("error_type").count()
-        .collect().map(x => x.getString(0) -> x.getLong(1)).toSeq
-      graft.ops.Metrics.recordBatch(r, cfg.table, byOp, byErr,
+      def nonZero(names: Seq[String], prefix: String) =
+        names.indices.map(i => names(i) -> ctl.getAs[Long](s"$prefix$i")).filter(_._2 > 0)
+      graft.ops.Metrics.recordBatch(r, cfg.table, nonZero(validTypes, "op_"),
+        nonZero(EventOps.ErrorTypes, "err_"),
         (System.nanoTime() - batchT0) / 1e9, backlog = 0L)
     }
     cfg.backpressureChannel.foreach(
@@ -392,8 +425,7 @@ object ReplicationJob {
     // not accumulate one cached batch per trigger
     } finally {
       if (pendingUpsert != null && !pendingUpsert.isCompleted)
-        scala.util.Try(scala.concurrent.Await.ready(pendingUpsert,
-          scala.concurrent.duration.Duration.Inf))
+        scala.util.Try(Await.ready(pendingUpsert, Duration.Inf))
       graft.util.Materialize.release(tagged)
     }
   }

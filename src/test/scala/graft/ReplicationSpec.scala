@@ -285,4 +285,127 @@ class ReplicationSpec extends SparkSpecBase {
     val live = ReplicationJob.targetState(spark, cfg, includeDeleted = false)
     assert(t.filter(col("_cdc_deleted")).count() + live.count() == t.count())
   }
+
+  /** (event_id, ts_us, user_id, event_type, value) rows in the stream's
+    * post-decode shape; a None is a null column.
+    */
+  private def rowsDf(rows: (Option[Long], Option[Long], Option[Long], String, Double)*) = {
+    import spark.implicits._
+    rows.toSeq.toDF("event_id", "ts_us", "user_id", "event_type", "value")
+      .select(col("event_id"), (col("ts_us") * 1000).as("ts"), col("user_id"),
+        col("event_type"), col("value"), lit(null).cast("string").as("props"), col("ts_us"))
+  }
+
+  private def row(id: Long, tsUs: Long, uid: Long, et: String) =
+    (Some(id), Some(tsUs), Some(uid), et, 1.0)
+
+  Seq("local", "persist").foreach { mode =>
+    test(s"$mode mode: one fold of the raw rows equals the two-fold reference in both parquet stores") {
+      import spark.implicits._
+      val kinds = Seq("signup", "purchase", "view", "click", "error", "truncate")
+      // intra-batch duplicate keys, out-of-order events, ts ties broken on
+      // event_id, deletes ("error"), a truncate and null positions
+      val b0 = rowsDf(
+        row(1, 100, 1, "signup"), row(2, 150, 1, "view"), row(3, 120, 1, "click"),
+        row(5, 200, 2, "signup"), row(4, 200, 2, "purchase"),
+        row(6, 300, 3, "signup"), row(7, 310, 3, "error"),
+        row(8, 400, 4, "signup"), row(9, 90, 5, "signup"),
+        (None, Some(500L), Some(6L), "view", 1.0), (Some(10L), None, Some(6L), "view", 1.0),
+        row(11, 450, 7, "bogus"))
+      val b1 = rowsDf(
+        row(20, 150, 1, "purchase"), row(21, 150, 1, "click"),   // tie with state, tie in batch
+        row(22, 199, 2, "view"),                                   // older than state: rejected
+        row(23, 320, 3, "signup"), row(24, 315, 3, "error"),      // out of order in batch
+        row(25, 350, 8, "view"), row(26, 90, 8, "view"),
+        (Some(27L), Some(120L), None, "truncate", 1.0),           // clears rows below (120, 27)
+        row(28, 260, 5, "error"), row(29, 95, 9, "view"),
+        (Some(30L), None, Some(4L), "view", 1.0), (Some(31L), Some(600L), Some(4L), "view", 500.0))
+      // reference: state = latestPerKey(state ∪ latestPerKey(batch)), then
+      // the batch's truncate watermark
+      val order = Seq(col("_cdc_timestamp_micros"), col("_last_event_id"))
+      def enriched(b: org.apache.spark.sql.DataFrame) =
+        b.filter(col("event_type").isin(kinds.filterNot(_ == "truncate"): _*) &&
+            col("event_id").isNotNull && col("ts_us").isNotNull &&
+            col("value").between(0.0, 150.0))
+          .withColumn("_cdc_deleted", col("event_type") === "error")
+          .withColumn("_cdc_timestamp_micros", col("ts_us"))
+          .withColumn("_last_event_id", col("event_id"))
+      val s0 = Lww.latestPerKey(enriched(b0), Seq("user_id"), order)
+      val s1 = Lww.latestPerKey(s0.unionByName(Lww.latestPerKey(enriched(b1), Seq("user_id"), order)),
+          Seq("user_id"), order)
+        .filter(col("ts_us") > 120L || (col("ts_us") === 120L && col("event_id") > 27L))
+      val cols = s1.columns.toSeq
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      val expected = rows(s1)
+      assert(s1.select("user_id", "_last_event_id").as[(Long, Long)].collect().toMap ==
+        Map(1L -> 21L, 2L -> 5L, 3L -> 23L, 4L -> 8L, 5L -> 28L, 8L -> 25L))
+      withSQLConf("spark.graft.materialize" -> mode) {
+        Seq(None, Some(4)).foreach { buckets =>
+          val cfg = freshCfg().copy(validTypes = kinds, stateBuckets = buckets)
+          ReplicationJob.processBatch(spark, b0, cfg, batchId = 0L)
+          ReplicationJob.processBatch(spark, b1, cfg, batchId = 1L)
+          assert(rows(ReplicationJob.targetState(spark, cfg)) == expected, s"buckets $buckets")
+          val dlq = spark.read.parquet(cfg.dlqDir)
+            .select("event_id", "error_type", "failed_at_us", "_batch_id")
+            .as[(Option[Long], String, Long, Long)].collect().toSet
+          assert(dlq == Set(
+            (None, "SCHEMA_MISMATCH", 500L, 0L), (Some(10L), "SCHEMA_MISMATCH", 500L, 0L),
+            (Some(11L), "SCHEMA_MISMATCH", 500L, 0L),
+            (Some(30L), "SCHEMA_MISMATCH", 600L, 1L),
+            (Some(31L), "CONSTRAINT_VIOLATION", 600L, 1L)), s"buckets $buckets: $dlq")
+        }
+      }
+    }
+  }
+
+  test("local mode: a steady-state batch runs 4 Spark jobs with DLQ rows and 3 without") {
+    withSQLConf("spark.graft.materialize" -> "local") {
+      val cfg = freshCfg()
+      ReplicationJob.processBatch(spark,
+        rowsDf((1L to 20L).map(i => row(i, 100 + i, i % 7, "view")): _*), cfg, batchId = 0L)
+      // tag barrier, fold map stage, state write, DLQ write
+      val withDlq = Harness.measure(spark)(ReplicationJob.processBatch(spark, rowsDf(
+        row(30, 500, 1, "click"), row(31, 501, 1, "view"), row(32, 502, 9, "bogus")),
+        cfg, batchId = 1L))
+      assert(withDlq.jobs == 4)
+      val clean = Harness.measure(spark)(ReplicationJob.processBatch(spark, rowsDf(
+        row(40, 600, 2, "click"), row(41, 601, 3, "view")), cfg, batchId = 2L))
+      assert(clean.jobs == 3)
+      assert(ReplicationJob.targetState(spark, cfg).count() == 7L)
+    }
+  }
+
+  Seq("local", "persist", "checkpoint").foreach { mode =>
+    test(s"$mode mode: an empty batch and an all-malformed batch each deliver the control row") {
+      import spark.implicits._
+      if (mode == "checkpoint") spark.sparkContext.setCheckpointDir(tmpDir("rdd_ckpt"))
+      withSQLConf("spark.graft.materialize" -> mode) {
+        // the guard reads ts_min, which is null when no row is valid
+        val cfg = freshCfg().copy(tsSanityBoundsUs = Some((0L, 10000L)))
+        // a missing control row would throw here instead of returning
+        ReplicationJob.processBatch(spark, rowsDf(), cfg, batchId = 0L)
+        assert(ReplicationJob.targetState(spark, cfg).count() == 0L)
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(cfg.dlqDir)))
+        ReplicationJob.processBatch(spark, rowsDf(
+          row(1, 700, 1, "bogus"), (Some(2L), None, Some(2L), "view", 1.0),
+          row(3, 900, 3, "view").copy(_5 = 151.0)), cfg, batchId = 1L)
+        assert(ReplicationJob.targetState(spark, cfg).count() == 0L)
+        val dlq = spark.read.parquet(cfg.dlqDir)
+          .select("event_id", "error_type", "failed_at_us").as[(Long, String, Long)].collect().toSet
+        assert(dlq == Set((1L, "SCHEMA_MISMATCH", 900L), (2L, "SCHEMA_MISMATCH", 900L),
+          (3L, "CONSTRAINT_VIOLATION", 900L)))
+      }
+    }
+  }
+
+  test("a control row that never arrives, or arrives empty, fails the batch") {
+    import scala.concurrent.duration._
+    val never = scala.concurrent.Promise[org.apache.spark.sql.Row]().future
+    val late = intercept[IllegalStateException](ReplicationJob.controlRow(never, 5L, 50.millis))
+    assert(late.getMessage.contains("batch 5: control row not delivered"))
+    val empty = intercept[IllegalStateException](ReplicationJob.controlRow(
+      scala.concurrent.Future.successful(org.apache.spark.sql.Row.empty), 6L))
+    assert(empty.getMessage.contains("batch 6: the tag barrier delivered an empty control row"))
+  }
 }

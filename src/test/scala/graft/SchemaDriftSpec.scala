@@ -79,12 +79,16 @@ class SchemaDriftSpec extends SparkSpecBase {
       tsSanityBoundsUs = Some((100000000000000L, 100000000000000000L)))
     // ts_us at ms scale — exactly what a mid-stream µs flip under a
     // declared ns schema produces (÷1000 of the real position)
-    val batch = Seq((1L, 1700000000123L, 5L, "view", 1.0))
+    val batch = Seq((1L, 1700000000123L, 5L, "view", 1.0),
+        (2L, 1700000000124L, 6L, "bogus", 1.0))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
     val e = intercept[IllegalStateException] {
       ReplicationJob.processBatch(spark, batch, cfg, batchId = 1L)
     }
     assert(e.getMessage.contains("unit likely flipped"))
+    // the guard throws before either write starts
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(cfg.targetDir)))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(cfg.dlqDir)))
     // in-band positions pass and upsert normally
     val ok = Seq((1L, UsA, 5L, "view", 1.0))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")

@@ -320,4 +320,38 @@ class StateStoreSpec extends SparkSpecBase {
     // per-key LWW invariant: one row per user_id
     assert(target.groupBy("user_id").count().filter(col("count") > 1).isEmpty)
   }
+
+  test("plain store read() launches no job and matches the footer schema after every rewrite") {
+    import graft.sink.ParquetStateStore
+    val dir = tmpDir("schemafile") + "/state"
+    val s = new ParquetStateStore(spark, dir, "user_id", "ts_us", "event_id")
+    def check(step: String): Unit = {
+      val m = Harness.measure(spark)(s.read())
+      assert(m.jobs == 0, s"$step: read() launched ${m.jobs} job(s)")
+      val footer = spark.read.parquet(dir)
+      assert(m.value.schema == footer.schema, step)
+      assert(m.value.collect().toSet == footer.collect().toSet, step)
+    }
+    s.upsert(df((1L, 100L, 1L, "a"), (2L, 200L, 2L, "b"), (3L, 300L, 3L, "c"),
+      (4L, 400L, 4L, "d")))
+    check("upsert")
+    // an additive column: null on the stored rows
+    s.upsert(Seq((5L, 500L, 5L, "e", Some(450L)), (1L, 150L, 6L, "a2", None))
+      .toDF("user_id", "ts_us", "event_id", "payload", "expiry_us"))
+    assert(s.read().columns.last == "expiry_us")
+    check("additive column")
+    assert(s.truncate(120L, 0L) == 0L)
+    assert(s.truncate(160L, 0L) == 1L)
+    check("truncate")
+    assert(s.purgeExpired("expiry_us", 460L) == 1L)
+    check("purgeExpired")
+    assert(s.deleteKeys(Seq(3L)) == 1L)
+    check("deleteKeys")
+    assert(s.read().select("user_id").as[Long].collect().toSet == Set(2L, 4L))
+    // a store written without the schema file is read through the footers
+    Files.delete(Paths.get(dir, "_graft_schema"))
+    assert(s.read().schema == spark.read.parquet(dir).schema)
+    s.upsert(df((7L, 700L, 7L, "g")))
+    check("upsert after a store without the schema file")
+  }
 }
