@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted,
   SparkListenerTaskEnd, StageInfo}
@@ -44,11 +45,13 @@ object Harness {
 
   /** What [[measure]] saw of one body: its result and wall seconds, the
     * Spark jobs it started, its completed stages (a skipped stage never
-    * runs and is not listed) and each finished task's
-    * `(stageId, executor run ms)`.
+    * runs and is not listed), each finished task's
+    * `(stageId, executor run ms)` and the classes codegen compiled (a
+    * JVM-wide count: a cache hit compiles nothing, and a concurrent
+    * body outside `measure` would be counted too).
     */
   final case class Measured[A](value: A, seconds: Double, jobs: Int,
-      stages: Seq[StageInfo], tasks: Seq[(Int, Long)])
+      stages: Seq[StageInfo], tasks: Seq[(Int, Long)], compiles: Long)
 
   /** Run `body` with a listener attached and return what it ran. The
     * listener bus is asynchronous, so the counts must not race late
@@ -78,6 +81,7 @@ object Harness {
           tasks.add((te.stageId, te.taskMetrics.executorRunTime))
     }
     val sc = spark.sparkContext
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
@@ -103,8 +107,11 @@ object Harness {
           s"${if (busDrained) "reconciliation failed after waitUntilEmpty"
               else "timed out (waitUntilEmpty unavailable)"}: " +
           s"${stages.size}/${submitted.get()} stage completions seen")
+      // read after the drain: every task of body has ended, and a task
+      // compiles before it runs
       Measured(value, seconds, jobs.get(), stages.asScala.toList,
-        tasks.asScala.toList)
+        tasks.asScala.toList,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -164,9 +164,13 @@ final class StreamingCuration(dedup: StreamingDedup, idCol: String,
         writeBatch(batch, batchId, outDir)
       }
 
+  /** Start [[writer]] through [[graft.streaming.ReplicationJob.startStream]],
+    * so the query reuses the classes this JVM has already compiled.
+    */
   def start(stream: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    writer(stream, outDir, checkpointDir).start()
+    graft.streaming.ReplicationJob.startStream(stream.sparkSession,
+      writer(stream, outDir, checkpointDir))
 }
 
 object StreamingCuration {

@@ -5,7 +5,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ops.{EventOps, Lww}
@@ -44,6 +44,17 @@ import graft.sink.ParquetStateStore
   * Both follow from the core count and the batch's error share, which
   * change per deployment and per batch; a fixed user setting would be
   * wrong for one or the other.
+  *
+  * Code generation is paid once per JVM, not per query or per batch:
+  *  - a steady-state batch compiles no class, as its per-batch values
+  *    (the batch id, the DLQ watermark) travel as data, not as literals
+  *    in generated code;
+  *  - a query started through [[startStream]] (a restart, a drain, each
+  *    table of [[MultiTableReplication]]) runs on a stream session without
+  *    artifact isolation, so its tasks share one class loader, and with it
+  *    the codegen cache, with every earlier query. A session that carries
+  *    session-scoped artifacts (`addArtifact`) keeps isolation, since that
+  *    is what isolation is for.
   */
 object ReplicationJob {
 
@@ -366,13 +377,23 @@ object ReplicationJob {
     if (dlqN > 0) {
       val parts = tagged.rdd.getNumPartitions
       val dlqParts = ((parts * dlqN + batchN - 1) / batchN).toInt
+      // The batch's two values, `failed_at_us` and `_batch_id`, reach the
+      // rows as data from a one-row frame, never as literals: whole-stage
+      // codegen writes a Long literal into the generated Java source, so
+      // each new batch id or watermark would compile fresh classes. The
+      // cross join is a cartesian product against one local row (a
+      // broadcast would cost a job of its own); the write then sorts the
+      // rows on their single `_batch_id`, which keeps their order.
+      val perBatch = spark.createDataFrame(
+        java.util.List.of(Row(ctl.getAs[Long]("dlq_max_ts"), batchId)),
+        StructType(Seq(StructField("failed_at_us", LongType, nullable = false),
+          StructField("_batch_id", LongType, nullable = false))))
       // a DLQ failure must not leak a still-running upsert job past the
       // finally-block unpersist: record it, await the upsert, then throw
       try dlq.coalesce(dlqParts)
-        .withColumn("failed_at_us", lit(ctl.getAs[Long]("dlq_max_ts")))
+        .crossJoin(perBatch.hint("shuffle_replicate_nl"))
         .withColumn("resolution_status", lit("PENDING"))
         .withColumn("resolved_at_us", lit(null).cast("long"))
-        .withColumn("_batch_id", lit(batchId))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch_id")
@@ -433,7 +454,11 @@ object ReplicationJob {
   /** Start the streaming replication job over a parquet directory source
     * (`Trigger.AvailableNow` drains what's there and stops — the
     * snapshot-then-stream S2 shape; pass `continuous = true` for an
-    * always-on micro-batch trigger).
+    * always-on micro-batch trigger). The query starts through
+    * [[startStream]]: its stream session runs without artifact isolation
+    * unless `spark` carries session-scoped artifacts, so a restart or a
+    * new drain in a warm JVM compiles none of the classes an earlier query
+    * compiled.
     */
   def start(spark: SparkSession, cfg: Config, continuous: Boolean = false): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -488,9 +513,47 @@ object ReplicationJob {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(spark, batch, cfg, batchId)
       }
-    (if (continuous) writer.trigger(Trigger.ProcessingTime("1 second"))
-     else writer.trigger(Trigger.AvailableNow())).start()
+    startStream(spark,
+      if (continuous) writer.trigger(Trigger.ProcessingTime("1 second"))
+      else writer.trigger(Trigger.AvailableNow()))
   }
+
+  private val isolationKey = "spark.sql.artifact.isolation.enabled"
+  private val startLock = new Object
+
+  /** Start `writer`'s query so that it reuses the classes this JVM has
+    * already compiled. Every stream start in the program goes through
+    * here.
+    *
+    * Spark runs each query on a clone of `spark` with a session id of its
+    * own. With artifact isolation on (Spark's default), the local executor
+    * runs that clone's tasks under a class loader made for that session
+    * id, and the codegen cache is keyed by (class loader, source), so each
+    * new query would compile again every class its tasks use (26 in the
+    * first batch of a second query over the same log). `start()` creates
+    * the clone, which copies the conf and reads its isolation from it
+    * there, so the conf is off for exactly that call. The caller's value
+    * is put back as it was, set or unset, and `spark`'s own isolation,
+    * which it reads lazily, is fixed first at the caller's value.
+    *
+    * Isolation exists for session-scoped artifacts (`addArtifact`), so a
+    * session that carries them starts its stream unchanged, isolated.
+    * Starts are serialized so that two concurrent starts on one session
+    * cannot restore each other's conf.
+    */
+  def startStream(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery =
+    if (org.apache.spark.sql.GraftSessionBridge.keepsArtifactIsolation(spark)) writer.start()
+    else startLock.synchronized {
+      org.apache.spark.sql.GraftSessionBridge.pinArtifactIsolation(spark)
+      // getAll holds only what is set; getOption would report the default
+      val prior = spark.conf.getAll.get(isolationKey)
+      spark.conf.set(isolationKey, "false")
+      try writer.start()
+      finally prior match {
+        case Some(v) => spark.conf.set(isolationKey, v)
+        case None => spark.conf.unset(isolationKey)
+      }
+    }
 
   /** Read current target state, optionally hiding soft-deleted rows (the
     * reference's `_cdc_deleted` filter views).

@@ -435,4 +435,38 @@ class MultiTableReplicationSpec extends SparkSpecBase {
       .collect().toSet
     assert(bst == Set(("a", 1, "x3"), ("b", 1, "y")), s"bucketed state: $bst")
   }
+
+  test("three same-shaped tables compile each class once: nothing a first table has not compiled") {
+    val base = tmpDir("mtcodegen")
+    val dirs = Dirs(base)
+    val reg = new SchemaRegistry(s"$base/registry.tsv")
+    val tables = (0 to 3).map(i => s"orders$i")
+    tables.foreach(reg.register(_, ordersSchema, nowUs = 1L))
+    val policy = ReplicationJob.Config("", "", "", "",
+      validTypes = cdcTypes, deleteType = "delete", truncateType = "truncate",
+      tsDivisorToMicros = 1000L, valueCol = Some("total"), maxValue = 500.0)
+    val cfgs = tables.map { t =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dirs.source(t)))
+      writeOrders(dirs.source(t), "b0", Seq(
+        (11L, 1000000L, "A", "create", 10.0, "pending"),
+        (12L, 3000000L, "A", "update", 20.0, "shipped"),
+        (13L, 2000000L, "B", "create", 600.0, "pending"),
+        (15L, 4000000L, "D", "delete", 5.0, "cancelled")))
+      writeOrders(dirs.source(t), "b1", Seq(
+        (16L, 5000000L, "E", "create", 7.0, "pending"),
+        (17L, 2500000L, "A", "update", 30.0, "stale"),
+        (18L, 6000000L, "F", "create", null, "pending")))
+      MultiTableReplication.configFor(reg, t, dirs, policy)
+    }
+    MultiTableReplication.runAvailableNow(spark, cfgs.take(1))
+    val m = Harness.measure(spark)(MultiTableReplication.runAvailableNow(spark, cfgs.drop(1)))
+    assert(m.compiles == 0L, s"${m.compiles} classes compiled again by three more tables")
+    def state(c: ReplicationJob.Config) =
+      ReplicationJob.targetState(spark, c).collect().toSet
+    def dlq(c: ReplicationJob.Config) = spark.read.parquet(c.dlqDir).collect().toSet
+    cfgs.drop(1).foreach { c =>
+      assert(state(c) == state(cfgs.head) && dlq(c) == dlq(cfgs.head), c.table)
+    }
+    assert(state(cfgs.head).size == 3 && dlq(cfgs.head).size == 2)
+  }
 }

@@ -46,21 +46,25 @@ class ReplicationSpec extends SparkSpecBase {
   private def ev(id: Long, ts: Long, uid: Long, et: String, v: Double = 1.0) =
     s"""{"event_id":$id,"ts":${ts * 1000},"user_id":$uid,"event_type":"$et","value":$v}"""
 
-  /** A commit-log batch decoded as `ReplicationJob.start` decodes it, read
-    * through the source's batch scan: one partition per segment.
-    */
-  private def commitLogBatch(segs: Seq[Seq[String]]) = {
+  /** A commit-log directory with one segment file per element of `segs`. */
+  private def commitLog(segs: Seq[Seq[String]]): String = {
     import java.nio.file.{Files, Paths}
     val dir = tmpDir("packlog")
     segs.zipWithIndex.foreach { case (lines, i) =>
       Files.writeString(Paths.get(dir, f"seg-$i%03d.log"), lines.mkString("", "\n", "\n"))
     }
+    dir
+  }
+
+  /** A commit-log batch decoded as `ReplicationJob.start` decodes it, read
+    * through the source's batch scan: one partition per segment.
+    */
+  private def commitLogBatch(segs: Seq[Seq[String]]) =
     spark.read.format(classOf[graft.streaming.EventLogSource].getName)
-      .option("path", dir).load()
+      .option("path", commitLog(segs)).load()
       .select(from_json(col("value"), ReplicationJob.eventSchema).as("e"))
       .select(col("e.*"))
       .withColumn("ts_us", expr("ts div 1000"))
-  }
 
   private def dlqFiles(cfg: Config, batchId: Long): Long = {
     val s = java.nio.file.Files.list(java.nio.file.Paths.get(cfg.dlqDir, s"_batch_id=$batchId"))
@@ -407,5 +411,94 @@ class ReplicationSpec extends SparkSpecBase {
     val empty = intercept[IllegalStateException](ReplicationJob.controlRow(
       scala.concurrent.Future.successful(org.apache.spark.sql.Row.empty), 6L))
     assert(empty.getMessage.contains("batch 6: the tag barrier delivered an empty control row"))
+  }
+
+  test("a second AvailableNow query over the same log in a warm session compiles at most 2 classes") {
+    // 3 segments of 40 events on 23 keys, 2 malformed per segment
+    val log = commitLog((0 until 3).map(sg => (0 until 40).map { j =>
+      val id = sg * 40L + j
+      ev(id, 1000L + id, id % 23, if (j % 20 == 3) "bogus" else Seq("signup", "view", "error")(j % 3))
+    }))
+    def cfg() = freshCfg().copy(eventLog = Some((log, 40L)))
+    val first = cfg()
+    ReplicationJob.start(spark, first).awaitTermination(120000)
+    val second = cfg()
+    val m = Harness.measure(spark)(ReplicationJob.start(spark, second).awaitTermination(120000))
+    assert(m.compiles <= 2L, s"${m.compiles} classes compiled by the second query")
+    def state(c: Config) = ReplicationJob.targetState(spark, c).collect().toSet
+    assert(state(second) == state(first) && state(first).size == 23)
+    assert(spark.read.parquet(second.dlqDir).count() == 6L)
+  }
+
+  test("a steady-state batch compiles nothing: the batch id and DLQ watermark are data") {
+    import spark.implicits._
+    withSQLConf("spark.graft.materialize" -> "local") {
+      val cfg = freshCfg()
+      // each batch: 11 valid rows on 4 keys and one malformed row whose
+      // ts_us, the batch's failed_at_us, differs per batch
+      def batch(b: Long) = rowsDf(((0L until 11L).map(j =>
+        row(b * 100 + j, 1000 * b + j, j % 4, "view")) :+ row(b * 100 + 50, 1000 * b + 77, 9, "bogus")): _*)
+      // the first batch meets no state, the second folds into it
+      ReplicationJob.processBatch(spark, batch(0), cfg, batchId = 0L)
+      ReplicationJob.processBatch(spark, batch(1), cfg, batchId = 1L)
+      val m = Harness.measure(spark)(ReplicationJob.processBatch(spark, batch(2), cfg, batchId = 2L))
+      assert(m.compiles == 0L, s"${m.compiles} classes compiled by a steady-state batch")
+      val dlq = spark.read.parquet(cfg.dlqDir)
+        .select("event_id", "error_type", "failed_at_us", "resolution_status", "resolved_at_us", "_batch_id")
+        .as[(Long, String, Long, String, Option[Long], Long)].collect().toSet
+      assert(dlq == (0L to 2L).map(b =>
+        (b * 100 + 50, "SCHEMA_MISMATCH", 1000 * b + 77, "PENDING", None, b)).toSet, s"DLQ rows: $dlq")
+      assert((0L to 2L).map(dlqFiles(cfg, _)) == Seq(1L, 1L, 1L))
+      // a replayed batch id overwrites its own partition
+      ReplicationJob.processBatch(spark, batch(2), cfg, batchId = 2L)
+      assert(spark.read.parquet(cfg.dlqDir).count() == 3L && dlqFiles(cfg, 2L) == 1L)
+      assert(ReplicationJob.targetState(spark, cfg).count() == 4L)
+    }
+  }
+
+  /** Start a drain of `src` on `session` through `startStream`, and
+    * return the identity of the class loader its batch's task ran under,
+    * with the isolation conf the stream's own session carried.
+    */
+  private def streamTaskLoader(session: org.apache.spark.sql.SparkSession,
+      src: String): (Int, String) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val writer = session.readStream.schema(ReplicationJob.eventSchema).parquet(src)
+      .writeStream.option("checkpointLocation", tmpDir("ldrck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val loader = batch.sparkSession.sparkContext.parallelize(Seq(1), 1)
+          .map(_ => System.identityHashCode(Thread.currentThread.getContextClassLoader))
+          .collect().head
+        seen.add((loader, batch.sparkSession.conf.get("spark.sql.artifact.isolation.enabled")))
+        ()
+      }
+    ReplicationJob.startStream(session, writer).awaitTermination(120000)
+    assert(seen.size == 1)
+    seen.peek()
+  }
+
+  test("stream queries share one task class loader unless the session carries artifacts") {
+    val src = eventSourceDir()
+    val (a, aIso) = streamTaskLoader(spark.newSession(), src)
+    val (b, bIso) = streamTaskLoader(spark.newSession(), src)
+    assert(a == b && aIso == "false" && bIso == "false")
+    // a session-scoped class keeps its stream on a loader of its own
+    val withClass = spark.newSession()
+    val bytes = getClass.getResourceAsStream("/graft/SparkTestSession.class").readAllBytes()
+    withClass.addArtifact(bytes, "classes/GraftArtifactProbe.class")
+    val (c, cIso) = streamTaskLoader(withClass, src)
+    assert(c != a && cIso == "true")
+  }
+
+  test("startStream puts the caller's isolation conf back as it found it, set or unset") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val src = eventSourceDir()
+    Seq(None, Some("true"), Some("false")).foreach { prior =>
+      val session = spark.newSession()
+      prior.foreach(session.conf.set(key, _))
+      streamTaskLoader(session, src)
+      assert(session.conf.getAll.get(key) == prior, s"prior $prior")
+    }
   }
 }
