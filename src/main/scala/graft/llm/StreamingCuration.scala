@@ -1,9 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+
+import graft.streaming.StreamingState
 
 /** Incremental corpus curation: the batch [[Curation]] recipe applied
   * per micro-batch to a continuously-fed document stream — PII scrub →
@@ -12,10 +14,9 @@ import org.apache.spark.sql.Row
   * inside the batch plan; the only state is the dedup hash store, so the
   * pipeline inherits StreamingDedup's exactly-once-effective contract
   * under foreachBatch's at-least-once replay — including at the sink:
-  * [[writeBatch]] lands rows under a `_batch_id=` partition with dynamic
-  * overwrite (the DLQ/state-store convention), so a replayed batch
-  * overwrites its own half-written output instead of appending
-  * duplicates.
+  * [[writeBatch]] lands rows in the [[StreamingState]] batch layout
+  * (the DLQ's too), so a replayed batch replaces its own earlier
+  * output instead of appending duplicates.
   *
   * Decontamination and budget mixing are deliberately NOT per-batch
   * stages: both are corpus-global decisions (a batch-local rate would
@@ -99,8 +100,8 @@ final class StreamingCuration(dedup: StreamingDedup, idCol: String,
   /** Process one micro-batch AND fold its per-stage survivor counts
     * into the continuous loss-attribution panel: five 1-row aggregates
     * — (stage_idx, stage, n_docs, n_tokens) for raw / compact_scrub /
-    * quality / fluency / novel — land under this batch's `_batch_id=`
-    * partition in `funnelDir` (dynamic overwrite: an at-least-once
+    * quality / fluency / novel — land in this batch's directory of
+    * `funnelDir` ([[StreamingState.writeBatch]]: an at-least-once
     * replay REPLACES its own counts, never double-counts). Counts
     * SUM-MERGE across batches (the register discipline):
     * [[StreamingCuration.funnel]] reads the panel as one groupBy-sum,
@@ -123,33 +124,23 @@ final class StreamingCuration(dedup: StreamingDedup, idCol: String,
           coalesce(sum(tok), lit(0L)).as("n_tokens"))
         .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
           col("n_docs"), col("n_tokens"))
-    leg(0L, "raw", st.raw)
+    StreamingState.writeBatch(leg(0L, "raw", st.raw)
       .unionByName(leg(1L, "compact_scrub", st.compact))
       .unionByName(leg(2L, "quality", st.quality))
       .unionByName(leg(3L, "fluency", st.fluency))
-      .unionByName(leg(4L, "novel", st.novel))
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(funnelDir)
+      .unionByName(leg(4L, "novel", st.novel)), funnelDir, batchId)
     st.novel
   }
 
   /** [[processBatch]] + the idempotent sink write: curated rows land in
-    * `outDir` partitioned by `_batch_id` with dynamic partition
-    * overwrite, so an at-least-once replay of a batch REPLACES that
-    * batch's partition (a plain append would duplicate every replayed
-    * row — the very defect the pipeline removes). Readers
-    * `spark.read.parquet(outDir)` and drop `_batch_id` if unwanted.
+    * `outDir` in the [[StreamingState]] batch layout, so an
+    * at-least-once replay of a batch REPLACES that batch's directory (a
+    * plain append would duplicate every replayed row — the very defect
+    * the pipeline removes). Readers `spark.read.parquet(outDir)` and
+    * drop `_batch_id` if unwanted.
     */
   def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
-    processBatch(batch, batchId)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(outDir)
+    StreamingState.writeBatch(processBatch(batch, batchId), outDir, batchId)
 
   /** Wire the pipeline into a streaming writer: curated rows under
     * `outDir`, state + progress under the caller's checkpoint
@@ -182,18 +173,14 @@ object StreamingCuration {
     * declared schema, the register-store convention. Scale shape: the
     * state is 5 rows per batch; the merge is one tiny partial agg.
     */
-  def funnel(spark: SparkSession, funnelDir: String): DataFrame =
-    if (graft.streaming.StreamingState.hasData(spark, funnelDir))
-      spark.read.parquet(funnelDir)
-        .groupBy("stage_idx", "stage")
-        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
+  def funnel(spark: SparkSession, funnelDir: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    StreamingState.readBatches(spark, funnelDir,
         StructType(Seq(StructField("stage_idx", LongType),
           StructField("stage", StringType),
           StructField("n_docs", LongType),
           StructField("n_tokens", LongType))))
-    }
+      .groupBy("stage_idx", "stage")
+      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
+  }
 }

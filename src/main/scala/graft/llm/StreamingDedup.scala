@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.StreamingState
 
 /** Incremental exact dedup across micro-batches / crawl snapshots: emit
   * only documents whose content hash has never been seen in ANY earlier
@@ -9,11 +11,11 @@ import org.apache.spark.sql.functions._
   * gate of a continuously-fed training corpus.
   *
   * Replay idempotence (the at-least-once foreachBatch contract, same
-  * construction as the DLQ writer): the seen-hash state is PARTITIONED BY
-  * BATCH ID, a batch's hashes overwrite only their own `_batch_id`
-  * partition, and novelty for batch N is judged against partitions
-  * `_batch_id < N` only. A replayed batch therefore ignores its own
-  * earlier half-written hashes and re-emits exactly the same novel set —
+  * construction as the DLQ writer): the seen-hash state is the
+  * [[StreamingState]] batch layout, a batch's hashes overwrite only their
+  * own `_batch_id=` directory, and novelty for batch N is judged against
+  * batches `_batch_id < N` only. A replayed batch therefore ignores its own
+  * hashes from an earlier attempt and re-emits exactly the same novel set —
   * without the exclusion, a replay would anti-join against itself and
   * silently emit nothing.
   *
@@ -27,17 +29,6 @@ import org.apache.spark.sql.functions._
   */
 final class StreamingDedup(spark: SparkSession, stateDir: String,
     idCol: String, textCol: String) {
-
-  // dynamic partition overwrite commits partitions WITHOUT a root
-  // _SUCCESS marker — presence = any committed _batch_id= partition dir
-  private def stateExists: Boolean = {
-    val p = java.nio.file.Paths.get(stateDir)
-    java.nio.file.Files.isDirectory(p) && {
-      val s = java.nio.file.Files.list(p)
-      try s.anyMatch(f => f.getFileName.toString.startsWith("_batch_id="))
-      finally s.close()
-    }
-  }
 
   /** Filter `batch` to never-before-seen documents and record their
     * hashes under this batch's partition. Within the batch, the minimum
@@ -63,7 +54,7 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
       .filter(col("_rn") === 1)
       .drop("_rn")
     val novel =
-      if (!stateExists) candidates
+      if (!StreamingState.hasData(spark, stateDir)) candidates
       else {
         val prior = spark.read.parquet(stateDir)
           .filter(col("_batch_id") < batchId) // replay: never self-exclude
@@ -73,11 +64,7 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
     // materialize BEFORE the state write: the state append must not race
     // the novelty read of the same directory on lazy re-execution
     val out = graft.util.Materialize.barrier(novel)
-    out.select(col("_h"), lit(batchId).as("_batch_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+    StreamingState.writeBatch(out.select("_h"), stateDir, batchId)
     out.drop("_h")
   }
 }

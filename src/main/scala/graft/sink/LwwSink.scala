@@ -116,12 +116,24 @@ private[sink] object StateLayout {
   }
 }
 
+/** A parquet-backed LWW state table, as the replication path drives it:
+  * [[ParquetStateStore]] (one table) or [[BucketedParquetStateStore]]
+  * (key-bucketed).
+  */
+trait LwwStateStore {
+  /** LWW-merge a batch of raw rows into the state. */
+  def upsert(batch: DataFrame): Unit
+  /** Clear the rows that lose the (ts, tie) ordering; returns rows cleared. */
+  def truncate(tsUs: Long, tieId: Long): Long
+}
+
 /** Parquet-backed LWW state table. Thread-unsafe by design: one writer
   * (the streaming query's foreachBatch) at a time, like the reference's
   * single sink-connector instance per table.
   */
 final class ParquetStateStore(
-    spark: SparkSession, dir: String, keys: Seq[String], tsCol: String, tieCol: String) {
+    spark: SparkSession, dir: String, keys: Seq[String], tsCol: String, tieCol: String)
+    extends LwwStateStore {
 
   /** Single-key convenience (the common Cassandra partition-key shape). */
   def this(spark: SparkSession, dir: String, key: String, tsCol: String, tieCol: String) =
@@ -288,7 +300,7 @@ object BucketedParquetStateStore {
 
 final class BucketedParquetStateStore(
     spark: SparkSession, dir: String, keys: Seq[String], tsCol: String, tieCol: String,
-    numBuckets: Int) {
+    numBuckets: Int) extends LwwStateStore {
 
   /** Single-key convenience (the common Cassandra partition-key shape). */
   def this(spark: SparkSession, dir: String, key: String, tsCol: String, tieCol: String,

@@ -1,7 +1,10 @@
 package graft.sketch
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+
+import graft.streaming.StreamingState
 
 /** Incremental Count-Min maintenance across micro-batches — the
   * streaming form of [[Sketches.cmsCells]], completing the streaming
@@ -12,13 +15,14 @@ import org.apache.spark.sql.functions._
   *
   * Replay idempotence (the at-least-once foreachBatch contract,
   * [[graft.llm.StreamingDedup]]'s construction): the state is the
-  * PER-BATCH cell table partitioned by `_batch_id` — a batch's cells
-  * overwrite only their own partition, so a replayed batch rewrites
-  * identical rows and the merged cells are unchanged. CMS counts are
-  * duplicate-SENSITIVE (like the quantile registers, unlike HLL/Bloom),
-  * so the partition-overwrite isolation is what makes replay safe.
+  * PER-BATCH cell table in the [[StreamingState]] batch layout — a
+  * batch's cells overwrite only their own `_batch_id=` directory, so a
+  * replayed batch rewrites identical rows and the merged cells are
+  * unchanged. CMS counts are duplicate-SENSITIVE (like the quantile
+  * registers, unlike HLL/Bloom), so the per-batch isolation is what
+  * makes replay safe.
   *
-  * Merging happens AT READ TIME by SUM over all batch partitions (CMS
+  * Merging happens AT READ TIME by SUM over all batches (CMS
   * cells are sum-mergeable: shard counts added per (r, b) equal the
   * one-pass cells — spec-pinned). State size is batches × ≤ d·w rows;
   * old partitions fold with [[graft.warehouse.Compaction]]-style
@@ -29,20 +33,16 @@ final class StreamingCms(spark: SparkSession, stateDir: String,
     d: Int, w: Int) {
 
   /** Record one micro-batch: build its cell table and overwrite this
-    * batch's state partition (dynamic partition overwrite — the replay
+    * batch's state ([[StreamingState.writeBatch]] — the replay
     * contract).
     */
   def recordBatch(df: DataFrame, valueCol: Column, batchId: Long): Unit =
-    Sketches.cmsCells(df, valueCol, d, w)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+    StreamingState.writeBatch(Sketches.cmsCells(df, valueCol, d, w),
+      stateDir, batchId)
 
   /** [[recordBatch]] with grouping columns (per day/source/shard) —
     * the state a ROLLING panel reads: a grouped batch's cells land in
-    * the same batch partition (replay contract unchanged), and
+    * the same batch directory (replay contract unchanged), and
     * [[mergedCellsBy]] hands `Sketches.rollingSumRegisters` exactly the
     * (groups…, r, b, c) table it windows. Closes the loop from the
     * continuously-fed stream to the sliding-window heavy-hitter panel
@@ -50,28 +50,27 @@ final class StreamingCms(spark: SparkSession, stateDir: String,
     */
   def recordBatchBy(df: DataFrame, groups: Seq[String], valueCol: Column,
       batchId: Long): Unit =
-    Sketches.cmsCellsBy(df, groups, valueCol, d, w)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+    StreamingState.writeBatch(Sketches.cmsCellsBy(df, groups, valueCol, d, w),
+      stateDir, batchId)
 
   /** The merged cell table over every recorded batch — identical to
     * the one-pass [[Sketches.cmsCells]] over the union of all batches'
-    * rows.
+    * rows. Zero state reads as the empty cell table, so every estimate
+    * is 0.
     */
-  def mergedCells(): DataFrame =
-    spark.read.parquet(stateDir)
-      .groupBy("r", "b")
-      .agg(sum("c").as("c"))
+  def mergedCells(): DataFrame = mergedCellsBy(Nil)
 
   /** Merged per-group cells over every recorded batch — identical to
     * one-pass [[Sketches.cmsCellsBy]] over the union (SUM is
-    * associative across any batch grouping).
+    * associative across any batch grouping). On zero state the group
+    * columns of the empty table are typed STRING: their native type is
+    * only known once a batch has landed.
     */
   def mergedCellsBy(groups: Seq[String]): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamingState.readBatches(spark, stateDir, StructType(
+        groups.map(StructField(_, StringType)) ++ Seq(
+          StructField("r", IntegerType), StructField("b", LongType),
+          StructField("c", LongType))))
       .groupBy(groups.map(col) ++ Seq(col("r"), col("b")): _*)
       .agg(sum("c").as("c"))
 

@@ -1,7 +1,10 @@
 package graft.sketch
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.streaming.StreamingState
 
 /** Incremental quantile-sketch maintenance across micro-batches — the
   * streaming form of [[Sketches.logHistogram]]: a continuously-fed
@@ -10,14 +13,14 @@ import org.apache.spark.sql.functions._
   *
   * Replay idempotence (the at-least-once foreachBatch contract,
   * [[graft.llm.StreamingDedup]]'s construction): the state is the
-  * PER-BATCH register table partitioned by `_batch_id` — a batch's
-  * registers overwrite only their own partition, so a replayed batch
-  * rewrites identical rows and the merged registers are unchanged.
-  * Counts are duplicate-SENSITIVE (unlike the HLL max-merge), so this
-  * partition-overwrite isolation is what makes replay safe — a naive
-  * read-modify-add would double-count the replayed batch.
+  * PER-BATCH register table in the [[StreamingState]] batch layout — a
+  * batch's registers overwrite only their own `_batch_id=` directory,
+  * so a replayed batch rewrites identical rows and the merged registers
+  * are unchanged. Counts are duplicate-SENSITIVE (unlike the HLL
+  * max-merge), so this per-batch isolation is what makes replay safe —
+  * a naive read-modify-add would double-count the replayed batch.
   *
-  * Merging happens AT READ TIME by SUM over all batch partitions
+  * Merging happens AT READ TIME by SUM over all batches
   * (logHistogram registers are sum-mergeable: shard counts added per
   * (group, bin) equal the one-pass counts — spec-pinned). State size
   * is batches × ≤ 65 rows per group; old partitions fold with
@@ -29,23 +32,23 @@ final class StreamingQuantile(spark: SparkSession, stateDir: String,
     groups: Seq[String]) {
 
   /** Record one micro-batch: build its log-histogram registers and
-    * overwrite this batch's state partition (dynamic partition
-    * overwrite — the replay contract).
+    * overwrite this batch's state ([[StreamingState.writeBatch]] — the
+    * replay contract).
     */
   def recordBatch(df: DataFrame, valueCol: Column, batchId: Long): Unit =
-    Sketches.logHistogram(df, groups, valueCol)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+    StreamingState.writeBatch(Sketches.logHistogram(df, groups, valueCol),
+      stateDir, batchId)
 
   /** The merged register table over every recorded batch — identical
     * to the one-pass [[Sketches.logHistogram]] over the union of all
-    * batches' rows.
+    * batches' rows. Zero state reads as the empty register table (its
+    * group columns typed STRING: their native type is only known once a
+    * batch has landed), so the quantile panel is empty.
     */
   def mergedRegisters(): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamingState.readBatches(spark, stateDir, StructType(
+        groups.map(StructField(_, StringType)) ++ Seq(
+          StructField("_bin", LongType), StructField("_cnt", LongType))))
       .groupBy((groups :+ "_bin").map(col): _*)
       .agg(sum("_cnt").as("_cnt"))
 

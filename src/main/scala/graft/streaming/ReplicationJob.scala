@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.types._
 
 import graft.ops.{EventOps, Lww}
-import graft.sink.ParquetStateStore
+import graft.sink.{LwwStateStore, ParquetStateStore}
 
 /** The always-on replication path (reference lifecycle SURVEY.md §3.1):
   *
@@ -207,7 +207,8 @@ object ReplicationJob {
     * idempotent LWW fold into the target. Exposed for batch tests and
     * reused verbatim by the stream.
     *
-    * `batchId` keys the DLQ write's partition overwrite — identical ids
+    * `batchId` keys the DLQ write's batch directory
+    * ([[StreamingState.writeBatch]]) — identical ids
     * overwrite (that IS the streaming replay idempotence). Direct batch
     * callers processing multiple batches MUST pass distinct ids or
     * earlier batches' DLQ rows are replaced.
@@ -316,12 +317,24 @@ object ReplicationJob {
       .withColumn("_cdc_deleted", col("event_type") === cfg.deleteType)
       .withColumn("_cdc_timestamp_micros", col("ts_us"))
       .withColumn("_last_event_id", col("event_id"))
+    // The target, chosen once per batch: a JDBC table, or a parquet
+    // state store (key-bucketed or whole-table) that both the upsert and
+    // the truncate below run against.
+    val target: Either[graft.sink.JdbcLwwExecutor.Target, LwwStateStore] =
+      cfg.jdbcTarget.toLeft(cfg.stateBuckets match {
+        case Some(nb) =>
+          new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir, cfg.pk,
+            "_cdc_timestamp_micros", "_last_event_id", nb)
+        case None =>
+          new ParquetStateStore(spark, cfg.targetDir, cfg.pk,
+            "_cdc_timestamp_micros", "_last_event_id")
+      })
     // The parquet stores fold the raw rows together with state in one
     // max_by (the fold is associative and idempotent, so compacting the
     // batch first would only add a shuffle). The JDBC executor writes one
     // row per key, so that arm compacts the batch first.
-    def runUpsert(): Unit = cfg.jdbcTarget match {
-      case Some(t) =>
+    def runUpsert(): Unit = target match {
+      case Left(t) =>
         val compacted = Lww.latestPerKey(enriched, cfg.pk,
           Seq(col("_cdc_timestamp_micros"), col("_last_event_id")))
         if (cfg.autoEvolveTarget) {
@@ -341,14 +354,7 @@ object ReplicationJob {
           case None => graft.sink.JdbcLwwExecutor.writeBatch(
             compacted.select(t.cols.map(col).toIndexedSeq: _*), t)
         }
-      case None => cfg.stateBuckets match {
-        case Some(nb) =>
-          new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id", nb).upsert(enriched)
-        case None =>
-          new ParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id").upsert(enriched)
-      }
+      case Right(store) => store.upsert(enriched)
     }
     // The two per-batch writes up to the truncate barrier — LWW upsert and
     // DLQ write — are INDEPENDENT jobs over the same materialized batch,
@@ -361,11 +367,11 @@ object ReplicationJob {
     // same idempotent writes regardless of which write failed first.
     pendingUpsert = Future(runUpsert())(ReplicationJob.sinkEc)
     // DLQ write must be idempotent under at-least-once foreachBatch: a
-    // replayed micro-batch overwrites its own `_batch_id` partition rather
-    // than blind-appending (which would duplicate DLQ rows and break the
-    // dlqCount == invalidCount invariant). `failed_at_us` is derived from
-    // batch content (max event ts), not wall clock, so a replay writes
-    // byte-identical rows.
+    // replayed micro-batch overwrites its own batch directory
+    // ([[StreamingState.writeBatch]]) rather than blind-appending (which
+    // would duplicate DLQ rows and break the dlqCount == invalidCount
+    // invariant). `failed_at_us` is derived from batch content (max event
+    // ts), not wall clock, so a replay writes byte-identical rows.
     //
     // The write runs as many tasks as the batch would need for the DLQ
     // rows at the batch's own rows per task: ceil(P × dlq_n / batch_n) of
@@ -377,27 +383,22 @@ object ReplicationJob {
     if (dlqN > 0) {
       val parts = tagged.rdd.getNumPartitions
       val dlqParts = ((parts * dlqN + batchN - 1) / batchN).toInt
-      // The batch's two values, `failed_at_us` and `_batch_id`, reach the
-      // rows as data from a one-row frame, never as literals: whole-stage
-      // codegen writes a Long literal into the generated Java source, so
-      // each new batch id or watermark would compile fresh classes. The
-      // cross join is a cartesian product against one local row (a
-      // broadcast would cost a job of its own); the write then sorts the
-      // rows on their single `_batch_id`, which keeps their order.
+      // The batch's watermark `failed_at_us` reaches the rows as data
+      // from a one-row frame, never as a literal: whole-stage codegen
+      // writes a Long literal into the generated Java source, so each new
+      // watermark would compile fresh classes (the batch id lives in the
+      // path only). The cross join is a cartesian product against one
+      // local row (a broadcast would cost a job of its own).
       val perBatch = spark.createDataFrame(
-        java.util.List.of(Row(ctl.getAs[Long]("dlq_max_ts"), batchId)),
-        StructType(Seq(StructField("failed_at_us", LongType, nullable = false),
-          StructField("_batch_id", LongType, nullable = false))))
+        java.util.List.of(Row(ctl.getAs[Long]("dlq_max_ts"))),
+        StructType(Seq(StructField("failed_at_us", LongType, nullable = false))))
       // a DLQ failure must not leak a still-running upsert job past the
       // finally-block unpersist: record it, await the upsert, then throw
-      try dlq.coalesce(dlqParts)
-        .crossJoin(perBatch.hint("shuffle_replicate_nl"))
-        .withColumn("resolution_status", lit("PENDING"))
-        .withColumn("resolved_at_us", lit(null).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(cfg.dlqDir)
+      try StreamingState.writeBatch(dlq.coalesce(dlqParts)
+          .crossJoin(perBatch.hint("shuffle_replicate_nl"))
+          .withColumn("resolution_status", lit("PENDING"))
+          .withColumn("resolved_at_us", lit(null).cast("long")),
+        cfg.dlqDir, batchId)
       catch { case t: Throwable => dlqErr = t }
     }
     Await.result(pendingUpsert, Duration.Inf)
@@ -410,25 +411,18 @@ object ReplicationJob {
     if (ctl.getAs[Long]("trunc_n") > 0) {
       val w = ctl.getAs[Row]("trunc_max")
       val (tTs, tTie) = (w.getLong(0), w.getLong(1))
-      cfg.jdbcTarget match {
-        case Some(t) =>
+      target match {
+        case Left(t) =>
           val conn = graft.sink.JdbcLwwExecutor.connect(t.url)
           try graft.sink.JdbcLwwExecutor.truncateTable(conn, t, tTs, tTie)
           finally conn.close()
-        case None => cfg.stateBuckets match {
-          case Some(nb) =>
-            new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir, cfg.pk,
-              "_cdc_timestamp_micros", "_last_event_id", nb).truncate(tTs, tTie)
-          case None =>
-            new ParquetStateStore(spark, cfg.targetDir, cfg.pk,
-              "_cdc_timestamp_micros", "_last_event_id").truncate(tTs, tTie)
-        }
+        case Right(store) => store.truncate(tTs, tTie)
       }
     }
     // Per-table monitors fold the batch's valid rows into their register
-    // stores — per-_batch_id dynamic overwrite inside, so a replayed
-    // micro-batch replaces its own counts (same idempotence as the DLQ
-    // write above). Alert evaluation is the CALLER's read (panel() /
+    // stores — the same [[StreamingState.writeBatch]] layout, so a
+    // replayed micro-batch replaces its own counts (same idempotence as
+    // the DLQ write above). Alert evaluation is the CALLER's read (panel() /
     // alerts()) — the fold itself must never fail the replication batch
     // on a panel-side bound.
     cfg.monitors.foreach(_.recordBatch(valid, batchId))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -22,10 +22,10 @@ import graft.ops.TableProfile
   * ([[TableProfile.rocAucFromCounts]] — one code path, the live panel
   * can never drift from the one-pass number).
   *
-  * Replay idempotence: per-batch registers land under their own
-  * `_batch_id=` partition with dynamic overwrite — an at-least-once
-  * replay REPLACES its own counts (counts are duplicate-sensitive, the
-  * partition isolation is what makes replay safe).
+  * Replay idempotence: per-batch registers land in the
+  * [[StreamingState]] batch layout — an at-least-once replay REPLACES
+  * its own counts (counts are duplicate-sensitive, the per-batch
+  * isolation is what makes replay safe).
   *
   * Scale shape: per batch, one batch-sized partial agg into ≤
   * |distinct scores| rows; the read merges registers (register-sized
@@ -43,32 +43,22 @@ final class StreamingCalibration(spark: SparkSession, stateDir: String,
     */
   def recordBatch(scored: DataFrame, scoreCol: Column, labelCol: Column,
       batchId: Long): Unit =
-    scored
+    StreamingState.writeBatch(scored
       .select(scoreCol.cast("long").as("_s"),
         labelCol.cast("boolean").as("_y"))
       .filter(col("_s").isNotNull && col("_y").isNotNull)
       .groupBy("_s").agg(
         sum(when(col("_y"), 1L).otherwise(0L)).as("_np"),
-        sum(when(col("_y"), 0L).otherwise(1L)).as("_nn"))
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+        sum(when(col("_y"), 0L).otherwise(1L)).as("_nn")), stateDir, batchId)
 
   /** The folded per-score count table — registers sum-merged to one
     * row per score (the walks require uniqueness per score). Zero
     * state reads as the typed empty table.
     */
   def mergedCounts(): DataFrame =
-    if (StreamingState.hasData(spark, stateDir))
-      spark.read.parquet(stateDir).groupBy("_s")
-        .agg(sum("_np").as("_np"), sum("_nn").as("_nn"))
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("_s", LongType),
-          StructField("_np", LongType), StructField("_nn", LongType))))
+    StreamingState.readBatches(spark, stateDir, StructType(
+        Seq("_s", "_np", "_nn").map(StructField(_, LongType))))
+      .groupBy("_s").agg(sum("_np").as("_np"), sum("_nn").as("_nn"))
 
   /** The live AUC panel over everything scored so far — identical to
     * [[TableProfile.rocAuc]] over the union of all batches. Zero state

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.llm.Similarity
 
@@ -23,11 +22,11 @@ import graft.llm.Similarity
   *
   * Replay idempotence (the at-least-once foreachBatch contract,
   * [[graft.llm.StreamingDedup]]'s construction): state is the PER-BATCH
-  * assignment table partitioned by `_batch_id` — a replayed batch
-  * overwrites only its own partition with identical rows, so the merged
-  * index is unchanged. Assignments are per-vector facts (not counts),
-  * but duplicate ROWS would duplicate search candidates, so the
-  * partition-overwrite isolation still carries the contract.
+  * assignment table in the [[StreamingState]] batch layout — a replayed
+  * batch overwrites only its own `_batch_id=` directory with identical
+  * rows, so the merged index is unchanged. Assignments are per-vector
+  * facts (not counts), but duplicate ROWS would duplicate search
+  * candidates, so the per-batch isolation still carries the contract.
   *
   * Scale shape: each batch pays one batch-sized assignment pass
   * (broadcast centroids, WindowGroupLimit top-1); the merged read is a
@@ -41,12 +40,7 @@ final class StreamingIvf(spark: SparkSession, stateDir: String) {
     * state partition.
     */
   def recordBatch(df: DataFrame, cents: DataFrame, batchId: Long): Unit =
-    Similarity.ivfAssign(df, cents)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(stateDir)
+    StreamingState.writeBatch(Similarity.ivfAssign(df, cents), stateDir, batchId)
 
   /** The merged assignment table over every recorded batch — identical
     * to one-pass [[Similarity.ivfAssign]] over the union of all
@@ -55,20 +49,17 @@ final class StreamingIvf(spark: SparkSession, stateDir: String) {
     * is the EMPTY assignment table (searching it returns no rows), not
     * an AnalysisException from reading an absent directory.
     */
-  def mergedAssignments(): DataFrame =
-    if (StreamingState.hasData(spark, stateDir))
-      spark.read.parquet(stateDir).select("cid", "cv", "nc", "cell")
-    else {
-      // the ivfAssign output schema is fixed by construction: cid =
-      // vec_id (bigint), cv = quantize(embedding) (array<bigint>),
-      // nc = dotQ(cv, cv) (bigint), cell = cent_id (bigint)
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+  def mergedAssignments(): DataFrame = {
+    // the ivfAssign output schema is fixed by construction: cid =
+    // vec_id (bigint), cv = quantize(embedding) (array<bigint>),
+    // nc = dotQ(cv, cv) (bigint), cell = cent_id (bigint)
+    import org.apache.spark.sql.types._
+    StreamingState.readBatches(spark, stateDir,
         StructType(Seq(StructField("cid", LongType),
           StructField("cv", ArrayType(LongType)),
           StructField("nc", LongType), StructField("cell", LongType))))
-    }
+      .select("cid", "cv", "nc", "cell")
+  }
 
   /** Search the live index: top-k per query over the merged
     * assignments, same plan shape as the one-pass

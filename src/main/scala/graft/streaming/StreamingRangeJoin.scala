@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
@@ -42,10 +42,11 @@ import graft.ops.RangeJoin
   * and any interval is trivially aligned.
   *
   * Replay idempotence (the at-least-once foreachBatch contract): both
-  * sides' state is partitioned by `_batch_id` — a replayed batch
-  * overwrites only its own partition with identical rows. Counts and
-  * sums are duplicate-SENSITIVE, so the partition-overwrite isolation
-  * is what makes replay safe (the CMS/quantile register contract).
+  * sides' state is the [[StreamingState]] batch layout — a replayed
+  * batch overwrites only its own `_batch_id=` directory with identical
+  * rows. Counts and sums are duplicate-SENSITIVE, so the per-batch
+  * isolation is what makes replay safe (the CMS/quantile register
+  * contract).
   *
   * Scale shape: per probe batch, one batch-sized partial agg into the
   * cell-grained digest; per interval batch, a map-only normalize+write.
@@ -103,15 +104,10 @@ final class StreamingRangeJoin(spark: SparkSession, stateDir: String,
     */
   def recordProbeBatch(probe: DataFrame, tCol: String, valueCol: Column,
       batchId: Long): Unit =
-    probe
+    StreamingState.writeBatch(probe
       .select(expr(cellExpr(tCol)).as("_t"), valueCol.cast("long").as("_v"))
       .groupBy("_t")
-      .agg(count(lit(1)).as("_n"), sum("_v").as("_sum"))
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(probeDir)
+      .agg(count(lit(1)).as("_n"), sum("_v").as("_sum")), probeDir, batchId)
 
   /** The normalized interval frame that lands in state: keys cast to
     * BIGINT (after the integral-type require) and bounds as CELL
@@ -143,12 +139,8 @@ final class StreamingRangeJoin(spark: SparkSession, stateDir: String,
     */
   def recordIntervalBatch(intervals: DataFrame, loCol: String,
       hiCol: String, batchId: Long): Unit =
-    normalizedIntervals(intervals, loCol, hiCol)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(intervalDir)
+    StreamingState.writeBatch(normalizedIntervals(intervals, loCol, hiCol),
+      intervalDir, batchId)
 
   /** Order-insensitive fingerprint of a normalized interval frame:
     * (row count, wrapping Σ xxhash64(key…, _lo, _hi)) — register-sized
@@ -178,7 +170,7 @@ final class StreamingRangeJoin(spark: SparkSession, stateDir: String,
       intervals: DataFrame, loCol: String, hiCol: String,
       batchId: Long): Unit = {
     val norm = normalizedIntervals(intervals, loCol, hiCol)
-    val p0 = s"$intervalDir/_batch_id=0"
+    val p0 = StreamingState.batchDir(intervalDir, 0L)
     if (StreamingState.hasData(spark, p0)) {
       val stored = spark.read.parquet(p0)
         .select((keyCols.map(col) :+ col("_lo") :+ col("_hi")): _*)
@@ -189,27 +181,16 @@ final class StreamingRangeJoin(spark: SparkSession, stateDir: String,
           s"state (rows $nOld -> $nNew) - the single-side API joins ALL " +
           "probe history against ONE fixed geometry; per-batch interval " +
           "tables need recordIntervalBatch")
-    } else {
-      norm.withColumn("_batch_id", lit(0L))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(intervalDir)
-    }
+    } else StreamingState.writeBatch(norm, intervalDir, 0L)
     recordProbeBatch(probe, tCol, valueCol, batchId)
   }
 
+  // sum-merge the per-batch digests so the join input has one row per
+  // cell (keeps the bucket join's fan-out digest-sized)
   private def mergedDigest(): DataFrame =
-    if (StreamingState.hasData(spark, probeDir))
-      // sum-merge the per-batch digests so the join input has one row
-      // per cell (keeps the bucket join's fan-out digest-sized)
-      spark.read.parquet(probeDir).groupBy("_t")
-        .agg(sum("_n").as("_n"), sum("_sum").as("_sum"))
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("_t", LongType),
-          StructField("_n", LongType), StructField("_sum", LongType))))
+    StreamingState.readBatches(spark, probeDir, StructType(
+        Seq("_t", "_n", "_sum").map(StructField(_, LongType))))
+      .groupBy("_t").agg(sum("_n").as("_n"), sum("_sum").as("_sum"))
 
   /** The live panel: per-interval (n_events, sum_value) over every
     * recorded batch of both sides — identical to the one-pass
@@ -220,19 +201,13 @@ final class StreamingRangeJoin(spark: SparkSession, stateDir: String,
     * key require, not just documented), not an AnalysisException from
     * an absent state directory.
     */
-  def merged(): DataFrame =
-    if (StreamingState.hasData(spark, intervalDir)) {
-      val iv = spark.read.parquet(intervalDir)
-        .select(keyCols.map(col) ++ Seq(col("_lo"), col("_hi")): _*)
-      RangeJoin.bucketed(mergedDigest(), "_t", iv, "_lo", "_hi", bucketWidth)
-        .groupBy(keyCols.map(col): _*)
-        .agg(sum("_n").as("n_events"), sum("_sum").as("sum_value"))
-        .select(keyCols.map(col) ++ Seq(col("n_events"),
-          col("sum_value")): _*)
-    } else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(keyCols.map(StructField(_, LongType)) ++
-          Seq(StructField("n_events", LongType),
-            StructField("sum_value", LongType))))
+  def merged(): DataFrame = {
+    val iv = StreamingState.readBatches(spark, intervalDir, StructType(
+        (keyCols :+ "_lo" :+ "_hi").map(StructField(_, LongType))))
+      .select((keyCols :+ "_lo" :+ "_hi").map(col): _*)
+    RangeJoin.bucketed(mergedDigest(), "_t", iv, "_lo", "_hi", bucketWidth)
+      .groupBy(keyCols.map(col): _*)
+      .agg(sum("_n").as("n_events"), sum("_sum").as("sum_value"))
+      .select(keyCols.map(col) ++ Seq(col("n_events"), col("sum_value")): _*)
+  }
 }

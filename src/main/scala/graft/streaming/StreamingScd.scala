@@ -44,15 +44,6 @@ final class StreamingScd(spark: SparkSession, changesDir: String,
   private def kb: Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(buckets.toLong))
 
-  private def stateExists(dir: String): Boolean = {
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.isDirectory(p) && {
-      val s = java.nio.file.Files.list(p)
-      try s.anyMatch(f => f.getFileName.toString.startsWith("_kb="))
-      finally s.close()
-    }
-  }
-
   /** Fold one micro-batch of change events into the log + history.
     * Idempotent under replay: the log merge is a set union keyed by
     * (key…, ts, event id), and the history is a pure function of the
@@ -68,7 +59,7 @@ final class StreamingScd(spark: SparkSession, changesDir: String,
       .collect().map(_.getLong(0))
     if (touched.isEmpty) return
     val merged =
-      if (!stateExists(changesDir)) incoming
+      if (!StreamingState.hasData(spark, changesDir)) incoming
       else incoming.unionByName(
         spark.read.parquet(changesDir)
           .filter(col("_kb").isin(touched: _*)))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.Privacy
@@ -12,8 +12,8 @@ import graft.llm.Privacy
   * CDC stream as declared table policy instead of standalone jobs.
   *
   * Register discipline (the [[StreamingCalibration]] construction):
-  * each batch folds ONE batch-sized partial agg into a `_batch_id=`
-  * partition with dynamic overwrite — an at-least-once replay REPLACES
+  * each batch folds ONE batch-sized partial agg into its own
+  * [[StreamingState]] batch directory — an at-least-once replay REPLACES
   * its own counts, so the store is replay-idempotent; the panels read
   * the sum-merged registers through the SAME walks the batch audits run
   * ([[Privacy.tClosenessFromCounts]], [[Privacy.emdBetweenCounts]] —
@@ -51,14 +51,13 @@ object TableMonitors {
     val name = "t_closeness"
 
     def recordBatch(valid: DataFrame, batchId: Long): Unit =
-      Privacy.tClosenessCounts(valid, quasi, sensitive, lo, hi, buckets)
-        .withColumn("_batch_id", lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(stateDir)
+      StreamingState.writeBatch(
+        Privacy.tClosenessCounts(valid, quasi, sensitive, lo, hi, buckets),
+        stateDir, batchId)
 
-    /** Live per-class EMD panel over every batch folded so far. */
+    /** Live per-class EMD panel over every batch folded so far; throws
+      * before the first batch is recorded.
+      */
     def panel(): DataFrame = {
       require(StreamingState.hasData(spark, stateDir),
         s"$name: no batches recorded yet")
@@ -93,12 +92,9 @@ object TableMonitors {
     val name = "value_drift"
 
     def recordBatch(valid: DataFrame, batchId: Long): Unit =
-      Privacy.tClosenessCounts(valid, groups, valueCol, lo, hi, buckets)
-        .withColumn("_batch_id", lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(stateDir)
+      StreamingState.writeBatch(
+        Privacy.tClosenessCounts(valid, groups, valueCol, lo, hi, buckets),
+        stateDir, batchId)
 
     /** (groups…, n_a, n_b, emd_x1e6): prior history (a) vs the latest
       * batch (b). Empty until two batches exist.
@@ -111,6 +107,8 @@ object TableMonitors {
           .withColumn("_batch_id", col("_batch_id").cast("long")))
       val ids = state.agg(min("_batch_id").as("lo"), max("_batch_id").as("hi"))
         .head()
+      // only empty batches so far: no rows, so no ids either
+      if (ids.isNullAt(0)) return emptyPanel()
       val (loB, hiB) = (ids.getLong(0), ids.getLong(1))
       if (loB == hiB) return emptyPanel() // a single batch has no baseline
       Privacy.emdBetweenCounts(

@@ -91,6 +91,11 @@ class BloomSpec extends SparkSpecBase {
     assert(sb.collect().toSeq === want)
   }
 
+  test("streaming zero state: no batch yet collects all-zero words") {
+    val sb = new graft.sketch.StreamingBloom(spark, tmpDir("bloom_zero"), M, K)
+    assert(sb.collect().toSeq === Seq.fill(M / 64)(0L))
+  }
+
   test("probe plan is pure codegen: no UDF, zero shuffle on the corpus side") {
     val words = refWords(keys)
     val df = keys.toDF("key").repartition(2)

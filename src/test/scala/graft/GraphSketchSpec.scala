@@ -355,6 +355,14 @@ class GraphSketchSpec extends SparkSpecBase {
       .collect().toSet === panel)
   }
 
+  test("streaming quantile zero state: empty registers, empty panel") {
+    val sq = new graft.sketch.StreamingQuantile(spark, tmpDir("quant_zero"),
+      Seq("event_type"))
+    assert(sq.mergedRegisters().columns.toSeq === Seq("event_type", "_bin", "_cnt"))
+    assert(sq.mergedRegisters().count() === 0L)
+    assert(sq.quantiles(Seq(500, 950)).count() === 0L)
+  }
+
   test("log-histogram rejects negative values loudly") {
     val bad = Seq(("a", -5L)).toDF("g", "v")
     val e = intercept[Exception] {
@@ -550,6 +558,25 @@ class GraphSketchSpec extends SparkSpecBase {
     assert(est === Sketches.cmsEstimate(onePass,
       top.select(col("tok").as("key")), 4, 64)
       .as[(String, Long)].collect().toMap)
+  }
+
+  test("streaming CMS zero state: empty cells, every estimate 0") {
+    val sc = new graft.sketch.StreamingCms(spark, tmpDir("cms_zero"), d = 4, w = 64)
+    assert(sc.mergedCells().columns.toSeq === Seq("r", "b", "c"))
+    assert(sc.mergedCells().count() === 0L)
+    assert(sc.mergedCellsBy(Seq("day")).count() === 0L)
+    assert(sc.estimates(Seq("a", "b").toDF("key")).as[(String, Long)]
+      .collect().toMap === Map("a" -> 0L, "b" -> 0L))
+  }
+
+  test("streaming CMS: a new batch id compiles no classes") {
+    val sc = new graft.sketch.StreamingCms(spark, tmpDir("cms_compile"), d = 4, w = 64)
+    def batch(i: Long) = Seq(s"tok$i", "shared", s"tok${i + 1}").toDF("tok")
+    // ids no other test records, so no class of an earlier test matches
+    (900L to 901L).foreach(i => sc.recordBatch(batch(i), col("tok"), i))
+    val m = Harness.measure(spark)(sc.recordBatch(batch(902L), col("tok"), 902L))
+    assert(m.compiles == 0L, s"${m.compiles} classes compiled by batch 902")
+    assert(sc.mergedCells().agg(sum("c")).as[Long].head() === 9L * 4)
   }
 
   test("streaming day-grouped CMS state feeds the rolling panel: " +

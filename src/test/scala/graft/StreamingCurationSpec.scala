@@ -162,6 +162,29 @@ class StreamingCurationSpec extends SparkSpecBase {
     assert(got.toSeq === Seq(1L), "replay must overwrite, not duplicate")
   }
 
+  test("a file: URI state dir remembers batch 0: the same document is not novel again") {
+    val sc = pipeline("file://" + tmpDir("cur-state-uri"))
+    val doc = "the same clean document body"
+    val out0 = sc.processBatch(Seq((1L, doc)).toDF("doc_id", "text"), 0L)
+    assert(out0.select("doc_id").as[Long].collect().toSeq === Seq(1L))
+    val out1 = sc.processBatch(Seq((2L, doc)).toDF("doc_id", "text"), 1L)
+    assert(out1.count() === 0L, "batch 0's hash must be found under a file: URI")
+  }
+
+  test("writeBatch: a steady-state batch compiles no classes") {
+    val (state, out) = (tmpDir("cur-state5"), tmpDir("cur-out5"))
+    val sc = pipeline(state)
+    // same plan shape every batch, fresh documents each time
+    def batch(b: Long) = Seq((b * 10 + 1, s"fresh clean document number $b"),
+      (b * 10 + 2, s"another clean body for batch $b"), (b * 10 + 3, "x"))
+      .toDF("doc_id", "text")
+    // ids no other test records, so no class of an earlier test matches
+    (900L to 902L).foreach(b => sc.writeBatch(batch(b), b, out))
+    val m = Harness.measure(spark)(sc.writeBatch(batch(903L), 903L, out))
+    assert(m.compiles == 0L, s"${m.compiles} classes compiled by a steady-state batch")
+    assert(spark.read.parquet(out).filter($"_batch_id" === 903).count() === 2L)
+  }
+
   test("end-to-end over a stream: two triggers, curated parquet appends") {
     val (state, out, ckpt) = (tmpDir("cur-state2"), tmpDir("cur-out"), tmpDir("cur-ckpt"))
     val sc = pipeline(state)
