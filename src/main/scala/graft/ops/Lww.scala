@@ -15,10 +15,13 @@ import org.apache.spark.sql.functions._
   * behind the reference's `test_out_of_order_events.py`).
   *
   * Spark mapping: a single `max_by(struct(payload), struct(ts, tie))`
-  * hash aggregation — one shuffle on the key, with map-side partial
+  * aggregation — one shuffle on the key, with map-side partial
   * aggregation (Spark plans partial_max_by before the exchange), so at
   * 100 TB each executor first compacts its own partitions and only
-  * per-key winners cross the wire. Struct comparison in Spark is
+  * per-key winners cross the wire. It is a sort aggregation, not a hash
+  * one: max_by's buffer holds a struct, which a hash aggregate's
+  * buffer row, updated in place, cannot, so Spark plans a `SortAggregate` with
+  * a `Sort` on each side of the exchange. Struct comparison in Spark is
   * lexicographic by field order, exactly the (ts, event_id) tie-break.
   */
 object Lww {

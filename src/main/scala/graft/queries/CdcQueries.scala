@@ -66,8 +66,9 @@ object CdcQueries {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // W1/T5: latest-event-per-key (the LWW fold) — one max_by hash agg,
-    // map-side partial compaction before the single key shuffle.
+    // W1/T5: latest-event-per-key (the LWW fold) — one max_by sort
+    // aggregate (a struct buffer rules out a hash agg), map-side partial
+    // compaction before the single key shuffle.
     "cdc_lww_latest" -> ((s, dir) => lwwState(s, dir, None)),
 
     // TRUNCATE fold (reference `change_event.py:14,115-117`): the LWW

@@ -42,10 +42,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    rows) work.
   *
   * Scale/recovery shape:
-  *  - one InputPartition per segment slice in a batch → per-segment
-  *    parallelism, no shuffle;
+  *  - a micro-batch's segment slices are packed, in log order and never
+  *    split, into partitions sized by their bytes: one partition below
+  *    `spark.sql.files.openCostInBytes`, at most one per core above it,
+  *    no shuffle; a batch read keeps one partition per segment;
   *  - offsets are exactly-once replayable (checkpoint stores the JSON
-  *    offset; planInputPartitions re-reads the same slice);
+  *    offset; planInputPartitions re-plans the same partitions from it);
   *  - ST6 backpressure via SupportsAdmissionControl: `maxRowsPerTrigger`
   *    (default 2048, the reference source's `max.batch.size`,
   *    `docker/connectors/cassandra-source.json:26`) bounds each
@@ -128,6 +130,32 @@ object EventLogSource {
 
   def countRows(dir: String, seg: String): Long =
     scanLines(Paths.get(dir, seg), 0L, Long.MaxValue)._1
+
+  /** Split `items` (each with its size), in order, into min(`parts`,
+    * items) contiguous non-empty groups: each group takes items while its
+    * size stays nearest the remaining size over the remaining groups, and
+    * always leaves one item for each group still to come.
+    */
+  private[streaming] def pack[A](items: Seq[(A, Long)], parts: Int): Seq[Seq[A]] = {
+    val groups = Seq.newBuilder[Seq[A]]
+    var rest = items.toIndexedSeq
+    var restBytes = rest.map(_._2).sum
+    var left = math.min(parts, rest.length)
+    while (left > 0) {
+      val target = restBytes.toDouble / left
+      var n = 1
+      var size = rest(0)._2
+      while (n < rest.length - (left - 1) && size + rest(n)._2 / 2.0 <= target) {
+        size += rest(n)._2
+        n += 1
+      }
+      groups += rest.take(n).map(_._1)
+      rest = rest.drop(n)
+      restBytes -= size
+      left -= 1
+    }
+    groups.result()
+  }
 }
 
 /** Forward, '\n'-ONLY line cursor over one segment file from byte
@@ -434,11 +462,16 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
     }
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+  /** The batch's segment slices in log order, each with its byte length:
+    * from the slice's byte anchor to the end offset's anchor in the end
+    * segment, to EOF in a closed one (a legacy end offset without an
+    * anchor counts to EOF too; the length only sizes partitions).
+    */
+  private[graft] def slices(start: Offset, end: Offset): Seq[(EventLogSlice, Long)] = {
     val s = start.asInstanceOf[EventLogOffset]
     val e = end.asInstanceOf[EventLogOffset]
     val ss = segs
-    if (ss.isEmpty) return Array.empty
+    if (ss.isEmpty) return Nil
     val sIdx = resolveSeg(s, ss)
     val eIdx = resolveSeg(e, ss)
     (sIdx to eIdx).flatMap { i =>
@@ -449,9 +482,31 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
       val from = if (sameAsStart) s.row else 0L
       val fromByte = if (sameAsStart) resolveByte(s, ss(i)) else 0L
       val until = if (i == eIdx) e.row else countClosed(ss, i)
-      if (until > from) Some(EventLogSlice(path, ss(i), from, until, fromByte): InputPartition)
+      val untilByte =
+        if (i == eIdx && e.byte >= 0) e.byte else Files.size(Paths.get(path, ss(i)))
+      if (until > from) Some(EventLogSlice(path, ss(i), from, until, fromByte) -> (untilByte - fromByte))
       else None
-    }.toArray
+    }
+  }
+
+  /** The batch's slices packed, in log order, into
+    * P = clamp(ceil(B / openCostInBytes), 1, defaultParallelism)
+    * partitions of about B/P bytes each, B the batch's log bytes. Spark's
+    * `spark.sql.files.openCostInBytes` is what it counts opening one more
+    * input split as worth in bytes, so a batch smaller than that runs in
+    * one task per stage, and one of at least that many bytes per core
+    * still spreads over every core. A slice is never split; the reader
+    * chains a partition's slices.
+    */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val sized = slices(start, end)
+    val spark = org.apache.spark.sql.SparkSession.active
+    val openCost = math.max(1L, org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.openCostInBytes")))
+    val bytes = sized.map(_._2).sum
+    val parts = math.max(1L, math.min((bytes + openCost - 1) / openCost,
+      spark.sparkContext.defaultParallelism.toLong)).toInt
+    EventLogSource.pack(sized, parts).map(EventLogSlices(_): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = EventLogReaderFactory
@@ -460,28 +515,52 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
   override def stop(): Unit = ()
 }
 
+/** Rows [`from`, `until`) of segment `seg`, read from byte `fromByte`: a
+  * partition of a batch read (one per segment), and one link of a
+  * micro-batch's [[EventLogSlices]].
+  */
 final case class EventLogSlice(dir: String, seg: String, from: Long, until: Long,
     fromByte: Long) extends InputPartition
 
+/** Consecutive slices of a micro-batch, read one after another. */
+final case class EventLogSlices(slices: Seq[EventLogSlice]) extends InputPartition
+
 object EventLogReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val slice = partition.asInstanceOf[EventLogSlice]
-    new PartitionReader[InternalRow] {
-      // seek straight to the slice: no O(from) line-skip per batch
-      private val in = new LineCursor(Paths.get(slice.dir, slice.seg), slice.fromByte)
-      require(slice.fromByte <= in.size,
-        s"byte offset ${slice.fromByte} past EOF of ${slice.seg}")
-      private val segment = UTF8String.fromString(slice.seg)
-      private var pos = slice.from
-      private var current: String = _
-      override def next(): Boolean =
-        if (pos < slice.until) {
-          current = in.readLine()
-          if (current == null) false else { pos += 1; true }
-        } else false
-      override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(current), segment, pos - 1)
-      override def close(): Unit = in.close()
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case slice: EventLogSlice => new SliceReader(slice)
+      case EventLogSlices(slices) => new PartitionReader[InternalRow] {
+        private val rest = slices.iterator
+        private var cur: SliceReader = null
+        override def next(): Boolean = {
+          var has = cur != null && cur.next()
+          while (!has && rest.hasNext) {
+            if (cur != null) cur.close()
+            cur = new SliceReader(rest.next())
+            has = cur.next()
+          }
+          has
+        }
+        override def get(): InternalRow = cur.get()
+        override def close(): Unit = if (cur != null) cur.close()
+      }
     }
-  }
+}
+
+private final class SliceReader(slice: EventLogSlice) extends PartitionReader[InternalRow] {
+  // seek straight to the slice: no O(from) line-skip per batch
+  private val in = new LineCursor(Paths.get(slice.dir, slice.seg), slice.fromByte)
+  require(slice.fromByte <= in.size,
+    s"byte offset ${slice.fromByte} past EOF of ${slice.seg}")
+  private val segment = UTF8String.fromString(slice.seg)
+  private var pos = slice.from
+  private var current: String = _
+  override def next(): Boolean =
+    if (pos < slice.until) {
+      current = in.readLine()
+      if (current == null) false else { pos += 1; true }
+    } else false
+  override def get(): InternalRow =
+    InternalRow(UTF8String.fromString(current), segment, pos - 1)
+  override def close(): Unit = in.close()
 }

@@ -35,15 +35,19 @@ import graft.sink.{LwwStateStore, ParquetStateStore}
   * DLQ write. Kafka sources swap in for the file source unchanged
   * (`readStream.format("kafka")` + the same transform chain). Each
   * micro-batch is sized from its own input, not by a setting:
-  *  - the batch is packed with a narrow coalesce to at most
+  *  - the commit-log source ([[EventLogSource]]) packs a batch into
+  *    partitions by its bytes, one per `spark.sql.files.openCostInBytes`
+  *    up to one per core, so a small batch runs one task per stage;
+  *  - any source's batch is then packed with a narrow coalesce to at most
   *    `defaultParallelism` partitions before it is tagged, so the tag
-  *    barrier, the fold's map side and the DLQ write run one task per
-  *    core, not one per source slice;
+  *    barrier, the fold's map side and the DLQ write never run more than
+  *    one task per core, whatever the source's slice, file or topic
+  *    partition count;
   *  - the DLQ write keeps the batch's rows per task: ceil(P × dlq_n /
   *    batch_n) tasks of the batch's P.
-  * Both follow from the core count and the batch's error share, which
-  * change per deployment and per batch; a fixed user setting would be
-  * wrong for one or the other.
+  * These follow from the batch's bytes, the core count and the batch's
+  * error share, which change per deployment and per batch; a fixed user
+  * setting would be wrong for one or the other.
   *
   * Code generation is paid once per JVM, not per query or per batch:
   *  - a steady-state batch compiles no class, as its per-batch values
@@ -381,7 +385,7 @@ object ReplicationJob {
     var dlqErr: Throwable = null
     val (dlqN, batchN) = (ctl.getAs[Long]("dlq_n"), ctl.getAs[Long]("batch_n"))
     if (dlqN > 0) {
-      val parts = tagged.rdd.getNumPartitions
+      val parts = graft.util.Materialize.numPartitions(tagged)
       val dlqParts = ((parts * dlqN + batchN - 1) / batchN).toInt
       // The batch's watermark `failed_at_us` reaches the rows as data
       // from a one-row frame, never as a literal: whole-stage codegen

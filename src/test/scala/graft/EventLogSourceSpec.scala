@@ -220,7 +220,7 @@ class EventLogSourceSpec extends SparkSpecBase {
       org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(100L))
       .asInstanceOf[EventLogOffset]
     val parts = stream.planInputPartitions(legacy, end)
-    val delivered = parts.map(_.asInstanceOf[graft.streaming.EventLogSlice])
+    val delivered = parts.flatMap(_.asInstanceOf[graft.streaming.EventLogSlices].slices)
       .map(s => (s.seg, s.from, s.until)).toSeq
     assert(delivered == Seq(("seg-001.log", 0L, 5L)),
       s"clamped segment must be read from row 0, got $delivered")
@@ -538,5 +538,167 @@ class EventLogSourceSpec extends SparkSpecBase {
     assert(batches.toList == List(first.last),
       s"the replayed batch must deliver the same rows: ${batches.toList}")
     assert(Files.readString(offsetLog) == offsetsBefore, "the offset log must not change")
+  }
+
+  /** The `(segment, offset, value)` rows of one input partition. */
+  private def readPartition(p: org.apache.spark.sql.connector.read.InputPartition) = {
+    val r = graft.streaming.EventLogReaderFactory.createReader(p)
+    try {
+      val out = Seq.newBuilder[(String, Long, String)]
+      while (r.next()) {
+        val row = r.get()
+        out += ((row.getUTF8String(1).toString, row.getLong(2), row.getUTF8String(0).toString))
+      }
+      out.result()
+    } finally r.close()
+  }
+
+  private def planned(stream: graft.streaming.EventLogMicroBatchStream,
+      start: EventLogOffset, end: EventLogOffset): Seq[Seq[graft.streaming.EventLogSlice]] =
+    stream.planInputPartitions(start, end).toSeq
+      .map(_.asInstanceOf[graft.streaming.EventLogSlices].slices)
+
+  /** P = clamp(ceil(bytes / openCost), 1, defaultParallelism), at most one
+    * partition per slice.
+    */
+  private def expectedParts(bytes: Long, openCost: Long, slices: Int): Int =
+    Seq(math.max(1L, (bytes + openCost - 1) / openCost),
+      spark.sparkContext.defaultParallelism.toLong, slices.toLong).min.toInt
+
+  test("packed partitions deliver the per-slice rows in order and never split a slice") {
+    val rnd = new scala.util.Random(29)
+    val limit = org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows _
+    for (layout <- 0 until 6) {
+      val dir = tmpDir("evpack")
+      // segments of uneven row counts and line lengths; odd layouts end in
+      // an unterminated tail line the stream must not admit
+      val nSegs = 1 + rnd.nextInt(9)
+      var id = 0
+      (0 until nSegs).foreach { i =>
+        val lines = Seq.fill(1 + rnd.nextInt(30)) {
+          id += 1; s"""{"event_id":$id,"pad":"${"x" * rnd.nextInt(300)}"}"""
+        }
+        val tail = if (layout % 2 == 1 && i == nSegs - 1) "{\"event_id\":-1" else ""
+        Files.writeString(Paths.get(dir, f"seg-$i%03d.log"), lines.mkString("", "\n", "\n") + tail)
+      }
+      val log = (0 until nSegs).flatMap { i =>
+        val seg = f"seg-$i%03d.log"
+        Files.readAllLines(Paths.get(dir, seg)).toArray.toSeq.map(_.toString)
+          .zipWithIndex.map { case (v, o) => (seg, o.toLong, v) }
+      }.filterNot(_._3 == "{\"event_id\":-1")
+      for (openCost <- Seq(1L, 500L, 3000L, 4L << 20)) {
+        withSQLConf("spark.sql.files.openCostInBytes" -> openCost.toString) {
+          val stream = new graft.streaming.EventLogMicroBatchStream(dir, 100L)
+          // walk the log in random-sized triggers, mid-segment anchors included
+          var start = stream.initialOffset().asInstanceOf[EventLogOffset]
+          val delivered = Seq.newBuilder[(String, Long, String)]
+          var more = true
+          while (more) {
+            val end = stream.latestOffset(start, limit(1 + rnd.nextInt(60)))
+              .asInstanceOf[EventLogOffset]
+            more = end != start
+            val sized = stream.slices(start, end)
+            val parts = planned(stream, start, end)
+            assert(parts.flatten == sized.map(_._1),
+              s"layout $layout openCost $openCost: partitions must chain the slices whole, in order")
+            assert(parts.size == (if (sized.isEmpty) 0
+              else expectedParts(sized.map(_._2).sum, openCost, sized.size)),
+              s"layout $layout openCost $openCost: ${parts.size} partitions for $sized")
+            val perSlice = sized.map { case (sl, _) =>
+              readSlice(sl.dir, sl.seg, sl.from, sl.until, sl.fromByte)
+            }
+            // a slice's size is the bytes of its lines, newlines included
+            assert(sized.map(_._2) == perSlice.map(_.map(_.getBytes("UTF-8").length + 1L).sum),
+              s"layout $layout: slice sizes $sized")
+            val rows = stream.planInputPartitions(start, end).toSeq.flatMap(readPartition)
+            assert(rows == sized.zip(perSlice).flatMap { case ((sl, _), vs) =>
+              vs.zipWithIndex.map { case (v, i) => (sl.seg, sl.from + i, v) }
+            }, s"layout $layout openCost $openCost: rows differ from per-slice reading")
+            delivered ++= rows
+            start = end
+          }
+          assert(delivered.result() == log, s"layout $layout openCost $openCost: every row once")
+        }
+      }
+    }
+  }
+
+  test("the partition count follows the batch's bytes, openCostInBytes and the core count") {
+    val dir = tmpDir("evcount")
+    (0 until 10).foreach(i => writeSeg(dir, f"seg-$i%03d.log", 50, from = 50 * i))
+    val stream = new graft.streaming.EventLogMicroBatchStream(dir, Long.MaxValue)
+    val start = stream.initialOffset().asInstanceOf[EventLogOffset]
+    val end = stream.latestOffset(start,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+      .asInstanceOf[EventLogOffset]
+    val bytes = (0 until 10).map(i => Files.size(Paths.get(dir, f"seg-$i%03d.log"))).sum
+    assert(stream.slices(start, end).map(_._2).sum == bytes)
+    val cores = spark.sparkContext.defaultParallelism
+    def parts(openCost: Long) =
+      withSQLConf("spark.sql.files.openCostInBytes" -> openCost.toString)(
+        planned(stream, start, end).size)
+    // the default (4 MB) and anything at least the batch: one partition
+    assert(planned(stream, start, end).size == 1)
+    assert(parts(bytes) == 1)
+    assert(parts((bytes + 1) / 2) == math.min(2, cores))
+    // at least openCost bytes per core: every core; a smaller openCost
+    // still never more partitions than cores
+    assert(parts(bytes / cores) == cores)
+    assert(parts(1L) == cores)
+    // through a stream: the conf reaches the stream's session
+    def streamedParts(openCost: String): Seq[Int] = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+      withSQLConf("spark.sql.files.openCostInBytes" -> openCost) {
+        spark.readStream.format(Fmt).option("path", dir)
+          .option("maxRowsPerTrigger", 1000).load()
+          .writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            seen.synchronized { seen += b.rdd.getNumPartitions }; (): Unit
+          }
+          .option("checkpointLocation", tmpDir("ckcount"))
+          .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+      }
+      seen.toList
+    }
+    assert(streamedParts("1k") == Seq(cores))
+    assert(streamedParts("4m") == Seq(1))
+  }
+
+  test("a replayed batch plans the same partitions on a fresh source") {
+    // 8 segments of 5 rows, 17 rows a trigger, 16-byte openCost: the
+    // second batch spans 4 slices and is planned into 4 partitions
+    val dir = tmpDir("evreplan")
+    (0 until 8).foreach(i => writeSeg(dir, f"seg-$i%03d.log", 5, from = 5 * i))
+    val ck = tmpDir("ck")
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(Int, String, Long)])]
+    def drain(): Unit = withSQLConf("spark.sql.files.openCostInBytes" -> "16") {
+      spark.readStream.format(Fmt).option("path", dir)
+        .option("maxRowsPerTrigger", 17).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val rows = b.select(spark_partition_id(), col("segment"), col("offset"))
+            .as[(Int, String, Long)].collect().toSeq.sorted
+          batches.synchronized { batches += id -> rows }
+          (): Unit
+        }
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+    }
+    drain()
+    val first = batches.toList
+    assert(first.map(_._2.size) == List(17, 17, 6))
+    val second = first(1)
+    assert(second._2.map(_._1).distinct.size == math.min(4, spark.sparkContext.defaultParallelism),
+      s"partitions of the second batch: ${second._2}")
+    Seq(2L, 1L).foreach { id =>
+      Files.delete(Paths.get(ck, "commits", id.toString))
+      Files.deleteIfExists(Paths.get(ck, "commits", s".$id.crc"))
+    }
+    Files.delete(Paths.get(ck, "offsets", "2"))
+    Files.deleteIfExists(Paths.get(ck, "offsets", ".2.crc"))
+    batches.clear()
+    drain()
+    assert(batches.toList.headOption == Some(second),
+      s"the replayed batch must plan the same partitions: ${batches.toList}")
   }
 }

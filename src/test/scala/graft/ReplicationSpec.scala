@@ -501,4 +501,59 @@ class ReplicationSpec extends SparkSpecBase {
       assert(session.conf.getAll.get(key) == prior, s"prior $prior")
     }
   }
+
+  test("a small streamed batch runs one task in the tag barrier and the stages that read it") {
+    // 8 segments of 25 events (about 9 KB of log), one trigger: far below
+    // spark.sql.files.openCostInBytes, so the source plans one partition
+    val log = commitLog((0 until 8).map(sg => (0 until 25).map { j =>
+      val id = sg * 25L + j
+      ev(id, 1000L + id, id % 31, if (j == 7) "bogus" else Seq("signup", "view", "error")(j % 3))
+    }))
+    withSQLConf("spark.graft.materialize" -> "local") {
+      val cfg = freshCfg().copy(eventLog = Some((log, 1000L)))
+      val m = Harness.measure(spark)(ReplicationJob.start(spark, cfg).awaitTermination(120000))
+      // in stage order: the tag barrier, the fold's map side, the DLQ
+      // write and the state write (4, 4, 1 and 1 tasks when the source
+      // planned one partition per segment)
+      val tasks = m.stages.sortBy(_.stageId).map(_.numTasks)
+      assert(tasks == Seq(1, 1, 1, 1), s"tasks per stage: $tasks")
+      assert(ReplicationJob.targetState(spark, cfg).count() == 31L)
+      assert(spark.read.parquet(cfg.dlqDir).count() == 8L)
+    }
+  }
+
+  Seq("local", "persist").foreach { mode =>
+    test(s"$mode mode: the DLQ task count is read off the tagged batch without a SQL execution") {
+      import spark.implicits._
+      withSQLConf("spark.graft.materialize" -> mode) {
+        val cfg = freshCfg()
+        def batch(b: Long) = rowsDf(((0L until 11L).map(j =>
+          row(b * 100 + j, 1000 * b + j, j % 4, "view")) :+ row(b * 100 + 50, 1000 * b + 77, 9, "bogus")): _*)
+        ReplicationJob.processBatch(spark, batch(0), cfg, batchId = 0L)
+        ReplicationJob.processBatch(spark, batch(1), cfg, batchId = 1L)
+        val executions = new java.util.concurrent.atomic.AtomicInteger
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+            e match {
+              case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+                executions.incrementAndGet()
+              case _ =>
+            }
+        }
+        spark.sparkContext.addSparkListener(listener)
+        try Harness.measure(spark)(ReplicationJob.processBatch(spark, batch(2), cfg, batchId = 2L))
+        finally spark.sparkContext.removeSparkListener(listener)
+        // the tag barrier, the fold + state write and the DLQ write; the
+        // DLQ task count read through `tagged.rdd` posted a fourth
+        assert(executions.get() == 3, s"${executions.get()} SQL executions")
+        val dlq = spark.read.parquet(cfg.dlqDir)
+          .select("event_id", "error_type", "failed_at_us", "resolution_status", "_batch_id")
+          .as[(Long, String, Long, String, Long)].collect().toSet
+        assert(dlq == (0L to 2L).map(b =>
+          (b * 100 + 50, "SCHEMA_MISMATCH", 1000 * b + 77, "PENDING", b)).toSet, s"DLQ rows: $dlq")
+        assert((0L to 2L).map(dlqFiles(cfg, _)) == Seq(1L, 1L, 1L))
+        assert(ReplicationJob.targetState(spark, cfg).count() == 4L)
+      }
+    }
+  }
 }
