@@ -7,6 +7,7 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -43,9 +44,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale/recovery shape:
   *  - a micro-batch's segment slices are packed, in log order and never
-  *    split, into partitions sized by their bytes: one partition below
-  *    `spark.sql.files.openCostInBytes`, at most one per core above it,
-  *    no shuffle; a batch read keeps one partition per segment;
+  *    split, into partitions sized by their bytes: one per
+  *    [[EventLogSource.TaskBytes]] of log, at most one per core, no
+  *    shuffle; a batch read keeps one partition per segment;
   *  - offsets are exactly-once replayable (checkpoint stores the JSON
   *    offset; planInputPartitions re-plans the same partitions from it);
   *  - ST6 backpressure via SupportsAdmissionControl: `maxRowsPerTrigger`
@@ -130,6 +131,23 @@ object EventLogSource {
 
   def countRows(dir: String, seg: String): Long =
     scanLines(Paths.get(dir, seg), 0L, Long.MaxValue)._1
+
+  /** Log bytes one task of a streamed micro-batch reads before the batch
+    * spreads over another core. Each task pays a fixed cost (stored-block
+    * size estimation, projection codegen, parser setup), so splitting a
+    * small batch over every core buys little but that cost; a batch of a
+    * few MB in one task leaves cores idle instead. On perfbench's
+    * catchup_drain (4 cores, `BENCH_PAIRS_r25_midsize.jsonl`), against
+    * one partition per core: a 1.1 MB batch in one task used 12% less
+    * CPU and drained as fast within noise; a 2.2 MB batch in one task
+    * drained 17% slower, and in two tasks used 11% less CPU and drained
+    * as fast within noise.
+    * 1.5 MiB lies between the two sizes. Spark's
+    * `spark.sql.files.openCostInBytes` (4 MB) sizes splits for its own
+    * file scans, whose bytes cost far less to read than these JSON lines
+    * cost to parse and fold; it put the 2.2 MB batch in one task.
+    */
+  val TaskBytes: Long = 3L << 19
 
   /** Split `items` (each with its size), in order, into min(`parts`,
     * items) contiguous non-empty groups: each group takes items while its
@@ -292,7 +310,8 @@ final class EventLogScan(path: String, maxRowsPerTrigger: Long,
   */
 final class EventLogMicroBatchStream(path: String, maxRows: Long,
     admissionChannel: Option[String] = None,
-    tailQuiesceMs: Long = -1L)
+    tailQuiesceMs: Long = -1L,
+    taskBytes: Long = EventLogSource.TaskBytes)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -490,22 +509,17 @@ final class EventLogMicroBatchStream(path: String, maxRows: Long,
   }
 
   /** The batch's slices packed, in log order, into
-    * P = clamp(ceil(B / openCostInBytes), 1, defaultParallelism)
-    * partitions of about B/P bytes each, B the batch's log bytes. Spark's
-    * `spark.sql.files.openCostInBytes` is what it counts opening one more
-    * input split as worth in bytes, so a batch smaller than that runs in
-    * one task per stage, and one of at least that many bytes per core
-    * still spreads over every core. A slice is never split; the reader
-    * chains a partition's slices.
+    * P = clamp(ceil(B / taskBytes), 1, defaultParallelism) partitions of
+    * about B/P bytes each, B the batch's log bytes: a batch of at most
+    * `taskBytes` runs in one task per stage, and one of at least that
+    * many bytes per core spreads over every core. A slice is never split;
+    * the reader chains a partition's slices.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val sized = slices(start, end)
-    val spark = org.apache.spark.sql.SparkSession.active
-    val openCost = math.max(1L, org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.openCostInBytes")))
     val bytes = sized.map(_._2).sum
-    val parts = math.max(1L, math.min((bytes + openCost - 1) / openCost,
-      spark.sparkContext.defaultParallelism.toLong)).toInt
+    val parts = math.max(1L, math.min((bytes + taskBytes - 1) / taskBytes,
+      SparkSession.active.sparkContext.defaultParallelism.toLong)).toInt
     EventLogSource.pack(sized, parts).map(EventLogSlices(_): InputPartition).toArray
   }
 

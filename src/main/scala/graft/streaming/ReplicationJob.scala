@@ -36,8 +36,8 @@ import graft.sink.{LwwStateStore, ParquetStateStore}
   * (`readStream.format("kafka")` + the same transform chain). Each
   * micro-batch is sized from its own input, not by a setting:
   *  - the commit-log source ([[EventLogSource]]) packs a batch into
-  *    partitions by its bytes, one per `spark.sql.files.openCostInBytes`
-  *    up to one per core, so a small batch runs one task per stage;
+  *    partitions by its bytes, one per [[EventLogSource.TaskBytes]] up
+  *    to one per core, so a small batch runs one task per stage;
   *  - any source's batch is then packed with a narrow coalesce to at most
   *    `defaultParallelism` partitions before it is tagged, so the tag
   *    barrier, the fold's map side and the DLQ write never run more than
@@ -287,10 +287,11 @@ object ReplicationJob {
     // query-execution listener), hence the bounded wait in [[controlRow]].
     //
     // Packed first with a narrow coalesce to at most one partition per
-    // core: a source hands over one partition per segment slice / file /
-    // topic partition, and every stage over the tagged batch would
-    // otherwise inherit that count. coalesce never shuffles and never adds
-    // partitions.
+    // core: the Kafka and parquet sources hand over one partition per
+    // topic partition / file, and every stage over the tagged batch would
+    // otherwise inherit that count. The event-log source already plans at
+    // most one per core, so there it changes nothing. coalesce never
+    // shuffles and never adds partitions.
     val obs = Observation()
     val tagged = graft.util.Materialize.stable(
       batch.coalesce(spark.sparkContext.defaultParallelism)
@@ -385,7 +386,9 @@ object ReplicationJob {
     var dlqErr: Throwable = null
     val (dlqN, batchN) = (ctl.getAs[Long]("dlq_n"), ctl.getAs[Long]("batch_n"))
     if (dlqN > 0) {
-      val parts = graft.util.Materialize.numPartitions(tagged)
+      // the physical RDD's count: `tagged.rdd` would build a deserializing
+      // RDD and post a SQL execution of its own
+      val parts = tagged.queryExecution.toRdd.getNumPartitions
       val dlqParts = ((parts * dlqN + batchN - 1) / batchN).toInt
       // The batch's watermark `failed_at_us` reaches the rows as data
       // from a one-row frame, never as a literal: whole-stage codegen

@@ -1,8 +1,6 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization of a DataFrame that feeds multiple plan branches
@@ -76,18 +74,6 @@ object Materialize {
         list.size()
       }
     }
-
-  /** Partition count of a frame returned by [[stable]] or [[barrier]],
-    * read off the materialized data without planning the frame:
-    * `df.rdd` would build a deserializing RDD and post a SQL execution of
-    * its own.
-    */
-  def numPartitions(df: DataFrame): Int = df.queryExecution.withCachedData match {
-    case r: LogicalRDD => r.rdd.getNumPartitions
-    case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.getNumPartitions
-    case other => throw new IllegalArgumentException(
-      s"not a materialized frame: ${other.nodeName}")
-  }
 
   /** Materialization barrier for OVERWRITE-WHAT-YOU-READ plans (a state
     * store rewriting the files its own input scan reads): unlike

@@ -558,12 +558,24 @@ class EventLogSourceSpec extends SparkSpecBase {
     stream.planInputPartitions(start, end).toSeq
       .map(_.asInstanceOf[graft.streaming.EventLogSlices].slices)
 
-  /** P = clamp(ceil(bytes / openCost), 1, defaultParallelism), at most one
-    * partition per slice.
+  /** P = clamp(ceil(bytes / taskBytes), 1, defaultParallelism), at most
+    * one partition per slice.
     */
-  private def expectedParts(bytes: Long, openCost: Long, slices: Int): Int =
-    Seq(math.max(1L, (bytes + openCost - 1) / openCost),
+  private def expectedParts(bytes: Long, taskBytes: Long, slices: Int): Int =
+    Seq(math.max(1L, (bytes + taskBytes - 1) / taskBytes),
       spark.sparkContext.defaultParallelism.toLong, slices.toLong).min.toInt
+
+  /** Segments `seg-000.log`.. of `rows` lines each, every line exactly
+    * `lineBytes` bytes with its newline.
+    */
+  private def writeFixedSegs(dir: String, segs: Int, rows: Int, lineBytes: Int): Unit =
+    (0 until segs).foreach { i =>
+      val lines = (0 until rows).map { j =>
+        val head = s"""{"event_id":${i * rows + j},"pad":""""
+        head + "x" * (lineBytes - head.length - 3) + "\"}"
+      }
+      Files.writeString(Paths.get(dir, f"seg-$i%03d.log"), lines.mkString("", "\n", "\n"))
+    }
 
   test("packed partitions deliver the per-slice rows in order and never split a slice") {
     val rnd = new scala.util.Random(29)
@@ -586,94 +598,105 @@ class EventLogSourceSpec extends SparkSpecBase {
         Files.readAllLines(Paths.get(dir, seg)).toArray.toSeq.map(_.toString)
           .zipWithIndex.map { case (v, o) => (seg, o.toLong, v) }
       }.filterNot(_._3 == "{\"event_id\":-1")
-      for (openCost <- Seq(1L, 500L, 3000L, 4L << 20)) {
-        withSQLConf("spark.sql.files.openCostInBytes" -> openCost.toString) {
-          val stream = new graft.streaming.EventLogMicroBatchStream(dir, 100L)
-          // walk the log in random-sized triggers, mid-segment anchors included
-          var start = stream.initialOffset().asInstanceOf[EventLogOffset]
-          val delivered = Seq.newBuilder[(String, Long, String)]
-          var more = true
-          while (more) {
-            val end = stream.latestOffset(start, limit(1 + rnd.nextInt(60)))
-              .asInstanceOf[EventLogOffset]
-            more = end != start
-            val sized = stream.slices(start, end)
-            val parts = planned(stream, start, end)
-            assert(parts.flatten == sized.map(_._1),
-              s"layout $layout openCost $openCost: partitions must chain the slices whole, in order")
-            assert(parts.size == (if (sized.isEmpty) 0
-              else expectedParts(sized.map(_._2).sum, openCost, sized.size)),
-              s"layout $layout openCost $openCost: ${parts.size} partitions for $sized")
-            val perSlice = sized.map { case (sl, _) =>
-              readSlice(sl.dir, sl.seg, sl.from, sl.until, sl.fromByte)
-            }
-            // a slice's size is the bytes of its lines, newlines included
-            assert(sized.map(_._2) == perSlice.map(_.map(_.getBytes("UTF-8").length + 1L).sum),
-              s"layout $layout: slice sizes $sized")
-            val rows = stream.planInputPartitions(start, end).toSeq.flatMap(readPartition)
-            assert(rows == sized.zip(perSlice).flatMap { case ((sl, _), vs) =>
-              vs.zipWithIndex.map { case (v, i) => (sl.seg, sl.from + i, v) }
-            }, s"layout $layout openCost $openCost: rows differ from per-slice reading")
-            delivered ++= rows
-            start = end
+      for (taskBytes <- Seq(1L, 500L, 3000L, EventLogSource.TaskBytes)) {
+        val stream = new graft.streaming.EventLogMicroBatchStream(dir, 100L, taskBytes = taskBytes)
+        // walk the log in random-sized triggers, mid-segment anchors included
+        var start = stream.initialOffset().asInstanceOf[EventLogOffset]
+        val delivered = Seq.newBuilder[(String, Long, String)]
+        var more = true
+        while (more) {
+          val end = stream.latestOffset(start, limit(1 + rnd.nextInt(60)))
+            .asInstanceOf[EventLogOffset]
+          more = end != start
+          val sized = stream.slices(start, end)
+          val parts = planned(stream, start, end)
+          assert(parts.flatten == sized.map(_._1),
+            s"layout $layout taskBytes $taskBytes: partitions must chain the slices whole, in order")
+          assert(parts.size == (if (sized.isEmpty) 0
+            else expectedParts(sized.map(_._2).sum, taskBytes, sized.size)),
+            s"layout $layout taskBytes $taskBytes: ${parts.size} partitions for $sized")
+          val perSlice = sized.map { case (sl, _) =>
+            readSlice(sl.dir, sl.seg, sl.from, sl.until, sl.fromByte)
           }
-          assert(delivered.result() == log, s"layout $layout openCost $openCost: every row once")
+          // a slice's size is the bytes of its lines, newlines included
+          assert(sized.map(_._2) == perSlice.map(_.map(_.getBytes("UTF-8").length + 1L).sum),
+            s"layout $layout: slice sizes $sized")
+          val rows = stream.planInputPartitions(start, end).toSeq.flatMap(readPartition)
+          assert(rows == sized.zip(perSlice).flatMap { case ((sl, _), vs) =>
+            vs.zipWithIndex.map { case (v, i) => (sl.seg, sl.from + i, v) }
+          }, s"layout $layout taskBytes $taskBytes: rows differ from per-slice reading")
+          delivered ++= rows
+          start = end
         }
+        assert(delivered.result() == log, s"layout $layout taskBytes $taskBytes: every row once")
       }
     }
   }
 
-  test("the partition count follows the batch's bytes, openCostInBytes and the core count") {
+  test("the partition count follows the batch's bytes, TaskBytes and the core count") {
     val dir = tmpDir("evcount")
     (0 until 10).foreach(i => writeSeg(dir, f"seg-$i%03d.log", 50, from = 50 * i))
-    val stream = new graft.streaming.EventLogMicroBatchStream(dir, Long.MaxValue)
-    val start = stream.initialOffset().asInstanceOf[EventLogOffset]
-    val end = stream.latestOffset(start,
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-      .asInstanceOf[EventLogOffset]
     val bytes = (0 until 10).map(i => Files.size(Paths.get(dir, f"seg-$i%03d.log"))).sum
-    assert(stream.slices(start, end).map(_._2).sum == bytes)
     val cores = spark.sparkContext.defaultParallelism
-    def parts(openCost: Long) =
-      withSQLConf("spark.sql.files.openCostInBytes" -> openCost.toString)(
-        planned(stream, start, end).size)
-    // the default (4 MB) and anything at least the batch: one partition
-    assert(planned(stream, start, end).size == 1)
+    def parts(taskBytes: Long) = {
+      val stream = new graft.streaming.EventLogMicroBatchStream(dir, Long.MaxValue,
+        taskBytes = taskBytes)
+      val start = stream.initialOffset().asInstanceOf[EventLogOffset]
+      val end = stream.latestOffset(start,
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+        .asInstanceOf[EventLogOffset]
+      assert(stream.slices(start, end).map(_._2).sum == bytes)
+      planned(stream, start, end).size
+    }
+    // the default and anything at least the batch: one partition
+    assert(parts(EventLogSource.TaskBytes) == 1)
     assert(parts(bytes) == 1)
     assert(parts((bytes + 1) / 2) == math.min(2, cores))
-    // at least openCost bytes per core: every core; a smaller openCost
-    // still never more partitions than cores
+    // at least taskBytes per core: every core; a smaller taskBytes still
+    // never more partitions than cores
     assert(parts(bytes / cores) == cores)
     assert(parts(1L) == cores)
-    // through a stream: the conf reaches the stream's session
-    def streamedParts(openCost: String): Seq[Int] = {
+  }
+
+  test("a streamed batch of TaskBytes per core spreads over every core, a small one takes one") {
+    val cores = spark.sparkContext.defaultParallelism
+    // k × TaskBytes of log in 1 KiB lines over 8 segments: exactly k
+    // partitions, k = every core up to 4 (the data stays 8 MiB at most)
+    val k = math.min(cores, 4)
+    val lineBytes = 1024
+    def streamedParts(dir: String): Seq[Int] = {
       val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
-      withSQLConf("spark.sql.files.openCostInBytes" -> openCost) {
-        spark.readStream.format(Fmt).option("path", dir)
-          .option("maxRowsPerTrigger", 1000).load()
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            seen.synchronized { seen += b.rdd.getNumPartitions }; (): Unit
-          }
-          .option("checkpointLocation", tmpDir("ckcount"))
-          .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
-      }
+      spark.readStream.format(Fmt).option("path", dir)
+        .option("maxRowsPerTrigger", Long.MaxValue).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized { seen += b.rdd.getNumPartitions }; (): Unit
+        }
+        .option("checkpointLocation", tmpDir("ckcount"))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
       seen.toList
     }
-    assert(streamedParts("1k") == Seq(cores))
-    assert(streamedParts("4m") == Seq(1))
+    val big = tmpDir("evbig")
+    writeFixedSegs(big, 8, (k * EventLogSource.TaskBytes / lineBytes / 8).toInt, lineBytes)
+    assert((0 until 8).map(i => Files.size(Paths.get(big, f"seg-$i%03d.log"))).sum ==
+      k * EventLogSource.TaskBytes)
+    assert(streamedParts(big) == Seq(k))
+    val small = tmpDir("evsmall")
+    (0 until 10).foreach(i => writeSeg(small, f"seg-$i%03d.log", 50, from = 50 * i))
+    assert(streamedParts(small) == Seq(1))
   }
 
   test("a replayed batch plans the same partitions on a fresh source") {
-    // 8 segments of 5 rows, 17 rows a trigger, 16-byte openCost: the
-    // second batch spans 4 slices and is planned into 4 partitions
+    // 8 segments of 600 1-KiB rows, 2100 rows a trigger: the second batch
+    // spans 4 slices and between one and two TaskBytes, so it is planned
+    // into 2 partitions
     val dir = tmpDir("evreplan")
-    (0 until 8).foreach(i => writeSeg(dir, f"seg-$i%03d.log", 5, from = 5 * i))
+    writeFixedSegs(dir, 8, 600, 1024)
     val ck = tmpDir("ck")
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(Int, String, Long)])]
-    def drain(): Unit = withSQLConf("spark.sql.files.openCostInBytes" -> "16") {
+    def drain(): Unit =
       spark.readStream.format(Fmt).option("path", dir)
-        .option("maxRowsPerTrigger", 17).load()
+        .option("maxRowsPerTrigger", 2100).load()
         .writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           val rows = b.select(spark_partition_id(), col("segment"), col("offset"))
@@ -683,12 +706,12 @@ class EventLogSourceSpec extends SparkSpecBase {
         }
         .option("checkpointLocation", ck)
         .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
-    }
     drain()
     val first = batches.toList
-    assert(first.map(_._2.size) == List(17, 17, 6))
+    assert(first.map(_._2.size) == List(2100, 2100, 600))
     val second = first(1)
-    assert(second._2.map(_._1).distinct.size == math.min(4, spark.sparkContext.defaultParallelism),
+    assert(second._2.map(_._2).distinct.size == 4, s"segments of the second batch")
+    assert(second._2.map(_._1).distinct.size == math.min(2, spark.sparkContext.defaultParallelism),
       s"partitions of the second batch: ${second._2}")
     Seq(2L, 1L).foreach { id =>
       Files.delete(Paths.get(ck, "commits", id.toString))

@@ -504,7 +504,7 @@ class ReplicationSpec extends SparkSpecBase {
 
   test("a small streamed batch runs one task in the tag barrier and the stages that read it") {
     // 8 segments of 25 events (about 9 KB of log), one trigger: far below
-    // spark.sql.files.openCostInBytes, so the source plans one partition
+    // EventLogSource.TaskBytes, so the source plans one partition
     val log = commitLog((0 until 8).map(sg => (0 until 25).map { j =>
       val id = sg * 25L + j
       ev(id, 1000L + id, id % 31, if (j == 7) "bogus" else Seq("signup", "view", "error")(j % 3))
@@ -522,9 +522,10 @@ class ReplicationSpec extends SparkSpecBase {
     }
   }
 
-  Seq("local", "persist").foreach { mode =>
+  Seq("local", "persist", "checkpoint").foreach { mode =>
     test(s"$mode mode: the DLQ task count is read off the tagged batch without a SQL execution") {
       import spark.implicits._
+      if (mode == "checkpoint") spark.sparkContext.setCheckpointDir(tmpDir("rdd_ckpt"))
       withSQLConf("spark.graft.materialize" -> mode) {
         val cfg = freshCfg()
         def batch(b: Long) = rowsDf(((0L until 11L).map(j =>
