@@ -157,7 +157,7 @@ object Bench {
     //     boundary the reference's Kafka produce timestamp marks);
     //   - the ENGINE's own micro-batch pipeline (ReplicationJob
     //     .processBatch: validate → DLQ → one LWW fold of the batch's raw
-    //     rows into the bucketed state) consumes them through a real
+    //     rows into the state store) consumes them through a real
     //     streaming query; the COMMIT-VISIBLE time of a segment is the
     //     wall clock right after its batch's processBatch returns;
     //   - per-event latency = commit_visible(batch of segment) −

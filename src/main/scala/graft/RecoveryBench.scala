@@ -57,8 +57,7 @@ object RecoveryBench {
 
     val cfg = graft.streaming.ReplicationJob.Config(
       sourceDir = srcDir.toString, targetDir = s"$base/target",
-      dlqDir = s"$base/dlq", checkpointDir = s"$base/ckpt",
-      stateBuckets = Some(16))
+      dlqDir = s"$base/dlq", checkpointDir = s"$base/ckpt")
     // Phase 1: run live until `killAfter` batches committed, then
     // interrupt. maxFilesPerTrigger=1 inside start() makes batch count ==
     // segment count, so the kill leaves a known backlog.
@@ -84,8 +83,7 @@ object RecoveryBench {
     // Zero loss / zero dup: recovered state must equal a direct
     // single-batch fold of the full fixture into a fresh target.
     val oracleCfg = cfg.copy(targetDir = s"$base/oracle_target",
-      dlqDir = s"$base/oracle_dlq", checkpointDir = s"$base/oracle_ckpt",
-      stateBuckets = None)
+      dlqDir = s"$base/oracle_dlq", checkpointDir = s"$base/oracle_ckpt")
     graft.streaming.ReplicationJob.processBatch(spark, ev, oracleCfg)
     val keyCols = Seq("user_id", "_cdc_timestamp_micros", "_last_event_id")
     val got = graft.streaming.ReplicationJob.targetState(spark, cfg)

@@ -22,10 +22,10 @@ import graft.streaming.StreamingState
   * Scale shape: one hash-keyed LEFT ANTI join per batch (batch side is
   * trigger-bounded; the state side scans only the hash column, pruned by
   * the partition filter) + within-batch first-wins compaction (min doc
-  * id, the canonical-doc rule). At very large state, bucket the state
-  * store by hash so the per-batch anti-join co-locates instead of
-  * shuffling the state side — the same evolution path as
-  * BucketedParquetStateStore.
+  * id, the canonical-doc rule). The anti-join shuffles the state side on
+  * every batch. Catalog bucketing (`warehouse.Bucketing`) would remove
+  * that exchange, but only for a table written through the catalog, and
+  * this store is path-based; its cost at very large state is unmeasured.
   */
 final class StreamingDedup(spark: SparkSession, stateDir: String,
     idCol: String, textCol: String) {

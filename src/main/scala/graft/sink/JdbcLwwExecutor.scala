@@ -98,7 +98,7 @@ object JdbcLwwExecutor {
     // positioned incoming row — without them the NULL comparison voids
     // the update, the insert then hits the pk, and the row is
     // permanently unwritable, diverging from the parquet fold's
-    // null-loses ordering (StateLayout.survivesTruncate's rule). Bind
+    // null-loses ordering (ParquetStateStore.survivesTruncate's rule). Bind
     // order/count is unchanged: (ts, ts, tie).
     s"UPDATE ${t.table} SET ${nonPk.map(c => s"${q(c)} = ?").mkString(", ")}" +
       s" WHERE ${t.pk.map(c => s"${q(c)} = ?").mkString(" AND ")}" +
@@ -134,7 +134,7 @@ object JdbcLwwExecutor {
     * flag `docker/connectors/postgres-sink.json:13-14`): ALTER in any of
     * `wanted` (name → SQL type) the table doesn't have yet. Additive only
     * and always nullable — old rows read NULL for a new column, the same
-    * rule the parquet stores' padUnion applies — so propagation needs no
+    * rule ParquetStateStore's padUnion applies — so propagation needs no
     * table rewrite and no stream restart. Column presence is compared
     * case-insensitively (unquoted identifiers fold differently per
     * engine). Idempotent: re-running with the same list adds nothing.
@@ -314,7 +314,7 @@ object JdbcLwwExecutor {
     * DELETE of every row that loses the (ts, tie) ordering; strictly
     * newer rows survive, re-running is a no-op (replay-idempotent, same
     * contract as [[ParquetStateStore.truncate]]). Null (ts, tie) carries
-    * no ordering info and is cleared, matching the parquet stores.
+    * no ordering info and is cleared, matching the parquet store.
     * Returns rows deleted.
     */
   def truncateTable(conn: Connection, t: Target, tsUs: Long, tieId: Long): Long = {

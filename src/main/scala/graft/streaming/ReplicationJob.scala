@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.types._
 
 import graft.ops.{EventOps, Lww}
-import graft.sink.{LwwStateStore, ParquetStateStore}
+import graft.sink.ParquetStateStore
 
 /** The always-on replication path (reference lifecycle SURVEY.md §3.1):
   *
@@ -150,15 +150,11 @@ object ReplicationJob {
       eventLog: Option[(String, Long)] = None,
       /** When set, the sink executes the LWW upsert against a live JDBC
         * target (per-partition connections, statement batching, retry +
-        * breaker — S9/S10) instead of the parquet state store.
+        * breaker — S9/S10) instead of the parquet state store at
+        * `targetDir` ([[graft.sink.ParquetStateStore]], a bare local path
+        * or a `file:` URI), which rewrites the whole table on every batch.
         */
       jdbcTarget: Option[graft.sink.JdbcLwwExecutor.Target] = None,
-      /** When set, the parquet state store is hash-bucketed with this many
-        * buckets and each micro-batch rewrites only the buckets it
-        * touches (the 100 TB state shape); None = the simple whole-table
-        * store.
-        */
-      stateBuckets: Option[Int] = None,
       /** Opt-in RED metrics (ST11/heartbeat + /metrics surface): when set,
         * each batch records events/errors/latency into the registry. Off
         * by default — recording adds one conditional count per valid type
@@ -322,19 +318,11 @@ object ReplicationJob {
       .withColumn("_cdc_deleted", col("event_type") === cfg.deleteType)
       .withColumn("_cdc_timestamp_micros", col("ts_us"))
       .withColumn("_last_event_id", col("event_id"))
-    // The target, chosen once per batch: a JDBC table, or a parquet
-    // state store (key-bucketed or whole-table) that both the upsert and
-    // the truncate below run against.
-    val target: Either[graft.sink.JdbcLwwExecutor.Target, LwwStateStore] =
-      cfg.jdbcTarget.toLeft(cfg.stateBuckets match {
-        case Some(nb) =>
-          new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id", nb)
-        case None =>
-          new ParquetStateStore(spark, cfg.targetDir, cfg.pk,
-            "_cdc_timestamp_micros", "_last_event_id")
-      })
-    // The parquet stores fold the raw rows together with state in one
+    // The target, chosen once per batch: a JDBC table, or the parquet
+    // state store that both the upsert and the truncate below run against.
+    val target: Either[graft.sink.JdbcLwwExecutor.Target, ParquetStateStore] =
+      cfg.jdbcTarget.toLeft(stateStore(spark, cfg))
+    // The parquet store folds the raw rows together with state in one
     // max_by (the fold is associative and idempotent, so compacting the
     // batch first would only add a shuffle). The JDBC executor writes one
     // row per key, so that arm compacts the batch first.
@@ -556,12 +544,19 @@ object ReplicationJob {
       }
     }
 
+  /** The parquet state store at `cfg.targetDir`, keyed and ordered as
+    * [[processBatch]] folds it.
+    */
+  private def stateStore(spark: SparkSession, cfg: Config): ParquetStateStore =
+    new ParquetStateStore(spark, cfg.targetDir, cfg.pk, "_cdc_timestamp_micros", "_last_event_id")
+
   /** Read current target state, optionally hiding soft-deleted rows (the
-    * reference's `_cdc_deleted` filter views).
+    * reference's `_cdc_deleted` filter views). It reads through the state
+    * store: with its stored schema, so no Spark job infers it from the
+    * parquet footers, and after the store's swap-crash recovery.
     */
   def targetState(spark: SparkSession, cfg: Config, includeDeleted: Boolean = true): DataFrame = {
-    val raw = spark.read.parquet(cfg.targetDir)
-    val df = if (raw.columns.contains("_bucket")) raw.drop("_bucket") else raw
+    val df = stateStore(spark, cfg).read()
     if (includeDeleted) df else df.filter(!col("_cdc_deleted"))
   }
 }

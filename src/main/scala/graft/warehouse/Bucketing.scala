@@ -21,11 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `sortBy` on the same key makes each bucket file pre-sorted, so
   *    the sort-merge join skips its per-task sort too.
   *
-  * (The streaming LWW state store solves the same problem with its own
-  * hash-bucketed directory layout — `sink.BucketedParquetStateStore` —
-  * because streaming upserts rewrite buckets in place; this module is
-  * the BATCH warehouse counterpart using Spark's native catalog
-  * bucketing.)
+  * (This module is batch-warehouse only. The streaming LWW state store,
+  * `sink.ParquetStateStore`, is one unbucketed table that each
+  * micro-batch rewrites whole.)
   */
 object Bucketing {
 

@@ -330,7 +330,7 @@ class EventLogSourceSpec extends SparkSpecBase {
     } finally AdmissionControl.clear(ch)
   }
 
-  test("10k-event drain through the source + bucketed store matches the batch fold") {
+  test("10k-event drain through the source + state store matches the batch fold") {
     import graft.streaming.ReplicationJob
     import graft.ops.{EventOps, Lww}
     val sf01 = "/root/testdata/sf0.01"
@@ -350,8 +350,7 @@ class EventLogSourceSpec extends SparkSpecBase {
     val base = tmpDir("evrepl2")
     val cfg = ReplicationJob.Config(
       sourceDir = dir, targetDir = s"$base/target", dlqDir = s"$base/dlq",
-      checkpointDir = s"$base/ckpt", eventLog = Some((dir, 4000L)),
-      stateBuckets = Some(16))
+      checkpointDir = s"$base/ckpt", eventLog = Some((dir, 4000L)))
     ReplicationJob.start(spark, cfg).awaitTermination(300000)
     // expected: identical validate -> LWW fold, computed in one batch pass
     val err = EventOps.errorType(col("event_type"), col("value"), col("user_id"),

@@ -310,8 +310,7 @@ class MultiTableReplicationSpec extends SparkSpecBase {
         jdbcTarget = Some(graft.sink.JdbcLwwExecutor.Target(
           url, "cdc_users_mt", cols, pk = Seq("id"))))
       val ordersCfg = ordersCfg0.copy(
-        eventLog = Some((ordersLog, 2L)), backpressureChannel = Some("mt-orders"),
-        stateBuckets = Some(4))
+        eventLog = Some((ordersLog, 2L)), backpressureChannel = Some("mt-orders"))
       MultiTableReplication.runAvailableNow(spark, Seq(usersCfg, ordersCfg))
 
       val users = spark.read.format("jdbc")
@@ -424,16 +423,6 @@ class MultiTableReplicationSpec extends SparkSpecBase {
     val state = store.read().select("ks", "cc", "v").as[(String, Int, String)]
       .collect().toSet
     assert(state == Set(("a", 1, "x2"), ("a", 2, "y")), s"state: $state")
-
-    val bdir = tmpDir("compositeb") + "/state"
-    val bstore = new graft.sink.BucketedParquetStateStore(
-      spark, bdir, Seq("ks", "cc"), "ts_us", "eid", 4)
-    bstore.upsert(Seq(("a", 1, 100L, 1L, "x"), ("b", 1, 100L, 2L, "y"))
-      .toDF("ks", "cc", "ts_us", "eid", "v"))
-    bstore.upsert(Seq(("a", 1, 300L, 3L, "x3")).toDF("ks", "cc", "ts_us", "eid", "v"))
-    val bst = bstore.read().select("ks", "cc", "v").as[(String, Int, String)]
-      .collect().toSet
-    assert(bst == Set(("a", 1, "x3"), ("b", 1, "y")), s"bucketed state: $bst")
   }
 
   test("three same-shaped tables compile each class once: nothing a first table has not compiled") {

@@ -113,29 +113,6 @@ class SchemaEvolutionStreamSpec extends SparkSpecBase {
     assert(store.purgeExpired("expiry_us", nowUs) == 0L, "purge is idempotent")
   }
 
-  test("TTL purge: bucketed store rewrites only affected buckets, drops emptied ones") {
-    import graft.sink.BucketedParquetStateStore
-    import spark.implicits._
-    val dir = tmpDir("ttlb") + "/state"
-    val store = new BucketedParquetStateStore(spark, dir, "k", "ts_us", "eid", numBuckets = 8)
-    val nowUs = 1000000000L
-    // 200 live keys + every key of one specific bucket expired
-    val live = (1L to 200L).map(i => (i, 10L, i, Option.empty[Long]))
-    store.upsert(live.toDF("k", "ts_us", "eid", "expiry_us"))
-    val bucketOf = spark.range(1, 201).select(col("id"),
-      pmod(hash(col("id")), lit(8)).as("b")).as[(Long, Int)].collect().toMap
-    val victimBucket = bucketOf(1L)
-    val victims = (1L to 200L).filter(bucketOf(_) == victimBucket)
-    // expire exactly the victim bucket's keys
-    store.upsert(victims.map(i => (i, 20L, i + 1000L, Some(nowUs - 1L)))
-      .toDF("k", "ts_us", "eid", "expiry_us"))
-    assert(store.purgeExpired("expiry_us", nowUs) == victims.size.toLong)
-    val left = store.read().select("k").as[Long].collect().toSet
-    assert(left == (1L to 200L).toSet -- victims)
-    assert(!Files.exists(Paths.get(s"$dir/_bucket=$victimBucket")),
-      "fully-expired bucket dir must be removed")
-  }
-
   test("drop-column is graceful in every mode and target data is preserved") {
     // test_schema_drop_column.py: a column vanishing from the declared
     // schema must not break the pipeline, and the target keeps it

@@ -17,8 +17,8 @@ import graft.streaming.ReplicationJob.Config
   * (ts, event_id) ordering against the truncate watermark are cleared, so
   * late-but-newer upserts — same batch or already stored — survive, and
   * replaying a truncate-bearing batch is a no-op (the ST5 exactly-once
-  * construction extends to control operations). Verified against all three
-  * targets: plain parquet store, bucketed store, live JDBC.
+  * construction extends to control operations). Verified against both
+  * targets: the parquet state store and live JDBC.
   */
 class TruncateSpec extends SparkSpecBase {
   import spark.implicits._
@@ -33,10 +33,10 @@ class TruncateSpec extends SparkSpecBase {
       .withColumn("ts", col("ts_us") * 1000)
       .withColumn("props", lit(null).cast("string"))
 
-  private def freshCfg(stateBuckets: Option[Int] = None): Config = {
+  private def freshCfg(): Config = {
     val base = tmpDir("trunc")
     Config(sourceDir = base, targetDir = s"$base/target", dlqDir = s"$base/dlq",
-      checkpointDir = s"$base/ckpt", validTypes = kinds, stateBuckets = stateBuckets)
+      checkpointDir = s"$base/ckpt", validTypes = kinds)
   }
 
   private def stateOf(cfg: Config): Map[Long, Long] =
@@ -85,21 +85,18 @@ class TruncateSpec extends SparkSpecBase {
     runScenario(cfg, () => stateOf(cfg))
   }
 
-  test("bucketed parquet store: per-bucket truncate rewrite, same semantics") {
-    val cfg = freshCfg(stateBuckets = Some(4))
-    runScenario(cfg, () => stateOf(cfg))
-  }
-
-  test("bucketed store: a truncate that clears everything removes all buckets") {
-    val cfg = freshCfg(stateBuckets = Some(4))
+  test("plain parquet store: state rebuilds after a truncate that clears everything") {
+    val cfg = freshCfg()
     ReplicationJob.processBatch(spark, batchDf(
       (1L, 100L, 1L, "view", 1.0),
       (2L, 200L, 2L, "click", 2.0)), cfg, batchId = 0L)
     ReplicationJob.processBatch(spark, batchDf(
       (9L, 900L, 0L, "truncate", 0.0)), cfg, batchId = 1L)
-    val store = new graft.sink.BucketedParquetStateStore(spark, cfg.targetDir,
-      "user_id", "_cdc_timestamp_micros", "_last_event_id", 4)
-    assert(!store.exists, "all-clearing truncate must leave no bucket directories")
+    assert(stateOf(cfg).isEmpty, "an all-clearing truncate leaves an empty state")
+    // a replay of the truncate batch clears nothing more
+    ReplicationJob.processBatch(spark, batchDf(
+      (9L, 900L, 0L, "truncate", 0.0)), cfg, batchId = 1L)
+    assert(stateOf(cfg).isEmpty)
     // state rebuilds from scratch afterwards
     ReplicationJob.processBatch(spark, batchDf(
       (10L, 1000L, 7L, "signup", 1.0)), cfg, batchId = 2L)
