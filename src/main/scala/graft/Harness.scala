@@ -9,7 +9,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted,
   SparkListenerTaskEnd, StageInfo}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftCodegenBridge, SparkSession}
 
 /** The session and measurement harness of the tool entry points (Bench,
   * Verify, PlanLint, RecoveryBench, PerfProbe and the Scale/Skew/Bytes
@@ -24,7 +24,10 @@ object Harness {
 
   /** A `local[cores]` session on the loopback interface with AQE on, no
     * UI and UTC session time, logging at WARN. `extra` confs are applied
-    * last, so a tool can override any of these.
+    * last, so a tool can override any of these. The codegen cache is sized
+    * right after `getOrCreate`, before anything can compile: the session's
+    * conf is then the one an explicit `spark.sql.codegen.cache.maxEntries`
+    * (in `extra` or a `-D` property) is read from.
     */
   def session(shufflePartitions: Int = cores,
       extra: Seq[(String, String)] = Nil): SparkSession = {
@@ -38,6 +41,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
+    GraftCodegenBridge.sizeCodegenCache()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.LogHygiene.muteBoundedWindowWarn()
     spark
@@ -48,7 +52,10 @@ object Harness {
     * runs and is not listed), each finished task's
     * `(stageId, executor run ms)` and the classes codegen compiled (a
     * JVM-wide count: a cache hit compiles nothing, and a concurrent
-    * body outside `measure` would be counted too).
+    * body outside `measure` would be counted too). The cache holds
+    * `GraftCodegenBridge.CacheMaxEntries` (8192) classes, set by
+    * [[session]], `SparkEntry` and `ReplicationJob` before their first
+    * compile, so a warm rerun of a query reads 0 here.
     */
   final case class Measured[A](value: A, seconds: Double, jobs: Int,
       stages: Seq[StageInfo], tasks: Seq[(Int, Long)], compiles: Long)

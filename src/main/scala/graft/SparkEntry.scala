@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftCodegenBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Lww
@@ -11,8 +11,13 @@ import graft.queries.{AdversarialQueries, AuditQueries, Cdc2Queries, CdcQueries,
   * operator, each delegating to the library modules (`graft.ops`,
   * `graft.recon`, `graft.llm`, `graft.queries`). `oracleSql` carries the
   * DuckDB-equivalent SQL the driver uses as correctness oracle.
+  *
+  * A caller may build its own session and enter here, so this object's
+  * initializer sizes the codegen cache (`GraftCodegenBridge`) before the
+  * first query is built.
   */
 object SparkEntry {
+  GraftCodegenBridge.sizeCodegenCache()
 
   /** Flagship: the replication-path core — LWW-compact the sf0.001 event
     * stream to final per-key state (reference semantics of

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ops.Lww
+import graft.util.LocalPaths
 
 /** LWW upsert sinks.
   *
@@ -103,7 +104,10 @@ final class ParquetStateStore(
   def this(spark: SparkSession, dir: String, key: String, tsCol: String, tieCol: String) =
     this(spark, dir, Seq(key), tsCol, tieCol)
 
-  private val path: Path = localPath(dir).toAbsolutePath
+  private val path: Path = LocalPaths.of(dir)(scheme =>
+    s"ParquetStateStore keeps its state on the local file system; '$dir' has " +
+      s"scheme '$scheme'. Replicate into a remote table through a JDBC target " +
+      "(ReplicationJob.Config.jdbcTarget) instead.").toAbsolutePath
   private def sibling(suffix: String): Path = path.resolveSibling(s"${path.getFileName}$suffix")
   private val oldPath: Path = sibling(".old")
   private val tmpPath: Path = sibling(".tmp")
@@ -233,22 +237,6 @@ final class ParquetStateStore(
 }
 
 object ParquetStateStore {
-
-  /** The local path of a state dir given as a bare path or a `file:` URI.
-    * `Paths.get` alone would take `file:///x` for a relative path named
-    * `file:`, which never exists.
-    */
-  private def localPath(dir: String): Path = {
-    val uri = new org.apache.hadoop.fs.Path(dir).toUri
-    uri.getScheme match {
-      case null => Paths.get(dir)
-      case "file" => Paths.get(uri.getPath)
-      case other => throw new IllegalArgumentException(
-        s"ParquetStateStore keeps its state on the local file system; '$dir' has " +
-          s"scheme '$other'. Replicate into a remote table through a JDBC target " +
-          "(ReplicationJob.Config.jdbcTarget) instead.")
-    }
-  }
 
   private def deleteRec(p: Path): Unit =
     if (Files.exists(p))

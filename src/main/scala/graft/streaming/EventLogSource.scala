@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.LocalPaths
+
 /** Custom DataSource-v2 streaming source replaying a commit log — the
   * S1 capture boundary as a first-class Spark source rather than a
   * pre-parsed file stream (reference: the Cassandra CDC agent tails
@@ -263,13 +265,18 @@ object EventLogOffset {
 
 final class EventLogTable(path: String) extends Table with SupportsRead {
   require(path != null, "option 'path' is required")
+  // the log's local directory, resolved once for every listing and read:
+  // `file:///x` must read /x, not a relative directory named `file:`
+  private val dir: String = LocalPaths.of(path)(scheme =>
+    s"EventLogSource reads its commit log from the local file system; '$path' has " +
+      s"scheme '$scheme'").toString
   override def name(): String = s"eventlog:$path"
   override def schema(): StructType = EventLogSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new EventLogScan(path,
+      override def build(): Scan = new EventLogScan(dir,
         Option(options.get("maxRowsPerTrigger")).map(_.toLong).getOrElse(2048L),
         Option(options.get("admissionChannel")),
         Option(options.get("tailQuiesceMs")).map(_.toLong).getOrElse(-1L))

@@ -3,7 +3,7 @@ package graft.streaming
 import scala.concurrent.{Await, Future, TimeoutException}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCodegenBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -58,9 +58,17 @@ import graft.sink.ParquetStateStore
   *    artifact isolation, so its tasks share one class loader, and with it
   *    the codegen cache, with every earlier query. A session that carries
   *    session-scoped artifacts (`addArtifact`) keeps isolation, since that
-  *    is what isolation is for.
+  *    is what isolation is for;
+  *  - the cache those classes live in holds
+  *    `GraftCodegenBridge.CacheMaxEntries` (8192) of them, not Spark's
+  *    default 100, so reconciliation, checks or batch queries run between
+  *    drains do not evict a drain's classes. This object's initializer
+  *    sets that bound before [[start]], [[startStream]] or a direct
+  *    [[processBatch]] caller can compile; an explicit
+  *    `spark.sql.codegen.cache.maxEntries` is kept.
   */
 object ReplicationJob {
+  GraftCodegenBridge.sizeCodegenCache()
 
   /** Dedicated daemon pool for the per-batch concurrent sink write (see
     * processBatch): a cached pool so an idle stream holds no threads,

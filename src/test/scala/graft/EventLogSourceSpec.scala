@@ -77,6 +77,32 @@ class EventLogSourceSpec extends SparkSpecBase {
     assert(r.head.getString(0) == """{"event_id":7}""" && r.head.getLong(1) == 0L)
   }
 
+  test("a file: URI log drains the same rows as its bare path; another scheme is refused") {
+    val dir = tmpDir("evuri")
+    writeSeg(dir, "seg-000.log", 7)
+    writeSeg(dir, "seg-001.log", 5, from = 7)
+    def drain(path: String): Set[(String, String, Long)] = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      spark.readStream.format(Fmt).option("path", path).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = b.as[(String, String, Long)].collect()
+          seen.synchronized { seen ++= rows }; (): Unit
+        }
+        .option("checkpointLocation", tmpDir("ck"))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+      seen.toSet
+    }
+    val bare = drain(dir)
+    assert(bare.size == 12)
+    assert(drain(s"file://$dir") == bare)
+    assert(!Files.exists(Paths.get("file:")), "no relative directory named file:")
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format(Fmt).option("path", "s3a://bucket/log").load()
+    }
+    assert(e.getMessage.contains("'s3a'"), e.getMessage)
+  }
+
   test("micro-batch drain respects maxRowsPerTrigger and preserves per-segment order") {
     val dir = tmpDir("evlog")
     writeSeg(dir, "seg-000.log", 11)

@@ -10,8 +10,10 @@ class ExtensionsSpec extends SparkSpecBase {
   private def withExtendedSession[A](f: SparkSession => A): A = {
     // getOrCreate would hand back the suite's session and silently skip
     // the extensions — clear the defaults so a REAL new session (same
-    // SparkContext) is built with GraftExtensions applied
-    val prev = SparkSession.getDefaultSession
+    // SparkContext) is built with GraftExtensions applied. The suite's
+    // session is built first, so the JVM-wide codegen cache is sized by
+    // its hook, not by whichever session compiles first.
+    val prev = Some(spark)
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {

@@ -5,10 +5,14 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftCodegenBridge
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 /** The tool harness: `measure` returns exact, drained scheduler counts
   * with no settle sleep, and it stays the only session builder and
-  * listener in `src/main`.
+  * listener in `src/main`; the codegen cache holds a warm working set
+  * larger than Spark's default bound of 100 classes.
   */
 class HarnessSpec extends SparkSpecBase {
 
@@ -60,17 +64,43 @@ class HarnessSpec extends SparkSpecBase {
     }}
   }
 
-  test("SparkSession.builder() and addSparkListener appear only in Harness.scala") {
+  test("a warm rerun of 150 distinct generated classes compiles none of them") {
+    // each literal is inlined into its own whole-stage class; Spark's
+    // default cache of 100 would evict every one before its rerun
+    def round(): Long = Harness.measure(spark) {
+      (1 to 150).foreach(k => spark.range(10).select(col("id") * k).collect())
+    }.compiles
+    val cold = round()
+    assert(cold >= 150)
+    assert(round() == 0)
+  }
+
+  test("the codegen cache conf keeps an explicit bound and otherwise sets the constant") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    val explicit = new SQLConf
+    explicit.setConfString(key, "64")
+    assert(GraftCodegenBridge.cacheConf(explicit).codegenCacheMaxEntries == 64)
+    val unset = new SQLConf
+    val sized = GraftCodegenBridge.cacheConf(unset)
+    assert(sized.codegenCacheMaxEntries == GraftCodegenBridge.CacheMaxEntries)
+    assert(GraftCodegenBridge.CacheMaxEntries == 8192)
+    assert(!unset.contains(key), "the caller's conf is copied, not changed")
+  }
+
+  private def mainSources(): Seq[Path] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files: Seq[Path] = {
-      val s = Files.walk(root)
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    // code only: a doc comment may show the builder as usage
-    def code(src: String): String =
-      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val s = Files.walk(root)
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  /** Code only: a doc comment may show a builder or a conf key as usage. */
+  private def code(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  test("SparkSession.builder() and addSparkListener appear only in Harness.scala") {
+    val files = mainSources()
     val offenders = for {
       f <- files if f.getFileName.toString != "Harness.scala"
       pat <- Seq("SparkSession.builder()", "addSparkListener")
@@ -78,5 +108,17 @@ class HarnessSpec extends SparkSpecBase {
     } yield s"$pat in $f"
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(files.exists(_.getFileName.toString == "Harness.scala"))
+  }
+
+  test("the codegen cache bound and CodeGenerator appear only in GraftCodegenBridge.scala") {
+    val files = mainSources()
+    val offenders = for {
+      f <- files if f.getFileName.toString != "GraftCodegenBridge.scala"
+      pat <- Seq("spark.sql.codegen.cache.maxEntries", "CODEGEN_CACHE_MAX_ENTRIES",
+        "CodeGenerator")
+      if code(Files.readString(f)).contains(pat)
+    } yield s"$pat in $f"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(files.exists(_.getFileName.toString == "GraftCodegenBridge.scala"))
   }
 }

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftCodegenBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM). It sizes
+  * the JVM-wide codegen cache through the program's own hook, so every
+  * suite runs under the bound the program runs under, whichever suite
+  * happens to compile first.
+  */
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -16,6 +20,7 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
+    GraftCodegenBridge.sizeCodegenCache()
     s.sparkContext.setLogLevel("WARN")
     s
   }
