@@ -92,7 +92,6 @@ object PlanLint {
       ("ann_contrastive_triples", "bnl-join") -> anchors,
       ("ann_matryoshka_topk", "bnl-join") -> anchors,
       ("ann_matryoshka_recall", "bnl-join") -> anchors,
-      ("ann_recall_audit", "bnl-join") -> anchors,
       ("ann_hamming_topk", "bnl-join") -> anchors,
       ("ann_sq8_topk", "bnl-join") -> anchors,
       ("ann_sq8_recall", "bnl-join") -> anchors,
@@ -102,7 +101,6 @@ object PlanLint {
       ("decontam_embedding_clean", "bnl-join") -> evalSet,
       // --- bnl-join: register-sized derived tables ---
       ("rag_context_pack", "bnl-join") -> registers,
-      ("quality_calibration", "bnl-join") -> registers,
       // --- bnl-join: Materialize.stable() hides the bound ---
       // these broadcast a stable()'d FIXED-SIZE table (centroid /
       // codebook samples: orderBy md5 + LIMIT numCentroids; or a

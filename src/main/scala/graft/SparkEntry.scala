@@ -3,14 +3,16 @@ import org.apache.spark.sql.{DataFrame, GraftCodegenBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Lww
-import graft.queries.{AdversarialQueries, AuditQueries, Cdc2Queries, CdcQueries, GovernanceQueries, GraphSketchQueries, IngestQueries, LlmQueries, LlmQueries2, LlmQueries3, LlmQueries4, LlmQueries5, LlmQueries6, LlmQueries7, LlmQueries8, LlmQueries9, LlmQueries10, EventQueries, MaintenanceQueries, TpchQueries, TpchQueries2, TpchQueries3, CrossModalQueries, UnicodeQueries, WindowQueries}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * `queries` is the operator inventory (SURVEY.md §2), one entry per
-  * operator, each delegating to the library modules (`graft.ops`,
-  * `graft.recon`, `graft.llm`, `graft.queries`). `oracleSql` carries the
-  * DuckDB-equivalent SQL the driver uses as correctness oracle.
+  * `gates` is the operator inventory (SURVEY.md §2): each query object's
+  * [[graft.queries.Gate]]s, one per operator, each naming its build over
+  * the library modules (`graft.ops`, `graft.recon`, `graft.llm`) and the
+  * DuckDB SQL the driver uses as its correctness oracle. Every object is
+  * listed once; a name given twice fails here, at construction.
+  * `queries` and `oracleSql` are the two views the tools read, built once.
   *
   * A caller may build its own session and enter here, so this object's
   * initializer sizes the codegen cache (`GraftCodegenBridge`) before the
@@ -30,29 +32,16 @@ object SparkEntry {
       Seq("user_id"), Seq(col("ts_us"), col("event_id")))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CdcQueries.queries ++ Cdc2Queries.queries ++
-      TpchQueries.queries ++ TpchQueries2.queries ++ TpchQueries3.queries ++
-      LlmQueries.queries ++ LlmQueries2.queries ++
-      LlmQueries3.queries ++ LlmQueries4.queries ++ LlmQueries5.queries ++
-      LlmQueries6.queries ++ LlmQueries7.queries ++ LlmQueries8.queries ++
-      LlmQueries9.queries ++ LlmQueries10.queries ++
-      EventQueries.queries ++ WindowQueries.queries ++
-      GraphSketchQueries.queries ++ IngestQueries.queries ++
-      GovernanceQueries.queries ++ MaintenanceQueries.queries ++
-      AuditQueries.queries ++ UnicodeQueries.queries ++
-      CrossModalQueries.queries ++ AdversarialQueries.queries
+  val gates: Seq[Gate] = Gate.unique(
+    CdcQueries.gates ++ TpchQueries.gates ++ EventQueries.gates ++
+      WindowQueries.gates ++ IngestQueries.gates ++ MaintenanceQueries.gates ++
+      GovernanceQueries.gates ++ GraphSketchQueries.gates ++ AuditQueries.gates ++
+      DedupQueries.gates ++ RetrievalQueries.gates ++ TextQueries.gates ++
+      UnicodeQueries.gates ++ QualityQueries.gates ++ DecontamQueries.gates ++
+      CurationQueries.gates ++ EmbeddingQueries.gates ++ AdversarialQueries.gates)
 
-  def oracleSql: Map[String, String] =
-    CdcQueries.oracleSql ++ Cdc2Queries.oracleSql ++
-      TpchQueries.oracleSql ++ TpchQueries2.oracleSql ++ TpchQueries3.oracleSql ++
-      LlmQueries.oracleSql ++ LlmQueries2.oracleSql ++
-      LlmQueries3.oracleSql ++ LlmQueries4.oracleSql ++ LlmQueries5.oracleSql ++
-      LlmQueries6.oracleSql ++ LlmQueries7.oracleSql ++ LlmQueries8.oracleSql ++
-      LlmQueries9.oracleSql ++ LlmQueries10.oracleSql ++
-      EventQueries.oracleSql ++ WindowQueries.oracleSql ++
-      GraphSketchQueries.oracleSql ++ IngestQueries.oracleSql ++
-      GovernanceQueries.oracleSql ++ MaintenanceQueries.oracleSql ++
-      AuditQueries.oracleSql ++ UnicodeQueries.oracleSql ++
-      CrossModalQueries.oracleSql ++ AdversarialQueries.oracleSql
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
+
+  val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }

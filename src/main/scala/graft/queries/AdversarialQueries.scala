@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -49,7 +48,7 @@ object AdversarialQueries {
       .stripMargin.replace("\n", " ")
 
   /** Shingle-hash postings over the adversarial corpus (the
-    * LlmQueries.shingleHashCte shape, sourced from advdocs).
+    * DedupQueries.shingleHashCte shape, sourced from advdocs).
     */
   private val advShingleHashCte: String =
     advDocsCte +
@@ -60,36 +59,15 @@ object AdversarialQueries {
         |  CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h FROM sh)"""
       .stripMargin.replace("\n", " ")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // n-gram Jaccard under 80% boilerplate: every template shingle sits
     // in 0.8·N docs; maxShingleDocFreq=50 must drop them BEFORE the
     // postings self-join (uncapped: ~(0.8N)²/2 pairs — quadratic), after
     // which candidates come only from the benign tail's organic overlap.
-    "adv_dedup_ngram_jaccard" -> ((s, dir) =>
+    Gate("adv_dedup_ngram_jaccard", (s, dir) =>
       Dedup.jaccardPairs(Adversarial.documents(Tables.documents(s, dir)),
         "doc_id", "text", n = 3, thresholdNum = 7, thresholdDen = 10,
-        maxShingleDocFreq = 50)),
-
-    // exact-substring window profile under the same corpus — the
-    // UNCAPPED hot-postings path: template windows legitimately count
-    // (nd ≈ 0.8·N), and volume stays linear because postings are
-    // per-window rows joined on h (Σ windows·docs), never doc pairs.
-    "adv_dedup_window_profile" -> ((s, dir) =>
-      Dedup.windowDupProfile(Adversarial.documents(Tables.documents(s, dir)),
-        "doc_id", "text", n = 8)),
-
-    // LWW fold with three keys owning 80% of the log: the salted
-    // two-phase max_by must return bit-identical state to the plain
-    // fold (the oracle) while no reducer sees a whole hot key.
-    "adv_lww_latest_salted" -> ((s, dir) =>
-      Lww.latestPerKeySalted(
-        Adversarial.events(Tables.events(s, dir)).select(
-          col("user_id"), col("event_id"), col("ts_us"), col("event_type"),
-          EventOps.cents(col("value")).as("value_cents")),
-        Seq("user_id"), Seq(col("ts_us"), col("event_id")))))
-
-  val oracleSql: Map[String, String] = Map(
-    "adv_dedup_ngram_jaccard" ->
+        maxShingleDocFreq = 50),
       s"""WITH $advShingleHashCte,
          |kept AS (SELECT doc_id, h FROM shh WHERE h IN
          |  (SELECT h FROM shh GROUP BY h HAVING count(*) <= 50)),
@@ -100,9 +78,15 @@ object AdversarialQueries {
          |SELECT doc_a, doc_b, inter, sa.n_sh + sb.n_sh - inter AS uni
          |FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
          |WHERE inter * 10 >= (sa.n_sh + sb.n_sh - inter) * 7"""
-        .stripMargin.replace("\n", " "),
+        .stripMargin.replace("\n", " ")),
 
-    "adv_dedup_window_profile" ->
+    // exact-substring window profile under the same corpus — the
+    // UNCAPPED hot-postings path: template windows legitimately count
+    // (nd ≈ 0.8·N), and volume stays linear because postings are
+    // per-window rows joined on h (Σ windows·docs), never doc pairs.
+    Gate("adv_dedup_window_profile", (s, dir) =>
+      Dedup.windowDupProfile(Adversarial.documents(Tables.documents(s, dir)),
+        "doc_id", "text", n = 8),
       s"""WITH $advDocsCte,
          |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM advdocs),
          |w AS (SELECT doc_id, i AS start, array_to_string(t[i:i+7], ' ') AS w
@@ -118,9 +102,17 @@ object AdversarialQueries {
          |  first_dup, last_dup,
          |  coalesce(n_dup_windows, 0) * 1000 // n_windows AS dup_permille
          |FROM tot t LEFT JOIN dup d ON t.doc_id = d.doc_id"""
-        .stripMargin.replace("\n", " "),
+        .stripMargin.replace("\n", " ")),
 
-    "adv_lww_latest_salted" ->
+    // LWW fold with three keys owning 80% of the log: the salted
+    // two-phase max_by must return bit-identical state to the plain
+    // fold (the oracle) while no reducer sees a whole hot key.
+    Gate("adv_lww_latest_salted", (s, dir) =>
+      Lww.latestPerKeySalted(
+        Adversarial.events(Tables.events(s, dir)).select(
+          col("user_id"), col("event_id"), col("ts_us"), col("event_type"),
+          EventOps.cents(col("value")).as("value_cents")),
+        Seq("user_id"), Seq(col("ts_us"), col("event_id"))),
       s"""WITH $advEventsCte
          |SELECT user_id, event_id, ts_us, event_type, value_cents FROM (
          |  SELECT user_id, event_id, ts_us, event_type, value_cents,
@@ -128,4 +120,5 @@ object AdversarialQueries {
          |                       ORDER BY ts_us DESC, event_id DESC) AS rn
          |  FROM advev) WHERE rn = 1"""
         .stripMargin.replace("\n", " "))
+  )
 }

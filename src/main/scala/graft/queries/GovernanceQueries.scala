@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -60,31 +59,66 @@ object GovernanceQueries {
     "CASE WHEN doc_id % 11 = 3 THEN 'dup ' || source || ' ' || " +
       "CAST(doc_id % 17 AS VARCHAR) ELSE text END"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // k-anonymity equivalence classes over the replicated customer
     // table: QI = (nation, segment, balance band), sensitive = the
     // exact balance. One partial-agg shuffle on the QI tuple; the class
     // table is bounded by distinct QI tuples, not rows.
-    "privacy_k_anonymity" -> ((s, dir) =>
+    Gate("privacy_k_anonymity", (s, dir) =>
       Privacy.kAnonymityClasses(Tables.customer(s, dir),
         Seq("nation" -> col("c_nationkey").cast("long"),
           "segment" -> col("c_mktsegment"), "band" -> bandCol),
-        col("c_acctbal"), k = K)),
+        col("c_acctbal"), k = K),
+      s"""SELECT CAST(c_nationkey AS BIGINT) AS nation,
+         |  c_mktsegment AS segment, $bandSqlDuck AS band,
+         |  count(*) AS class_size,
+         |  count(DISTINCT c_acctbal) AS l_distinct,
+         |  CAST(CASE WHEN count(*) < $K THEN 1 ELSE 0 END AS BIGINT) AS at_risk
+         |FROM customer GROUP BY 1, 2, 3""".stripMargin.replace("\n", " ")),
 
     // The generalization ladder: risk summary at three QI granularities
     // — the curve an auditor reads to pick the cheapest generalization
     // that reaches the k target. One shuffle per level, 1-row summaries.
-    "privacy_generalization_ladder" -> ((s, dir) =>
+    Gate("privacy_generalization_ladder", (s, dir) =>
       Privacy.generalizationLadder(Tables.customer(s, dir), ladderLevels,
-        col("c_acctbal"), k = K, lMin = LMin)),
+        col("c_acctbal"), k = K, lMin = LMin),
+      {
+        def level(name: String, quasi: String) =
+          s"""SELECT '$name' AS level, CAST(sum(class_size) AS BIGINT) AS total_rows,
+             |  count(*) AS n_classes, min(class_size) AS min_class_size,
+             |  CAST(sum(CASE WHEN class_size < $K THEN class_size ELSE 0 END)
+             |    AS BIGINT) AS at_risk_rows,
+             |  CAST(sum(CASE WHEN class_size < $K THEN 1 ELSE 0 END)
+             |    AS BIGINT) AS at_risk_classes,
+             |  CAST(sum(CASE WHEN l_distinct < $LMin THEN 1 ELSE 0 END)
+             |    AS BIGINT) AS low_l_classes
+             |FROM (SELECT count(*) AS class_size,
+             |    count(DISTINCT c_acctbal) AS l_distinct
+             |  FROM customer GROUP BY $quasi) c""".stripMargin
+        Seq(level("l0_exact", s"c_nationkey, c_mktsegment, $dollarsSqlDuck"),
+          level("l1_band", s"c_nationkey, c_mktsegment, $bandSqlDuck"),
+          level("l2_segment", "c_mktsegment"))
+          .mkString(" UNION ALL ").replace("\n", " ")
+      }),
 
     // Dedup-loss attribution: after exact dedup (canonical = min id per
     // text hash), docs lost per source and the per-mille share — the
     // mirror-site/syndicated-feed report. Dup classes spliced in-query.
-    "dedup_loss_by_source" -> ((s, dir) =>
+    Gate("dedup_loss_by_source", (s, dir) =>
       Dedup.exactDupLossBySource(
         Tables.documents(s, dir).withColumn("text", splicedText),
-        "doc_id", "text", "source")),
+        "doc_id", "text", "source"),
+      s"""WITH d AS (SELECT doc_id, source,
+         |    ($splicedTextSqlDuck) AS text FROM documents),
+         |h AS (SELECT doc_id, source, md5(text) AS th FROM d),
+         |r AS (SELECT th, min(doc_id) AS cid FROM h GROUP BY th)
+         |SELECT source, count(*) AS n_docs,
+         |  CAST(sum(CASE WHEN h.doc_id <> r.cid THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS n_lost,
+         |  CAST(sum(CASE WHEN h.doc_id <> r.cid THEN 1 ELSE 0 END)
+         |    AS BIGINT) * 1000 // count(*) AS lost_permille
+         |FROM h JOIN r ON h.th = r.th
+         |GROUP BY source""".stripMargin.replace("\n", " ")),
 
     // t-closeness: per (nation, segment) class, the integer EMD between
     // the class's balance-cent distribution and the global one over 10
@@ -92,19 +126,20 @@ object GovernanceQueries {
     // and l-diversity cannot see. One corpus pass keyed by (QI, bucket);
     // everything after runs on class×bucket scaffolds and the broadcast
     // global CDF.
-    "privacy_t_closeness" -> ((s, dir) =>
+    Gate("privacy_t_closeness", (s, dir) =>
       Privacy.tCloseness(Tables.customer(s, dir),
         Seq("nation" -> col("c_nationkey").cast("long"),
           "segment" -> col("c_mktsegment")),
         round(col("c_acctbal") * 100, 0),
-        lo = TClo, hi = TChi, buckets = TCbuckets)),
+        lo = TClo, hi = TChi, buckets = TCbuckets),
+      tClosenessSqlDuck),
 
     // The privacy panel's register identity in-plan: the per-(QI,
     // bucket) counts are the EMD's sufficient statistic and SUM-MERGE —
     // two customer-parity legs fold their registers, the merged table
     // rides the SAME tClosenessFromCounts walk. Oracle shared verbatim
     // with privacy_t_closeness.
-    "privacy_t_closeness_stream" -> ((s, dir) => {
+    Gate("privacy_t_closeness_stream", (s, dir) => {
       val cust = Tables.customer(s, dir)
       val quasi = Seq("nation" -> col("c_nationkey").cast("long"),
         "segment" -> col("c_mktsegment"))
@@ -118,7 +153,10 @@ object GovernanceQueries {
           .groupBy("nation", "segment", "_b")
           .agg(sum("_n").as("_n")),
         Seq("nation", "segment"), buckets = TCbuckets)
-    })
+    },
+      // the register identity: the folded (QI, bucket) counts must land
+      // on the ONE-PASS EMD panel — oracle shared verbatim
+      tClosenessSqlDuck)
   )
 
   /** The one-pass t-closeness oracle — shared verbatim by the batch
@@ -160,53 +198,4 @@ object GovernanceQueries {
          |    AS BIGINT) AS emd_x1e6
          |FROM cc JOIN gc ON cc.b = gc.b
          |GROUP BY 1, 2, 3""".stripMargin.replace("\n", " ")
-
-  val oracleSql: Map[String, String] = Map(
-    "privacy_k_anonymity" ->
-      s"""SELECT CAST(c_nationkey AS BIGINT) AS nation,
-         |  c_mktsegment AS segment, $bandSqlDuck AS band,
-         |  count(*) AS class_size,
-         |  count(DISTINCT c_acctbal) AS l_distinct,
-         |  CAST(CASE WHEN count(*) < $K THEN 1 ELSE 0 END AS BIGINT) AS at_risk
-         |FROM customer GROUP BY 1, 2, 3""".stripMargin.replace("\n", " "),
-
-    "privacy_generalization_ladder" -> {
-      def level(name: String, quasi: String) =
-        s"""SELECT '$name' AS level, CAST(sum(class_size) AS BIGINT) AS total_rows,
-           |  count(*) AS n_classes, min(class_size) AS min_class_size,
-           |  CAST(sum(CASE WHEN class_size < $K THEN class_size ELSE 0 END)
-           |    AS BIGINT) AS at_risk_rows,
-           |  CAST(sum(CASE WHEN class_size < $K THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS at_risk_classes,
-           |  CAST(sum(CASE WHEN l_distinct < $LMin THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS low_l_classes
-           |FROM (SELECT count(*) AS class_size,
-           |    count(DISTINCT c_acctbal) AS l_distinct
-           |  FROM customer GROUP BY $quasi) c""".stripMargin
-      Seq(level("l0_exact", s"c_nationkey, c_mktsegment, $dollarsSqlDuck"),
-        level("l1_band", s"c_nationkey, c_mktsegment, $bandSqlDuck"),
-        level("l2_segment", "c_mktsegment"))
-        .mkString(" UNION ALL ").replace("\n", " ")
-    },
-
-    "privacy_t_closeness" -> tClosenessSqlDuck,
-
-    // the register identity: the folded (QI, bucket) counts must land
-    // on the ONE-PASS EMD panel — oracle shared verbatim
-    "privacy_t_closeness_stream" -> tClosenessSqlDuck,
-
-
-    "dedup_loss_by_source" ->
-      s"""WITH d AS (SELECT doc_id, source,
-         |    ($splicedTextSqlDuck) AS text FROM documents),
-         |h AS (SELECT doc_id, source, md5(text) AS th FROM d),
-         |r AS (SELECT th, min(doc_id) AS cid FROM h GROUP BY th)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN h.doc_id <> r.cid THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_lost,
-         |  CAST(sum(CASE WHEN h.doc_id <> r.cid THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000 // count(*) AS lost_permille
-         |FROM h JOIN r ON h.th = r.th
-         |GROUP BY source""".stripMargin.replace("\n", " ")
-  )
 }

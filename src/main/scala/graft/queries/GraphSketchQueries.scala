@@ -131,78 +131,128 @@ object GraphSketchQueries {
        |FROM hits GROUP BY event_type""".stripMargin.replace("\n", " ")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Integer damped PageRank (3 unrolled rounds) over the bipartite
     // user↔item co-visitation graph from the event log — the
     // source-reputation centrality. Pregel-as-join+agg: each round is
     // one src-keyed join + one dst-keyed partial-agg shuffle.
-    "graph_pagerank_covisit" -> ((s, dir) =>
+    Gate("graph_pagerank_covisit", (s, dir) =>
       GraphOps.pageRankIntCovisit(Tables.events(s, dir), "user_id", itemCol,
-        PrIters)),
+        PrIters),
+      GraphOps.pageRankSqlDuck(itemSqlDuck, PrIters)),
 
     // Personalized (topic-sensitive) PageRank: teleport only to the
     // seed items (every 5th item id) — "related to THESE" centrality.
-    "graph_ppr_seeded" -> ((s, dir) =>
+    Gate("graph_ppr_seeded", (s, dir) =>
       GraphOps.personalizedPageRankIntCovisit(
         Tables.events(s, dir), "user_id", itemCol,
         v => v >= GraphOps.ItemBase &&
           pmod(v - GraphOps.ItemBase, lit(5L)) === 0,
-        iters = PrIters)),
+        iters = PrIters),
+      GraphOps.pprSqlDuck(itemSqlDuck,
+        v => s"($v >= ${GraphOps.ItemBase} AND ($v - ${GraphOps.ItemBase}) % 5 = 0)",
+        PrIters)),
 
     // Triangles of the top-150 co-visitation backbone: corpus-scale
     // pair derivation (hyper-connector cap ON — the oracled contract is
     // the scale-safe configuration), then bounded triangle enumeration
     // (two broadcast self-joins over the ≤150-row edge list).
-    "graph_item_triangles" -> ((s, dir) =>
+    Gate("graph_item_triangles", (s, dir) =>
       GraphOps.backboneTriangles(
         GraphOps.itemCopairs(Tables.events(s, dir), "user_id", itemCol,
           maxUserDegree = MaxDeg),
-        topK = 150)),
+        topK = 150),
+      s"""WITH $cappedEvCteDuck,
+         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
+         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
+         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150)
+         |SELECT e1.i AS i, e1.j AS j, e2.j AS k
+         |FROM top e1 JOIN top e2 ON e1.j = e2.i
+         |JOIN top e3 ON e3.i = e1.i AND e3.j = e2.j"""
+        .stripMargin.replace("\n", " ")),
 
     // Connected components of the same backbone (star-contraction CC —
     // the engine's O(log n)-round machinery — over the bounded edge
     // list): the item-community map.
-    "graph_backbone_components" -> ((s, dir) =>
+    Gate("graph_backbone_components", (s, dir) =>
       graft.llm.Dedup.connectedComponentsStars(
         GraphOps.backboneEdges(
           GraphOps.itemCopairs(Tables.events(s, dir), "user_id", itemCol,
             maxUserDegree = MaxDeg),
           topK = 150),
         "i", "j")
-        .select(col("doc_id").as("vertex"), col("cluster_id").as("component"))),
+        .select(col("doc_id").as("vertex"), col("cluster_id").as("component")),
+      s"""WITH RECURSIVE $cappedEvCteDuck,
+         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
+         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
+         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150),
+         |edges AS (SELECT i AS src, j AS dst FROM top
+         |  UNION ALL SELECT j, i FROM top),
+         |reach(v, r) AS (SELECT src, src FROM edges
+         |  UNION SELECT e.src, rc.r FROM edges e JOIN reach rc ON rc.v = e.dst)
+         |SELECT v AS vertex, min(r) AS component FROM reach GROUP BY v"""
+        .stripMargin.replace("\n", " ")),
 
     // Label-propagation communities of the same backbone (deterministic
     // sync LPA, min tie-break, 4 rounds): the density-sensitive
     // community map next to the pure-connectivity components — a bridge
     // vertex joins whichever side out-votes it, so dense blocks
     // separate even when connected.
-    "graph_label_communities" -> ((s, dir) =>
+    Gate("graph_label_communities", (s, dir) =>
       GraphOps.labelPropagation(
         GraphOps.backboneEdges(
           GraphOps.itemCopairs(Tables.events(s, dir), "user_id", itemCol,
             maxUserDegree = MaxDeg),
           topK = 150),
-        "i", "j", rounds = LpaRounds)),
+        "i", "j", rounds = LpaRounds),
+      s"""WITH $cappedEvCteDuck,
+         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
+         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
+         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150),
+         |edges AS (SELECT i AS src, j AS dst FROM top
+         |  UNION ALL SELECT j, i FROM top),
+         |${GraphOps.lpaCtesDuck(LpaRounds)}
+         |SELECT v AS vertex, lab AS label FROM l$LpaRounds"""
+        .stripMargin.replace("\n", " ")),
 
     // Degree/strength triage profile of the same graph: out-degree,
     // out-strength, and the per-mille share of the heaviest edge (the
     // "is this host a link farm" column).
-    "graph_degree_profile" -> ((s, dir) =>
+    Gate("graph_degree_profile", (s, dir) =>
       GraphOps.degreeProfile(
-        GraphOps.covisitEdges(Tables.events(s, dir), "user_id", itemCol))),
+        GraphOps.covisitEdges(Tables.events(s, dir), "user_id", itemCol)),
+      s"""WITH $pairsEdgesCteDuck
+         |SELECT src AS vertex, count(*) AS out_degree,
+         |  CAST(sum(w) AS BIGINT) AS out_strength,
+         |  max(w) AS max_edge_w,
+         |  (1000 * max(w)) // CAST(sum(w) AS BIGINT) AS top_edge_permille
+         |FROM edges GROUP BY src""".stripMargin.replace("\n", " ")),
 
     // KMV distinct-shingle estimate per source next to the exact count
     // — the calibration-gate shape (estimate must be reproducible AND
     // judged). k = 64 minimum hash values per group.
-    "sketch_kmv_distinct" -> ((s, dir) =>
+    Gate("sketch_kmv_distinct", (s, dir) =>
       Sketches.kmvCalibration(sourceShingleHashes(s, dir), Seq("source"),
-        col("h"), k = 64, preHashed = true)),
+        col("h"), k = 64, preHashed = true),
+      s"""WITH $shingleHashCteDuck,
+         |ex AS (SELECT source, count(*) AS n_exact FROM shh GROUP BY 1),
+         |rk AS (SELECT source, h,
+         |  row_number() OVER (PARTITION BY source ORDER BY h) AS rk FROM shh),
+         |sk AS (SELECT source, count(*) AS kmv_k, max(h) AS hk
+         |  FROM rk WHERE rk <= 64 GROUP BY 1)
+         |SELECT sk.source, n_exact, kmv_k,
+         |  CASE WHEN kmv_k < 64 THEN kmv_k
+         |       ELSE ((kmv_k - 1) * ${Sketches.HashSpace}) // hk END
+         |    AS kmv_estimate
+         |FROM sk JOIN ex ON sk.source = ex.source"""
+        .stripMargin.replace("\n", " ")),
 
     // HyperLogLog (m = 64 registers) distinct-shingle estimate per
     // source, integer fixed-point estimator, exact count alongside.
-    "sketch_hll_distinct" -> ((s, dir) =>
+    Gate("sketch_hll_distinct", (s, dir) =>
       Sketches.hllDistinct(sourceShingleHashes(s, dir), Seq("source"),
-        col("h"), p = 6, alphaMilli = 709L, preHashed = true)),
+        col("h"), p = 6, alphaMilli = 709L, preHashed = true),
+      hllSourceSqlDuck),
 
     // Incremental sketch maintenance: registers built over the PRIOR
     // corpus (90% of docs) and over an arriving DELTA (10%) max-merge
@@ -210,7 +260,7 @@ object GraphSketchQueries {
     // the full-corpus sketch_hll_distinct SQL, so the gate proves the
     // incremental path bit-equal cross-engine (the property that lets
     // a daily ingest update a corpus profile without rescanning it).
-    "sketch_hll_incremental" -> ((s, dir) => {
+    Gate("sketch_hll_incremental", (s, dir) => {
       val delta = pmod(col("doc_id"), lit(10L)) === 0
       def regs(pred: org.apache.spark.sql.Column) =
         Sketches.hllRegisters(sourceShingleHashes(s, dir, pred),
@@ -223,27 +273,71 @@ object GraphSketchQueries {
         .groupBy("source").agg(count(lit(1)).as("n_exact"))
       est.join(exact, Seq("source"))
         .select(col("source"), col("n_exact"), col("hll_estimate"))
-    }),
+    },
+      // the incremental path must land EXACTLY on the one-pass sketch —
+      // same oracle by construction
+      hllSourceSqlDuck),
 
     // The same HLL on the TIME axis: distinct active users per day,
     // estimate next to exact — the daily-actives panel a 100 TB event
     // log can afford (registers merge across shards and ship as 64
     // ints/day).
-    "sketch_hll_daily_users" -> ((s, dir) =>
+    Gate("sketch_hll_daily_users", (s, dir) =>
       Sketches.hllDistinct(
         Tables.events(s, dir)
           .select(expr("ts_us div 86400000000").as("day"),
             col("user_id").cast("string").as("u")),
-        Seq("day"), col("u"), p = 6, alphaMilli = 709L)),
+        Seq("day"), col("u"), p = 6, alphaMilli = 709L),
+      {
+        val m = 64; val restBits = 32 - 6
+        val numer = 709L * m * m * 1073741824L
+        s"""WITH hsh AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
+           |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+           |      AS BIGINT) AS h
+           |  FROM events),
+           |ex AS (SELECT day, count(*) AS n_exact FROM hsh GROUP BY 1),
+           |regs AS (SELECT day, h % $m AS bucket,
+           |  max(CASE WHEN h // $m = 0 THEN ${restBits + 1}
+           |      ELSE ${restBits + 1} - length(bin(h // $m)) END) AS r
+           |  FROM hsh GROUP BY 1, 2),
+           |den AS (SELECT day,
+           |  CAST(sum(1073741824 // (1 << r)) AS BIGINT)
+           |    + ($m - count(*)) * 1073741824 AS denom
+           |  FROM regs GROUP BY 1)
+           |SELECT den.day, n_exact,
+           |  $numer // (1000 * denom) AS hll_estimate
+           |FROM den JOIN ex ON den.day = ex.day"""
+          .stripMargin.replace("\n", " ")
+      }),
 
     // Count-Min (4×256 int64 cells) frequency estimates for the exact
     // top-20 corpus tokens — est ≥ exact by construction; the gap is
     // the collision overestimate the gate reports.
-    "sketch_cms_heavy" -> ((s, dir) =>
+    Gate("sketch_cms_heavy", (s, dir) =>
       Sketches.cmsTopKCalibration(
         Tables.documents(s, dir)
           .select(explode(split(col("text"), " ")).as("tok")),
-        col("tok"), d = 4, w = 256, topN = 20)),
+        col("tok"), d = 4, w = 256, topN = 20),
+      {
+        val rows = (0 until 4).map { i =>
+          val (a, b) = (Dedup.MinhashA(i), Dedup.MinhashB(i))
+          s"SELECT key, $i AS r, (($a * hh + $b) % ${Dedup.MinhashP}) % 256 AS b FROM h"
+        }.mkString(" UNION ALL ")
+        s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS key FROM documents),
+           |h AS (SELECT key,
+           |  CAST(concat('0x', substr(md5(key), 1, 8)) AS BIGINT) AS hh FROM t),
+           |hb AS ($rows),
+           |cells AS (SELECT r, b, count(*) AS c FROM hb GROUP BY 1, 2),
+           |top AS (SELECT key, any_value(hh) AS hh, count(*) AS n_exact
+           |  FROM h GROUP BY key ORDER BY n_exact DESC, key LIMIT 20),
+           |probes AS (${(0 until 4).map { i =>
+             val (a, b) = (Dedup.MinhashA(i), Dedup.MinhashB(i))
+             s"SELECT key, n_exact, $i AS r, (($a * hh + $b) % ${Dedup.MinhashP}) % 256 AS b FROM top"
+           }.mkString(" UNION ALL ")})
+           |SELECT key, n_exact, min(c) AS cms_estimate
+           |FROM probes JOIN cells USING (r, b)
+           |GROUP BY key, n_exact""".stripMargin.replace("\n", " ")
+      }),
 
     // Log₂-histogram quantile sketch (the latency-histogram shape —
     // reference scripts/benchmark.py:109-120): P50/P90/P99 of the
@@ -251,21 +345,25 @@ object GraphSketchQueries {
     // estimate next to the exact rank value — the calibration-gate
     // discipline. The fixed-splits guarantee (estimate and truth share
     // a power-of-two bin) is what the est/exact columns exhibit.
-    "sketch_quantile_value" -> ((s, dir) =>
-      quantileCalibration(quantileRegs(s, dir, lit(true)), s, dir)),
+    Gate("sketch_quantile_value", (s, dir) =>
+      quantileCalibration(quantileRegs(s, dir, lit(true)), s, dir),
+      quantileSqlDuck),
 
     // Incremental maintenance: registers over the PRIOR events (90%)
     // and an arriving DELTA (10%) SUM-merge into registers identical to
     // the one-pass sketch — the oracle IS sketch_quantile_value's SQL,
     // so the gate proves the shard-merge path bit-equal cross-engine
     // (the HLL-incremental discipline applied to rank statistics).
-    "sketch_quantile_merge" -> ((s, dir) => {
+    Gate("sketch_quantile_merge", (s, dir) => {
       val delta = pmod(col("event_id"), lit(10L)) === 0
       val merged = quantileRegs(s, dir, !delta)
         .unionByName(quantileRegs(s, dir, delta))
         .groupBy("event_type", "_bin").agg(sum("_cnt").as("_cnt"))
       quantileCalibration(merged, s, dir)
-    }),
+    },
+      // the sum-merged shards must land EXACTLY on the one-pass sketch —
+      // same oracle by construction (the HLL-incremental discipline)
+      quantileSqlDuck),
 
     // KMV set-algebra overlap audit — the set operation HLL cannot
     // serve (registers union but never intersect): each source's
@@ -273,19 +371,60 @@ object GraphSketchQueries {
     // from ≤64-value sketches next to the exact legs — the "how much
     // does this feed duplicate the anchor feed" admission audit. src0
     // rides along as its own row (jaccard 1000, the self-check).
-    "sketch_set_overlap" -> ((s, dir) =>
+    Gate("sketch_set_overlap", (s, dir) =>
       Sketches.kmvSetOps(
         sourceShingleHashes(s, dir), Seq("source"), col("h"),
         sourceShingleHashes(s, dir).filter(col("source") === "src0")
           .select(col("h")),
-        col("h"), k = 64, preHashed = true)),
+        col("h"), k = 64, preHashed = true),
+      s"""WITH $shingleHashCteDuck,
+         |bu AS (SELECT h FROM shh WHERE source = 'src0'),
+         |ask AS (SELECT source, h FROM (SELECT source, h,
+         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rk
+         |  FROM shh) t WHERE rk <= 64),
+         |bsk AS (SELECT h FROM (SELECT h,
+         |    row_number() OVER (ORDER BY h) AS rk FROM bu) t WHERE rk <= 64),
+         |gs AS (SELECT DISTINCT source FROM shh),
+         |mrg AS (SELECT source, h, max(ina) AS ina, max(inb) AS inb FROM (
+         |    SELECT source, h, 1 AS ina, 0 AS inb FROM ask
+         |    UNION ALL SELECT gs.source, bsk.h, 0, 1 FROM gs, bsk) u
+         |  GROUP BY 1, 2),
+         |usk AS (SELECT source, h, ina, inb FROM (SELECT source, h, ina, inb,
+         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rk
+         |  FROM mrg) t WHERE rk <= 64),
+         |sk AS (SELECT source, count(*) AS ku, max(h) AS theta,
+         |    CAST(sum(CASE WHEN ina = 1 AND inb = 1 THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS kint
+         |  FROM usk GROUP BY 1),
+         |na AS (SELECT source, count(*) AS n_a FROM shh GROUP BY 1),
+         |nb AS (SELECT count(*) AS n_b FROM bu),
+         |ix AS (SELECT a.source, count(*) AS inter_exact
+         |  FROM shh a JOIN bu b ON a.h = b.h GROUP BY 1),
+         |ext AS (SELECT na.source, na.n_a AS n_a_exact, nb.n_b AS n_b_exact,
+         |    coalesce(ix.inter_exact, 0) AS inter_exact
+         |  FROM na CROSS JOIN nb LEFT JOIN ix ON ix.source = na.source),
+         |est AS (SELECT source, ku, kint,
+         |    CASE WHEN ku < 64 THEN ku
+         |         ELSE ((ku - 1) * ${Sketches.HashSpace}) // theta END
+         |      AS kmv_union_est
+         |  FROM sk)
+         |SELECT e.source, n_a_exact, n_b_exact, inter_exact,
+         |  n_a_exact + n_b_exact - inter_exact AS union_exact,
+         |  (1000 * inter_exact) // (n_a_exact + n_b_exact - inter_exact)
+         |    AS jacc_pm_exact,
+         |  kmv_union_est,
+         |  CASE WHEN ku < 64 THEN kint
+         |       ELSE (kint * kmv_union_est) // 64 END AS kmv_inter_est,
+         |  (1000 * kint) // ku AS kmv_jacc_pm_est
+         |FROM est JOIN ext e ON est.source = e.source"""
+        .stripMargin.replace("\n", " ")),
 
     // Rolling 7-day distinct actives per day: the daily HLL registers
     // max-merged over a sliding day window — the windowed-distinct
     // panel served from 64 ints/day (the events are scanned ONCE for
     // the daily registers; every window after that is register
     // arithmetic), estimate next to the exact windowed distinct.
-    "sketch_hll_rolling_users" -> ((s, dir) => {
+    Gate("sketch_hll_rolling_users", (s, dir) => {
       val daily = Tables.events(s, dir)
         .select(expr("ts_us div 86400000000").as("day"),
           col("user_id").cast("string").as("u"))
@@ -304,7 +443,37 @@ object GraphSketchQueries {
         .withColumnRenamed("wday", "day")
       est.join(ex, Seq("day"))
         .select(col("day"), col("n_exact"), col("hll_estimate"))
-    }),
+    },
+      {
+        val m = 64; val restBits = 32 - 6
+        val numer = 709L * m * m * 1073741824L
+        s"""WITH hsh AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
+           |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+           |      AS BIGINT) AS h
+           |  FROM events),
+           |regs AS (SELECT day, h % $m AS bucket,
+           |  max(CASE WHEN h // $m = 0 THEN ${restBits + 1}
+           |      ELSE ${restBits + 1} - length(bin(h // $m)) END) AS r
+           |  FROM hsh GROUP BY 1, 2),
+           |days AS (SELECT DISTINCT day FROM regs),
+           |scaf AS (SELECT day, b AS bucket
+           |  FROM days, UNNEST(range(0, $m)) AS t(b)),
+           |j AS (SELECT s.day, s.bucket, regs.r FROM scaf s
+           |  LEFT JOIN regs ON regs.day = s.day AND regs.bucket = s.bucket),
+           |roll AS (SELECT day, bucket, max(r) OVER (PARTITION BY bucket
+           |    ORDER BY day RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS r
+           |  FROM j),
+           |den AS (SELECT day,
+           |  CAST(sum(1073741824 // (1 << r)) AS BIGINT)
+           |    + ($m - count(r)) * 1073741824 AS denom
+           |  FROM roll GROUP BY 1),
+           |ex AS (SELECT d.day, count(DISTINCT e.h) AS n_exact
+           |  FROM days d JOIN hsh e ON e.day BETWEEN d.day - 6 AND d.day
+           |  GROUP BY 1)
+           |SELECT den.day, n_exact, $numer // (1000 * denom) AS hll_estimate
+           |FROM den JOIN ex ON den.day = ex.day"""
+          .stripMargin.replace("\n", " ")
+      }),
 
     // Bloom-filter semi-join pruning + false-positive audit: a filter
     // built over a small key set (the "deleted users" sweep / prior-
@@ -313,18 +482,19 @@ object GraphSketchQueries {
     // member count (candidates ≥ members ALWAYS: no false negatives;
     // the gap is the audited FP price). The explicit, cross-engine-
     // checkable version of a broadcast runtime filter.
-    "bloom_prune_audit" -> ((s, dir) => {
+    Gate("bloom_prune_audit", (s, dir) => {
       val ev = Tables.events(s, dir)
       val words = Bloom.collectWords(
         Bloom.buildWords(bloomKeys(ev), col("key"), BloomM, BloomK), BloomM)
       bloomAudit(ev, words)
-    }),
+    },
+      bloomAuditSqlDuck),
 
     // Incremental filter maintenance: words built over two key-set
     // shards BIT_OR-merge into exactly the one-pass filter — the oracle
     // IS bloom_prune_audit's SQL, so the gate proves the shard-merge
     // path bit-equal cross-engine (the HLL/quantile-merge discipline).
-    "bloom_incremental" -> ((s, dir) => {
+    Gate("bloom_incremental", (s, dir) => {
       val ev = Tables.events(s, dir)
       val ks = bloomKeys(ev)
       def shard(pred: org.apache.spark.sql.Column) =
@@ -333,43 +503,105 @@ object GraphSketchQueries {
       val words = Bloom.collectWords(
         Bloom.mergeWords(shard(even), shard(!even)), BloomM)
       bloomAudit(ev, words)
-    }),
+    },
+      // the BIT_OR-merged shards must land EXACTLY on the one-pass
+      // filter — same oracle by construction
+      bloomAuditSqlDuck),
 
     // Item–item Jaccard similarity top-3 — the co-visitation
     // recommender table, exact per-mille; hyper-connector cap ON (the
     // capped user population feeds pairs AND degrees identically).
-    "graph_item_similarity_topk" -> ((s, dir) =>
+    Gate("graph_item_similarity_topk", (s, dir) =>
       GraphOps.itemSimilarityTopK(Tables.events(s, dir), "user_id",
-        itemCol, k = 3, maxUserDegree = MaxDeg)),
+        itemCol, k = 3, maxUserDegree = MaxDeg),
+      s"""WITH $cappedEvCteDuck,
+         |pr AS (SELECT a.it AS i, b.it AS j, CAST(count(*) AS BIGINT) AS t
+         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
+         |deg AS (SELECT it, CAST(count(*) AS BIGINT) AS du FROM evc GROUP BY 1),
+         |sym AS (SELECT i, j, t FROM pr UNION ALL SELECT j, i, t FROM pr),
+         |sc AS (SELECT sym.i, sym.j,
+         |    (t * 1000) // (di.du + dj.du - t) AS sim_permille
+         |  FROM sym JOIN deg di ON sym.i = di.it JOIN deg dj ON sym.j = dj.it),
+         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY i
+         |    ORDER BY sim_permille DESC, j) AS BIGINT) AS rk FROM sc)
+         |SELECT i, j, sim_permille, rk FROM r WHERE rk <= 3"""
+        .stripMargin.replace("\n", " ")),
 
     // Weighted without-replacement sample (integer Efraimidis–Spirakis
     // priorities): 10 docs per language, selection ∝ n_chars,
     // reproducible bit-for-bit.
-    "sample_weighted_priority" -> ((s, dir) =>
+    Gate("sample_weighted_priority", (s, dir) =>
       graft.llm.Sampling.weightedPrioritySample(
         Tables.documents(s, dir), "doc_id", "lang", col("n_chars"), k = 10)
         .select(col("lang"), col("doc_id"),
           col("n_chars").cast("long").as("n_chars"),
-          col("priority"), col("rk").cast("long").as("rk"))),
+          col("priority"), col("rk").cast("long").as("rk")),
+      """WITH b AS (SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
+        |    (CAST(n_chars AS BIGINT) * 4294967296) //
+        |      (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+        |        AS BIGINT) + 1) AS priority
+        |  FROM documents WHERE n_chars > 0),
+        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY lang
+        |    ORDER BY priority DESC, doc_id) AS BIGINT) AS rk FROM b)
+        |SELECT lang, doc_id, n_chars, priority, rk FROM r WHERE rk <= 10"""
+        .stripMargin.replace("\n", " ")),
 
     // Per-source distribution drift: scaled present-token χ² between
     // each source's token distribution and the corpus — the
     // "did this feed change character" admission audit, integer-exact.
-    "source_drift_chi2" -> ((s, dir) =>
+    Gate("source_drift_chi2", (s, dir) =>
       graft.llm.TextAnalysis.sourceDriftChi2(
-        Tables.documents(s, dir), "source", "text")),
+        Tables.documents(s, dir), "source", "text"),
+      """WITH tokh AS (SELECT source,
+        |    CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS h
+        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
+        |        FROM documents)),
+        |tok AS (SELECT source, h, CAST(count(*) AS BIGINT) AS o
+        |  FROM tokh GROUP BY 1, 2),
+        |corpus AS (SELECT h, CAST(sum(o) AS BIGINT) AS c FROM tok GROUP BY 1),
+        |stt AS (SELECT source, CAST(sum(o) AS BIGINT) AS st,
+        |    CAST(count(*) AS BIGINT) AS n_distinct FROM tok GROUP BY 1),
+        |tt AS (SELECT CAST(sum(o) AS BIGINT) AS total FROM tok),
+        |j AS (SELECT tok.source, o, st, n_distinct,
+        |    CAST((CAST(c AS HUGEINT) * st) // tt.total AS BIGINT) AS e
+        |  FROM tok JOIN corpus USING (h) JOIN stt USING (source), tt)
+        |SELECT source, max(st) AS n_tokens, max(n_distinct) AS n_distinct,
+        |  CAST(sum((CAST(o - e AS HUGEINT) * (o - e) * 1000) // (e + 1))
+        |    AS BIGINT) AS chi2_scaled
+        |FROM j GROUP BY source""".stripMargin.replace("\n", " ")),
 
     // Point-in-time lookup on the SCD2 table: the version live at
     // 2024-01-15T00:00Z per key (mid-fixture; a key deleted before T
     // yields no row) — the standard consumer query of the history.
-    "cdc_scd2_asof" -> ((s, dir) =>
-      Scd.asOf(scd2(s, dir), AsOfUs)),
+    Gate("cdc_scd2_asof", (s, dir) =>
+      Scd.asOf(scd2(s, dir), AsOfUs),
+      s"""WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  event_type, CAST(round(value*100, 0) AS BIGINT) AS value_cents
+        |  FROM events),
+        |v AS (SELECT *, lead(ts_us) OVER (PARTITION BY user_id
+        |  ORDER BY ts_us, event_id) AS valid_to_us FROM c)
+        |SELECT user_id, event_type, value_cents,
+        |  ts_us AS valid_from_us, valid_to_us,
+        |  valid_to_us IS NULL AS is_current
+        |FROM v WHERE event_type <> 'error'
+        |  AND ts_us <= $AsOfUs
+        |  AND (valid_to_us IS NULL OR valid_to_us > $AsOfUs)"""
+        .stripMargin.replace("\n", " ")),
 
     // SCD2 history fold of the CDC stream: one version row per
     // non-delete change, valid [ts, next change); 'error' plays DELETE
     // (closes the interval, emits nothing) as in the CdcQueries
     // conventions.
-    "cdc_scd2_history" -> ((s, dir) => scd2(s, dir))
+    Gate("cdc_scd2_history", (s, dir) => scd2(s, dir),
+      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  event_type, CAST(round(value*100, 0) AS BIGINT) AS value_cents
+        |  FROM events),
+        |v AS (SELECT *, lead(ts_us) OVER (PARTITION BY user_id
+        |  ORDER BY ts_us, event_id) AS valid_to_us FROM c)
+        |SELECT user_id, event_type, value_cents,
+        |  ts_us AS valid_from_us, valid_to_us,
+        |  valid_to_us IS NULL AS is_current
+        |FROM v WHERE event_type <> 'error'""".stripMargin.replace("\n", " "))
   )
 
   /** 2024-01-15T00:00:00Z — mid-fixture AS-OF instant (the CdcQueries
@@ -510,273 +742,4 @@ object GraphSketchQueries {
        |  UNION ALL
        |  SELECT it + ${GraphOps.ItemBase} AS src, u AS dst, w FROM pairs)"""
       .stripMargin.replace("\n", " ")
-
-  val oracleSql: Map[String, String] = Map(
-    "graph_pagerank_covisit" ->
-      GraphOps.pageRankSqlDuck(itemSqlDuck, PrIters),
-
-    "graph_ppr_seeded" ->
-      GraphOps.pprSqlDuck(itemSqlDuck,
-        v => s"($v >= ${GraphOps.ItemBase} AND ($v - ${GraphOps.ItemBase}) % 5 = 0)",
-        PrIters),
-
-    "graph_item_triangles" ->
-      s"""WITH $cappedEvCteDuck,
-         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
-         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
-         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150)
-         |SELECT e1.i AS i, e1.j AS j, e2.j AS k
-         |FROM top e1 JOIN top e2 ON e1.j = e2.i
-         |JOIN top e3 ON e3.i = e1.i AND e3.j = e2.j"""
-        .stripMargin.replace("\n", " "),
-
-    "graph_backbone_components" ->
-      s"""WITH RECURSIVE $cappedEvCteDuck,
-         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
-         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
-         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150),
-         |edges AS (SELECT i AS src, j AS dst FROM top
-         |  UNION ALL SELECT j, i FROM top),
-         |reach(v, r) AS (SELECT src, src FROM edges
-         |  UNION SELECT e.src, rc.r FROM edges e JOIN reach rc ON rc.v = e.dst)
-         |SELECT v AS vertex, min(r) AS component FROM reach GROUP BY v"""
-        .stripMargin.replace("\n", " "),
-
-    "graph_label_communities" ->
-      s"""WITH $cappedEvCteDuck,
-         |pr AS (SELECT a.it AS i, b.it AS j, count(*) AS t
-         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
-         |top AS (SELECT i, j FROM pr ORDER BY t DESC, i, j LIMIT 150),
-         |edges AS (SELECT i AS src, j AS dst FROM top
-         |  UNION ALL SELECT j, i FROM top),
-         |${GraphOps.lpaCtesDuck(LpaRounds)}
-         |SELECT v AS vertex, lab AS label FROM l$LpaRounds"""
-        .stripMargin.replace("\n", " "),
-
-    "graph_degree_profile" ->
-      s"""WITH $pairsEdgesCteDuck
-         |SELECT src AS vertex, count(*) AS out_degree,
-         |  CAST(sum(w) AS BIGINT) AS out_strength,
-         |  max(w) AS max_edge_w,
-         |  (1000 * max(w)) // CAST(sum(w) AS BIGINT) AS top_edge_permille
-         |FROM edges GROUP BY src""".stripMargin.replace("\n", " "),
-
-    "sketch_kmv_distinct" ->
-      s"""WITH $shingleHashCteDuck,
-         |ex AS (SELECT source, count(*) AS n_exact FROM shh GROUP BY 1),
-         |rk AS (SELECT source, h,
-         |  row_number() OVER (PARTITION BY source ORDER BY h) AS rk FROM shh),
-         |sk AS (SELECT source, count(*) AS kmv_k, max(h) AS hk
-         |  FROM rk WHERE rk <= 64 GROUP BY 1)
-         |SELECT sk.source, n_exact, kmv_k,
-         |  CASE WHEN kmv_k < 64 THEN kmv_k
-         |       ELSE ((kmv_k - 1) * ${Sketches.HashSpace}) // hk END
-         |    AS kmv_estimate
-         |FROM sk JOIN ex ON sk.source = ex.source"""
-        .stripMargin.replace("\n", " "),
-
-    "sketch_hll_distinct" -> hllSourceSqlDuck,
-
-    // the incremental path must land EXACTLY on the one-pass sketch —
-    // same oracle by construction
-    "sketch_hll_incremental" -> hllSourceSqlDuck,
-
-    "sketch_hll_daily_users" -> {
-      val m = 64; val restBits = 32 - 6
-      val numer = 709L * m * m * 1073741824L
-      s"""WITH hsh AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
-         |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-         |      AS BIGINT) AS h
-         |  FROM events),
-         |ex AS (SELECT day, count(*) AS n_exact FROM hsh GROUP BY 1),
-         |regs AS (SELECT day, h % $m AS bucket,
-         |  max(CASE WHEN h // $m = 0 THEN ${restBits + 1}
-         |      ELSE ${restBits + 1} - length(bin(h // $m)) END) AS r
-         |  FROM hsh GROUP BY 1, 2),
-         |den AS (SELECT day,
-         |  CAST(sum(1073741824 // (1 << r)) AS BIGINT)
-         |    + ($m - count(*)) * 1073741824 AS denom
-         |  FROM regs GROUP BY 1)
-         |SELECT den.day, n_exact,
-         |  $numer // (1000 * denom) AS hll_estimate
-         |FROM den JOIN ex ON den.day = ex.day"""
-        .stripMargin.replace("\n", " ")
-    },
-
-    "sketch_cms_heavy" -> {
-      val rows = (0 until 4).map { i =>
-        val (a, b) = (Dedup.MinhashA(i), Dedup.MinhashB(i))
-        s"SELECT key, $i AS r, (($a * hh + $b) % ${Dedup.MinhashP}) % 256 AS b FROM h"
-      }.mkString(" UNION ALL ")
-      s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS key FROM documents),
-         |h AS (SELECT key,
-         |  CAST(concat('0x', substr(md5(key), 1, 8)) AS BIGINT) AS hh FROM t),
-         |hb AS ($rows),
-         |cells AS (SELECT r, b, count(*) AS c FROM hb GROUP BY 1, 2),
-         |top AS (SELECT key, any_value(hh) AS hh, count(*) AS n_exact
-         |  FROM h GROUP BY key ORDER BY n_exact DESC, key LIMIT 20),
-         |probes AS (${(0 until 4).map { i =>
-             val (a, b) = (Dedup.MinhashA(i), Dedup.MinhashB(i))
-             s"SELECT key, n_exact, $i AS r, (($a * hh + $b) % ${Dedup.MinhashP}) % 256 AS b FROM top"
-           }.mkString(" UNION ALL ")})
-         |SELECT key, n_exact, min(c) AS cms_estimate
-         |FROM probes JOIN cells USING (r, b)
-         |GROUP BY key, n_exact""".stripMargin.replace("\n", " ")
-    },
-
-    "sketch_set_overlap" ->
-      s"""WITH $shingleHashCteDuck,
-         |bu AS (SELECT h FROM shh WHERE source = 'src0'),
-         |ask AS (SELECT source, h FROM (SELECT source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rk
-         |  FROM shh) t WHERE rk <= 64),
-         |bsk AS (SELECT h FROM (SELECT h,
-         |    row_number() OVER (ORDER BY h) AS rk FROM bu) t WHERE rk <= 64),
-         |gs AS (SELECT DISTINCT source FROM shh),
-         |mrg AS (SELECT source, h, max(ina) AS ina, max(inb) AS inb FROM (
-         |    SELECT source, h, 1 AS ina, 0 AS inb FROM ask
-         |    UNION ALL SELECT gs.source, bsk.h, 0, 1 FROM gs, bsk) u
-         |  GROUP BY 1, 2),
-         |usk AS (SELECT source, h, ina, inb FROM (SELECT source, h, ina, inb,
-         |    row_number() OVER (PARTITION BY source ORDER BY h) AS rk
-         |  FROM mrg) t WHERE rk <= 64),
-         |sk AS (SELECT source, count(*) AS ku, max(h) AS theta,
-         |    CAST(sum(CASE WHEN ina = 1 AND inb = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS kint
-         |  FROM usk GROUP BY 1),
-         |na AS (SELECT source, count(*) AS n_a FROM shh GROUP BY 1),
-         |nb AS (SELECT count(*) AS n_b FROM bu),
-         |ix AS (SELECT a.source, count(*) AS inter_exact
-         |  FROM shh a JOIN bu b ON a.h = b.h GROUP BY 1),
-         |ext AS (SELECT na.source, na.n_a AS n_a_exact, nb.n_b AS n_b_exact,
-         |    coalesce(ix.inter_exact, 0) AS inter_exact
-         |  FROM na CROSS JOIN nb LEFT JOIN ix ON ix.source = na.source),
-         |est AS (SELECT source, ku, kint,
-         |    CASE WHEN ku < 64 THEN ku
-         |         ELSE ((ku - 1) * ${Sketches.HashSpace}) // theta END
-         |      AS kmv_union_est
-         |  FROM sk)
-         |SELECT e.source, n_a_exact, n_b_exact, inter_exact,
-         |  n_a_exact + n_b_exact - inter_exact AS union_exact,
-         |  (1000 * inter_exact) // (n_a_exact + n_b_exact - inter_exact)
-         |    AS jacc_pm_exact,
-         |  kmv_union_est,
-         |  CASE WHEN ku < 64 THEN kint
-         |       ELSE (kint * kmv_union_est) // 64 END AS kmv_inter_est,
-         |  (1000 * kint) // ku AS kmv_jacc_pm_est
-         |FROM est JOIN ext e ON est.source = e.source"""
-        .stripMargin.replace("\n", " "),
-
-    "sketch_hll_rolling_users" -> {
-      val m = 64; val restBits = 32 - 6
-      val numer = 709L * m * m * 1073741824L
-      s"""WITH hsh AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
-         |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-         |      AS BIGINT) AS h
-         |  FROM events),
-         |regs AS (SELECT day, h % $m AS bucket,
-         |  max(CASE WHEN h // $m = 0 THEN ${restBits + 1}
-         |      ELSE ${restBits + 1} - length(bin(h // $m)) END) AS r
-         |  FROM hsh GROUP BY 1, 2),
-         |days AS (SELECT DISTINCT day FROM regs),
-         |scaf AS (SELECT day, b AS bucket
-         |  FROM days, UNNEST(range(0, $m)) AS t(b)),
-         |j AS (SELECT s.day, s.bucket, regs.r FROM scaf s
-         |  LEFT JOIN regs ON regs.day = s.day AND regs.bucket = s.bucket),
-         |roll AS (SELECT day, bucket, max(r) OVER (PARTITION BY bucket
-         |    ORDER BY day RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS r
-         |  FROM j),
-         |den AS (SELECT day,
-         |  CAST(sum(1073741824 // (1 << r)) AS BIGINT)
-         |    + ($m - count(r)) * 1073741824 AS denom
-         |  FROM roll GROUP BY 1),
-         |ex AS (SELECT d.day, count(DISTINCT e.h) AS n_exact
-         |  FROM days d JOIN hsh e ON e.day BETWEEN d.day - 6 AND d.day
-         |  GROUP BY 1)
-         |SELECT den.day, n_exact, $numer // (1000 * denom) AS hll_estimate
-         |FROM den JOIN ex ON den.day = ex.day"""
-        .stripMargin.replace("\n", " ")
-    },
-
-    "sketch_quantile_value" -> quantileSqlDuck,
-
-    // the sum-merged shards must land EXACTLY on the one-pass sketch —
-    // same oracle by construction (the HLL-incremental discipline)
-    "sketch_quantile_merge" -> quantileSqlDuck,
-
-    "bloom_prune_audit" -> bloomAuditSqlDuck,
-
-    // the BIT_OR-merged shards must land EXACTLY on the one-pass
-    // filter — same oracle by construction
-    "bloom_incremental" -> bloomAuditSqlDuck,
-
-    "graph_item_similarity_topk" ->
-      s"""WITH $cappedEvCteDuck,
-         |pr AS (SELECT a.it AS i, b.it AS j, CAST(count(*) AS BIGINT) AS t
-         |  FROM evc a JOIN evc b ON a.u = b.u AND a.it < b.it GROUP BY 1, 2),
-         |deg AS (SELECT it, CAST(count(*) AS BIGINT) AS du FROM evc GROUP BY 1),
-         |sym AS (SELECT i, j, t FROM pr UNION ALL SELECT j, i, t FROM pr),
-         |sc AS (SELECT sym.i, sym.j,
-         |    (t * 1000) // (di.du + dj.du - t) AS sim_permille
-         |  FROM sym JOIN deg di ON sym.i = di.it JOIN deg dj ON sym.j = dj.it),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY i
-         |    ORDER BY sim_permille DESC, j) AS BIGINT) AS rk FROM sc)
-         |SELECT i, j, sim_permille, rk FROM r WHERE rk <= 3"""
-        .stripMargin.replace("\n", " "),
-
-    "sample_weighted_priority" ->
-      """WITH b AS (SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |    (CAST(n_chars AS BIGINT) * 4294967296) //
-        |      (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |        AS BIGINT) + 1) AS priority
-        |  FROM documents WHERE n_chars > 0),
-        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY lang
-        |    ORDER BY priority DESC, doc_id) AS BIGINT) AS rk FROM b)
-        |SELECT lang, doc_id, n_chars, priority, rk FROM r WHERE rk <= 10"""
-        .stripMargin.replace("\n", " "),
-
-    "source_drift_chi2" ->
-      """WITH tokh AS (SELECT source,
-        |    CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS h
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)),
-        |tok AS (SELECT source, h, CAST(count(*) AS BIGINT) AS o
-        |  FROM tokh GROUP BY 1, 2),
-        |corpus AS (SELECT h, CAST(sum(o) AS BIGINT) AS c FROM tok GROUP BY 1),
-        |stt AS (SELECT source, CAST(sum(o) AS BIGINT) AS st,
-        |    CAST(count(*) AS BIGINT) AS n_distinct FROM tok GROUP BY 1),
-        |tt AS (SELECT CAST(sum(o) AS BIGINT) AS total FROM tok),
-        |j AS (SELECT tok.source, o, st, n_distinct,
-        |    CAST((CAST(c AS HUGEINT) * st) // tt.total AS BIGINT) AS e
-        |  FROM tok JOIN corpus USING (h) JOIN stt USING (source), tt)
-        |SELECT source, max(st) AS n_tokens, max(n_distinct) AS n_distinct,
-        |  CAST(sum((CAST(o - e AS HUGEINT) * (o - e) * 1000) // (e + 1))
-        |    AS BIGINT) AS chi2_scaled
-        |FROM j GROUP BY source""".stripMargin.replace("\n", " "),
-
-    "cdc_scd2_asof" ->
-      s"""WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |  event_type, CAST(round(value*100, 0) AS BIGINT) AS value_cents
-        |  FROM events),
-        |v AS (SELECT *, lead(ts_us) OVER (PARTITION BY user_id
-        |  ORDER BY ts_us, event_id) AS valid_to_us FROM c)
-        |SELECT user_id, event_type, value_cents,
-        |  ts_us AS valid_from_us, valid_to_us,
-        |  valid_to_us IS NULL AS is_current
-        |FROM v WHERE event_type <> 'error'
-        |  AND ts_us <= $AsOfUs
-        |  AND (valid_to_us IS NULL OR valid_to_us > $AsOfUs)"""
-        .stripMargin.replace("\n", " "),
-
-    "cdc_scd2_history" ->
-      """WITH c AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |  event_type, CAST(round(value*100, 0) AS BIGINT) AS value_cents
-        |  FROM events),
-        |v AS (SELECT *, lead(ts_us) OVER (PARTITION BY user_id
-        |  ORDER BY ts_us, event_id) AS valid_to_us FROM c)
-        |SELECT user_id, event_type, value_cents,
-        |  ts_us AS valid_from_us, valid_to_us,
-        |  valid_to_us IS NULL AS is_current
-        |FROM v WHERE event_type <> 'error'""".stripMargin.replace("\n", " ")
-  )
 }

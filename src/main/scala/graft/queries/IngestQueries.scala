@@ -75,20 +75,29 @@ object IngestQueries {
       |  || CASE WHEN doc_id % 9 = 0 THEN '#top' ELSE '' END"""
       .stripMargin.replace("\n", " ")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Canonical-URL dedup — URL-level exact dedup done RIGHT: raw crawl
     // URLs collapse to canonical page keys (scheme/www/port/fragment/
     // tracking-param/trailing-slash invariance), per source the raw vs
     // canonical distinct counts = the dedup win. Zero-shuffle
     // canonicalization; one countDistinct exchange.
-    "url_canonical_dedup" -> ((s, dir) =>
+    Gate("url_canonical_dedup", (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("url", docUrlDecorated)
         .withColumn("cu", graft.functions.Domains.canonicalUrl(col("url")))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("url")).as("n_raw_distinct"),
-          countDistinct(col("cu")).as("n_canon_distinct"))),
+          countDistinct(col("cu")).as("n_canon_distinct")),
+      s"""WITH u AS (SELECT source, ($docUrlDecoratedSqlDuck) AS url
+         |  FROM documents),
+         |c AS (SELECT source, url,
+         |  ${graft.functions.Domains.canonicalUrlSqlDuck("url")} AS cu
+         |  FROM u)
+         |SELECT source, count(*) AS n_docs,
+         |  count(DISTINCT url) AS n_raw_distinct,
+         |  count(DISTINCT cu) AS n_canon_distinct
+         |FROM c GROUP BY source""".stripMargin.replace("\n", " ")),
 
     // Registrable-domain (eTLD+1) quality grouping — the FineWeb-style
     // domain-level reputation unit: hosts news.X.co.uk / www.X.co.uk /
@@ -96,16 +105,41 @@ object IngestQueries {
     // per domain are the admission table sourceReputationFilter keys on
     // at crawl scale. Pure codegen extraction (regexp + split + IN) —
     // one partial-agg shuffle on the derived domain.
-    "domain_quality_stats" -> ((s, dir) =>
+    Gate("domain_quality_stats", (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("domain", graft.functions.Domains.urlDomain(docUrl))
         .groupBy("domain")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("tot_chars"),
           expr("sum(size(array_distinct(split(text, ' '))) * 1000 div " +
-            "size(split(text, ' '))) div count(1)").as("mean_diversity_permille"))),
+            "size(split(text, ' '))) div count(1)").as("mean_diversity_permille")),
+      {
+        val urlSql =
+          """'https://' ||
+            |  CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'www.' WHEN 1 THEN 'news.'
+            |    WHEN 2 THEN '' ELSE 'a.b.' END
+            |  || source || '.' ||
+            |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'com' WHEN 1 THEN 'co.uk'
+            |    ELSE 'org' END
+            |  || CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END
+            |  || '/p/' || CAST(doc_id AS VARCHAR) || '?q=1'"""
+            .stripMargin.replace("\n", " ")
+        s"""WITH u AS (SELECT doc_id, text, n_chars, ($urlSql) AS url
+           |  FROM documents),
+           |hh AS (SELECT *, ${graft.functions.Domains.hostSqlDuck("url")} AS h
+           |  FROM u),
+           |dd AS (SELECT *,
+           |  ${graft.functions.Domains.registrableDomainSqlDuck("h")} AS domain
+           |  FROM hh)
+           |SELECT domain, count(*) AS n_docs,
+           |  CAST(sum(n_chars) AS BIGINT) AS tot_chars,
+           |  CAST(sum(len(list_distinct(string_split(text, ' '))) * 1000
+           |    // len(string_split(text, ' '))) // count(*) AS BIGINT)
+           |    AS mean_diversity_permille
+           |FROM dd GROUP BY domain""".stripMargin.replace("\n", " ")
+      }),
 
-    "jsonl_ingest_stats" -> ((s, dir) => {
+    Gate("jsonl_ingest_stats", (s, dir) => {
       val parsed = ingested(s, dir)
       val (valid, dlq) = TextIngest.split(parsed, Seq("doc_id", "text"))
       val v = valid.groupBy(col("lang"))
@@ -117,52 +151,11 @@ object IngestQueries {
           lit(null).cast("long").as("sum_doc_id"),
           lit(null).cast("long").as("text_hash_sum"))
       v.unionByName(d)
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "url_canonical_dedup" ->
-      s"""WITH u AS (SELECT source, ($docUrlDecoratedSqlDuck) AS url
-         |  FROM documents),
-         |c AS (SELECT source, url,
-         |  ${graft.functions.Domains.canonicalUrlSqlDuck("url")} AS cu
-         |  FROM u)
-         |SELECT source, count(*) AS n_docs,
-         |  count(DISTINCT url) AS n_raw_distinct,
-         |  count(DISTINCT cu) AS n_canon_distinct
-         |FROM c GROUP BY source""".stripMargin.replace("\n", " "),
-
-    "domain_quality_stats" -> {
-      val urlSql =
-        """'https://' ||
-          |  CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'www.' WHEN 1 THEN 'news.'
-          |    WHEN 2 THEN '' ELSE 'a.b.' END
-          |  || source || '.' ||
-          |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'com' WHEN 1 THEN 'co.uk'
-          |    ELSE 'org' END
-          |  || CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END
-          |  || '/p/' || CAST(doc_id AS VARCHAR) || '?q=1'"""
-          .stripMargin.replace("\n", " ")
-      s"""WITH u AS (SELECT doc_id, text, n_chars, ($urlSql) AS url
-         |  FROM documents),
-         |hh AS (SELECT *, ${graft.functions.Domains.hostSqlDuck("url")} AS h
-         |  FROM u),
-         |dd AS (SELECT *,
-         |  ${graft.functions.Domains.registrableDomainSqlDuck("h")} AS domain
-         |  FROM hh)
-         |SELECT domain, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS tot_chars,
-         |  CAST(sum(len(list_distinct(string_split(text, ' '))) * 1000
-         |    // len(string_split(text, ' '))) // count(*) AS BIGINT)
-         |    AS mean_diversity_permille
-         |FROM dd GROUP BY domain""".stripMargin.replace("\n", " ")
     },
-
-    // the oracle never parses JSON — it partitions the ORIGINAL rows by
-    // the same doc_id % 10 rule and aggregates the original columns, so
-    // it checks that serialize → corrupt → parse → split is LOSSLESS on
-    // the surviving 90% and routes exactly the other 10%
-    "jsonl_ingest_stats" ->
+      // the oracle never parses JSON — it partitions the ORIGINAL rows by
+      // the same doc_id % 10 rule and aggregates the original columns, so
+      // it checks that serialize → corrupt → parse → split is LOSSLESS on
+      // the surviving 90% and routes exactly the other 10%
       """SELECT CASE WHEN doc_id % 10 = 0 THEN '__corrupt__' ELSE lang END AS lang,
         |  count(*) AS n,
         |  CAST(sum(CASE WHEN doc_id % 10 = 0 THEN NULL ELSE doc_id END)
@@ -171,6 +164,6 @@ object IngestQueries {
         |    ELSE CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT) END)
         |    AS BIGINT) AS text_hash_sum
         |FROM documents
-        |GROUP BY 1""".stripMargin.replace("\n", " ")
+        |GROUP BY 1""".stripMargin.replace("\n", " "))
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,7 +17,7 @@ import graft.ops.SkewProfile
   */
 object MaintenanceQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Incremental cluster-map maintenance: prior labels built over 2/3
     // of the corpus, then one delta batch (every doc_id ≡ 0 mod 3) is
     // folded in via cluster contraction — CC runs over the DELTA-sized
@@ -26,7 +25,7 @@ object MaintenanceQueries {
     // equi-join. The oracle is the FULL-corpus recursive closure
     // (dedup_clusters' SQL): the gate's whole claim is that the
     // incremental fold lands bit-exactly on the full recompute.
-    "dedup_clusters_incremental" -> ((s, dir) => {
+    Gate("dedup_clusters_incremental", (s, dir) => {
       val docs = Tables.documents(s, dir)
       // ONE banding pass over the full corpus, split into prior/delta
       // pair sets (r18, guide §1.2 step 1: the previous shape ran the
@@ -47,21 +46,46 @@ object MaintenanceQueries {
       val delta = pairs
         .filter(col("doc_a") % 3 === 0 || col("doc_b") % 3 === 0)
       Dedup.incrementalComponents(priorLabels, delta, "doc_a", "doc_b")
-    }),
+    },
+      // the full-corpus closure — incremental == full recompute IS the
+      // contract, so the oracle is dedup_clusters' SQL verbatim
+      s"""WITH RECURSIVE ${DedupQueries.lshCtes},
+         |prs AS (${DedupQueries.lshPairSelect}),
+         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM prs
+         |  UNION ALL SELECT doc_b, doc_a FROM prs),
+         |reach(v, r) AS (SELECT src, src FROM edges
+         |  UNION SELECT e.src, rc.r FROM edges e JOIN reach rc ON rc.v = e.dst)
+         |SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v"""
+        .stripMargin.replace("\n", " ")),
 
     // Pre-flight shuffle-key skew audit over the event log's user_id —
     // the measurement that picks plain vs salted vs broadcast BEFORE
     // the join is committed: top-20 heaviest keys with their share and
     // hot-factor (n_rows over the uniform per-key expectation, ×1000).
-    "skew_key_profile" -> ((s, dir) =>
+    Gate("skew_key_profile", (s, dir) =>
       SkewProfile.keySkewProfile(Tables.events(s, dir), col("user_id"),
-        topN = 20)),
+        topN = 20),
+      // n_total sums to HUGEINT in DuckDB — every derived ratio CASTs
+      // back to BIGINT (the export discipline)
+      """WITH c AS (SELECT user_id AS key, count(*) AS n_rows
+        |    FROM events WHERE user_id IS NOT NULL GROUP BY 1),
+        |t AS (SELECT count(*) AS n_keys,
+        |    CAST(sum(n_rows) AS BIGINT) AS n_total FROM c),
+        |top AS (SELECT key, n_rows,
+        |    row_number() OVER (ORDER BY n_rows DESC, key) AS rank
+        |  FROM c ORDER BY n_rows DESC, key LIMIT 20)
+        |SELECT key, rank, n_rows,
+        |  (n_rows * 1000) // n_total AS share_permille,
+        |  CAST((CAST(n_rows AS HUGEINT) * n_keys * 1000) // n_total
+        |    AS BIGINT) AS hot_factor_permille,
+        |  n_keys, n_total
+        |FROM top CROSS JOIN t""".stripMargin.replace("\n", " ")),
 
     // Referential-integrity orphan audit over the replicated warehouse:
     // parents pruned by deterministic retention predicates (the CDC
     // delete/TTL shape) so the audit has real orphans to count — one
     // LEFT-join pass per relation, dimension parents broadcast.
-    "ri_orphan_audit" -> ((s, dir) =>
+    Gate("ri_orphan_audit", (s, dir) =>
       graft.recon.Integrity.orphanAudit(Seq(
         ("orders->customer", Tables.orders(s, dir), Seq("o_custkey"),
           Tables.customer(s, dir).filter(col("c_custkey") % 7 =!= 0),
@@ -75,7 +99,31 @@ object MaintenanceQueries {
           Tables.supplier(s, dir).filter(col("s_suppkey") % 5 =!= 0),
           Seq("s_suppkey")),
         ("customer->nation", Tables.customer(s, dir), Seq("c_nationkey"),
-          Tables.nation(s, dir), Seq("n_nationkey"))))),
+          Tables.nation(s, dir), Seq("n_nationkey")))),
+      {
+        def leg(name: String, childSql: String, ck: String,
+            parentSql: String, pk: String): String =
+          s"""SELECT '$name' AS relation, count(*) AS n_child,
+             |  CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END)
+             |    AS BIGINT) AS n_orphans,
+             |  (1000 * CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END)
+             |    AS BIGINT)) // count(*) AS orphan_permille
+             |FROM ($childSql) c LEFT JOIN
+             |  (SELECT DISTINCT $pk FROM ($parentSql)) p ON c.$ck = p.$pk"""
+            .stripMargin
+        Seq(
+          leg("orders->customer", "SELECT * FROM orders", "o_custkey",
+            "SELECT * FROM customer WHERE c_custkey % 7 <> 0", "c_custkey"),
+          leg("lineitem->orders", "SELECT * FROM lineitem", "l_orderkey",
+            "SELECT * FROM orders", "o_orderkey"),
+          leg("lineitem->part", "SELECT * FROM lineitem", "l_partkey",
+            "SELECT * FROM part WHERE p_partkey % 3 <> 0", "p_partkey"),
+          leg("lineitem->supplier", "SELECT * FROM lineitem", "l_suppkey",
+            "SELECT * FROM supplier WHERE s_suppkey % 5 <> 0", "s_suppkey"),
+          leg("customer->nation", "SELECT * FROM customer", "c_nationkey",
+            "SELECT * FROM nation", "n_nationkey"))
+          .mkString(" UNION ALL ").replace("\n", " ")
+      }),
 
     // Lost-range detection over the CDC sequence: deterministic
     // retention predicates carve gaps out of the event-id space, and
@@ -83,97 +131,29 @@ object MaintenanceQueries {
     // bucket-decomposed so nothing corpus-sized globally sorts. The
     // oracle computes the same ranges with the naive full-sequence lag,
     // proving the decomposition exact.
-    "cdc_gap_ranges" -> ((s, dir) =>
+    Gate("cdc_gap_ranges", (s, dir) =>
       graft.recon.Completeness.gapRanges(
         Tables.events(s, dir).filter(col("event_id") % 97 =!= 13 &&
           expr("((event_id div 64) % 50)") =!= 7),
-        col("event_id"), topK = 20, bucketSize = 4096)),
-
-    // Duplicate-delivery profile: two deterministic redelivery slices
-    // unioned onto the stream (the at-least-once shape), audited per
-    // event type — redelivery rate, worst id, extra-row per-mille.
-    "cdc_dup_delivery" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      graft.recon.Completeness.duplicateDeliveryAudit(
-        ev.unionByName(ev.filter(col("event_id") % 11 === 3))
-          .unionByName(ev.filter(col("event_id") % 101 === 5)),
-        col("event_id"), "event_type")
-    }),
-
-    // Out-of-order-arrival profile per event type: event-time
-    // regressions within each user's arrival (event_id) order — the
-    // watermark-sizing audit (late share, worst regression, total
-    // disorder budget), integer µs end-to-end.
-    "event_lateness_profile" -> ((s, dir) =>
-      graft.ops.EventAnalytics.latenessProfile(Tables.events(s, dir),
-        keyCol = "user_id", seqCol = "event_id", tsUsCol = "ts_us",
-        groupCol = "event_type")))
-
-  val oracleSql: Map[String, String] = Map(
-    // the full-corpus closure — incremental == full recompute IS the
-    // contract, so the oracle is dedup_clusters' SQL verbatim
-    "dedup_clusters_incremental" ->
-      s"""WITH RECURSIVE ${LlmQueries.lshCtes},
-         |prs AS (${LlmQueries.lshPairSelect}),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs),
-         |reach(v, r) AS (SELECT src, src FROM edges
-         |  UNION SELECT e.src, rc.r FROM edges e JOIN reach rc ON rc.v = e.dst)
-         |SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v"""
-        .stripMargin.replace("\n", " "),
-
-    // n_total sums to HUGEINT in DuckDB — every derived ratio CASTs
-    // back to BIGINT (the export discipline)
-    "skew_key_profile" ->
-      """WITH c AS (SELECT user_id AS key, count(*) AS n_rows
-        |    FROM events WHERE user_id IS NOT NULL GROUP BY 1),
-        |t AS (SELECT count(*) AS n_keys,
-        |    CAST(sum(n_rows) AS BIGINT) AS n_total FROM c),
-        |top AS (SELECT key, n_rows,
-        |    row_number() OVER (ORDER BY n_rows DESC, key) AS rank
-        |  FROM c ORDER BY n_rows DESC, key LIMIT 20)
-        |SELECT key, rank, n_rows,
-        |  (n_rows * 1000) // n_total AS share_permille,
-        |  CAST((CAST(n_rows AS HUGEINT) * n_keys * 1000) // n_total
-        |    AS BIGINT) AS hot_factor_permille,
-        |  n_keys, n_total
-        |FROM top CROSS JOIN t""".stripMargin.replace("\n", " "),
-
-    "ri_orphan_audit" -> {
-      def leg(name: String, childSql: String, ck: String,
-          parentSql: String, pk: String): String =
-        s"""SELECT '$name' AS relation, count(*) AS n_child,
-           |  CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_orphans,
-           |  (1000 * CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT)) // count(*) AS orphan_permille
-           |FROM ($childSql) c LEFT JOIN
-           |  (SELECT DISTINCT $pk FROM ($parentSql)) p ON c.$ck = p.$pk"""
-          .stripMargin
-      Seq(
-        leg("orders->customer", "SELECT * FROM orders", "o_custkey",
-          "SELECT * FROM customer WHERE c_custkey % 7 <> 0", "c_custkey"),
-        leg("lineitem->orders", "SELECT * FROM lineitem", "l_orderkey",
-          "SELECT * FROM orders", "o_orderkey"),
-        leg("lineitem->part", "SELECT * FROM lineitem", "l_partkey",
-          "SELECT * FROM part WHERE p_partkey % 3 <> 0", "p_partkey"),
-        leg("lineitem->supplier", "SELECT * FROM lineitem", "l_suppkey",
-          "SELECT * FROM supplier WHERE s_suppkey % 5 <> 0", "s_suppkey"),
-        leg("customer->nation", "SELECT * FROM customer", "c_nationkey",
-          "SELECT * FROM nation", "n_nationkey"))
-        .mkString(" UNION ALL ").replace("\n", " ")
-    },
-
-    "cdc_gap_ranges" ->
+        col("event_id"), topK = 20, bucketSize = 4096),
       """WITH ids AS (SELECT DISTINCT event_id AS id FROM events
         |  WHERE event_id % 97 <> 13 AND ((event_id // 64) % 50) <> 7),
         |g AS (SELECT lag(id) OVER (ORDER BY id) AS p, id FROM ids)
         |SELECT p + 1 AS gap_start, id - 1 AS gap_end, id - p - 1 AS gap_len
         |FROM g WHERE p IS NOT NULL AND id > p + 1
         |ORDER BY gap_len DESC, gap_start LIMIT 20"""
-        .stripMargin.replace("\n", " "),
+        .stripMargin.replace("\n", " ")),
 
-    "cdc_dup_delivery" ->
+    // Duplicate-delivery profile: two deterministic redelivery slices
+    // unioned onto the stream (the at-least-once shape), audited per
+    // event type — redelivery rate, worst id, extra-row per-mille.
+    Gate("cdc_dup_delivery", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      graft.recon.Completeness.duplicateDeliveryAudit(
+        ev.unionByName(ev.filter(col("event_id") % 11 === 3))
+          .unionByName(ev.filter(col("event_id") % 101 === 5)),
+        col("event_id"), "event_type")
+    },
       """WITH r AS (SELECT event_type, event_id FROM events
         |  UNION ALL SELECT event_type, event_id FROM events
         |    WHERE event_id % 11 = 3
@@ -189,9 +169,16 @@ object MaintenanceQueries {
         |  CAST(max(c) AS BIGINT) AS max_copies,
         |  (1000 * CAST(sum(c - 1) AS BIGINT)) // CAST(sum(c) AS BIGINT)
         |    AS dup_permille
-        |FROM c GROUP BY 1""".stripMargin.replace("\n", " "),
+        |FROM c GROUP BY 1""".stripMargin.replace("\n", " ")),
 
-    "event_lateness_profile" ->
+    // Out-of-order-arrival profile per event type: event-time
+    // regressions within each user's arrival (event_id) order — the
+    // watermark-sizing audit (late share, worst regression, total
+    // disorder budget), integer µs end-to-end.
+    Gate("event_lateness_profile", (s, dir) =>
+      graft.ops.EventAnalytics.latenessProfile(Tables.events(s, dir),
+        keyCol = "user_id", seqCol = "event_id", tsUsCol = "ts_us",
+        groupCol = "event_type"),
       """WITH l AS (SELECT event_type, epoch_us(ts) AS ts_us,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |      ORDER BY event_id) AS prev
@@ -207,4 +194,5 @@ object MaintenanceQueries {
         |       ELSE (1000 * CAST(sum(CASE WHEN ts_us < prev THEN 1 ELSE 0
         |         END) AS BIGINT)) // count(prev) END AS late_permille
         |FROM l GROUP BY 1""".stripMargin.replace("\n", " "))
+  )
 }

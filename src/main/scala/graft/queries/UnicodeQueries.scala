@@ -20,69 +20,22 @@ object UnicodeQueries {
   private def ud(s: SparkSession, dir: String): DataFrame =
     Unicode.withUtext(Tables.documents(s, dir))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // NFC canonical composition: decomposed e+U+0301 / jamo / U+212B
     // inputs must normalize to their precomposed twins (changed=true),
     // stable text must pass through untouched
-    "unicode_normalize" -> ((s, dir) =>
-      Unicode.normalizeProfile(ud(s, dir), "utext")),
-
-    // codepoint-class segmentation: CJK one-token-per-char + \p{L}-run
-    // tokens elsewhere — the multilingual token_count
-    "unicode_token_count" -> ((s, dir) =>
-      Unicode.tokenProfile(ud(s, dir), "utext")),
-
-    // per-doc script mix over raw text (combining marks still visible)
-    "unicode_script_profile" -> ((s, dir) =>
-      Unicode.scriptProfile(ud(s, dir), "utext")),
-
-    // exact dedup keyed on md5(NFC(text)): byte-distinct spellings of
-    // the same text land in one cluster (n_raw_variants > 1)
-    "unicode_dedup_clusters" -> ((s, dir) =>
-      Unicode.nfcDedupClusters(ud(s, dir), "utext")),
-
-    // codepoint vs UTF-8 byte vs printable-ASCII width parity
-    "unicode_width_stats" -> ((s, dir) =>
-      Unicode.widthStats(ud(s, dir), "utext")),
-
-    // the stream twin: two doc_id-parity batch registers folded through
-    // the merge identity must land on the batch clusters exactly —
-    // oracle shared verbatim with unicode_dedup_clusters
-    "unicode_dedup_stream" -> ((s, dir) => {
-      val docs = ud(s, dir)
-      Unicode.clustersFromRegisters(Unicode.mergeNfcRegisters(
-        Unicode.nfcDedupRegisters(docs.filter(col("doc_id") % 2 === 0), "utext"),
-        Unicode.nfcDedupRegisters(docs.filter(col("doc_id") % 2 === 1), "utext")))
-    }),
-
-    // BPE trained on the MULTILINGUAL word stream through the unchanged
-    // training loop (the wf seam): merges and the final segmentation —
-    // the tokenizer-on-real-corpora leg of the unicode tier
-    "unicode_bpe_merges" -> ((s, dir) =>
-      graft.llm.Bpe.learnMergesFromWf(
-        Unicode.wordFreqs(ud(s, dir), "utext"), UMergeRounds)._1),
-
-    "unicode_bpe_segment" -> ((s, dir) =>
-      graft.llm.Bpe.segmented(
-        graft.llm.Bpe.learnMergesFromWf(
-          Unicode.wordFreqs(ud(s, dir), "utext"), UMergeRounds)._2)
-        .select("word", "freq", "form", "n_tokens"))
-  )
-
-  /** Unicode BPE merge rounds — matches the ASCII gates' k. */
-  private val UMergeRounds = 6
-
-  private val UD = Unicode.utextCteDuck
-
-  val oracleSql: Map[String, String] = Map(
-    "unicode_normalize" ->
+    Gate("unicode_normalize", (s, dir) =>
+      Unicode.normalizeProfile(ud(s, dir), "utext"),
       s"""WITH $UD
          |SELECT doc_id, nfc_normalize(utext) <> utext AS changed,
          |  length(nfc_normalize(utext)) AS n_cp,
          |  nfc_normalize(utext) AS norm_text
-         |FROM ud""".stripMargin.replace("\n", " "),
+         |FROM ud""".stripMargin.replace("\n", " ")),
 
-    "unicode_token_count" ->
+    // codepoint-class segmentation: CJK one-token-per-char + \p{L}-run
+    // tokens elsewhere — the multilingual token_count
+    Gate("unicode_token_count", (s, dir) =>
+      Unicode.tokenProfile(ud(s, dir), "utext"),
       s"""WITH $UD,
          |nf AS (SELECT doc_id, nfc_normalize(utext) AS nfc FROM ud),
          |pre AS (SELECT doc_id, nfc,
@@ -91,9 +44,11 @@ object UnicodeQueries {
          |SELECT doc_id,
          |  len(regexp_extract_all(pre, '${Unicode.RunTokenPat}')) AS n_tokens,
          |  len(regexp_extract_all(nfc, '${Unicode.CjkCharPat}')) AS n_cjk
-         |FROM pre""".stripMargin.replace("\n", " "),
+         |FROM pre""".stripMargin.replace("\n", " ")),
 
-    "unicode_script_profile" ->
+    // per-doc script mix over raw text (combining marks still visible)
+    Gate("unicode_script_profile", (s, dir) =>
+      Unicode.scriptProfile(ud(s, dir), "utext"),
       s"""WITH $UD
          |SELECT doc_id,
          |  len(regexp_extract_all(utext, '${Unicode.LatinPat}')) AS n_latin,
@@ -105,33 +60,60 @@ object UnicodeQueries {
          |  len(regexp_extract_all(utext, '${Unicode.HangulPat}')) AS n_hangul,
          |  len(regexp_extract_all(utext, '${Unicode.EmojiPat}')) AS n_emoji,
          |  len(regexp_extract_all(utext, '${Unicode.CombiningPat}')) AS n_marks
-         |FROM ud""".stripMargin.replace("\n", " "),
+         |FROM ud""".stripMargin.replace("\n", " ")),
 
-    "unicode_dedup_clusters" ->
+    // exact dedup keyed on md5(NFC(text)): byte-distinct spellings of
+    // the same text land in one cluster (n_raw_variants > 1)
+    Gate("unicode_dedup_clusters", (s, dir) =>
+      Unicode.nfcDedupClusters(ud(s, dir), "utext"),
       s"""WITH $UD
          |SELECT md5(nfc_normalize(utext)) AS norm_h,
          |  min(doc_id) AS keeper_doc_id, count(*) AS n_copies,
          |  count(DISTINCT utext) AS n_raw_variants
-         |FROM ud GROUP BY 1""".stripMargin.replace("\n", " "),
+         |FROM ud GROUP BY 1""".stripMargin.replace("\n", " ")),
 
-    "unicode_width_stats" ->
+    // codepoint vs UTF-8 byte vs printable-ASCII width parity
+    Gate("unicode_width_stats", (s, dir) =>
+      Unicode.widthStats(ud(s, dir), "utext"),
       s"""WITH $UD
          |SELECT doc_id, length(utext) AS n_chars, strlen(utext) AS n_bytes,
          |  len(regexp_extract_all(utext, '${Unicode.AsciiPrintPat}')) AS n_ascii
-         |FROM ud""".stripMargin.replace("\n", " "),
+         |FROM ud""".stripMargin.replace("\n", " ")),
 
-    // the stream fold must land on the BATCH clusters — one oracle
-    "unicode_dedup_stream" ->
+    // the stream twin: two doc_id-parity batch registers folded through
+    // the merge identity must land on the batch clusters exactly —
+    // oracle shared verbatim with unicode_dedup_clusters
+    Gate("unicode_dedup_stream", (s, dir) => {
+      val docs = ud(s, dir)
+      Unicode.clustersFromRegisters(Unicode.mergeNfcRegisters(
+        Unicode.nfcDedupRegisters(docs.filter(col("doc_id") % 2 === 0), "utext"),
+        Unicode.nfcDedupRegisters(docs.filter(col("doc_id") % 2 === 1), "utext")))
+    },
+      // the stream fold must land on the BATCH clusters — one oracle
       s"""WITH $UD
          |SELECT md5(nfc_normalize(utext)) AS norm_h,
          |  min(doc_id) AS keeper_doc_id, count(*) AS n_copies,
          |  count(DISTINCT utext) AS n_raw_variants
-         |FROM ud GROUP BY 1""".stripMargin.replace("\n", " "),
+         |FROM ud GROUP BY 1""".stripMargin.replace("\n", " ")),
 
-    "unicode_bpe_merges" ->
-      graft.llm.Bpe.mergesSqlDuckFrom(Unicode.bpeInitCtesDuck, UMergeRounds),
+    // BPE trained on the MULTILINGUAL word stream through the unchanged
+    // training loop (the wf seam): merges and the final segmentation —
+    // the tokenizer-on-real-corpora leg of the unicode tier
+    Gate("unicode_bpe_merges", (s, dir) =>
+      graft.llm.Bpe.learnMergesFromWf(
+        Unicode.wordFreqs(ud(s, dir), "utext"), UMergeRounds)._1,
+      graft.llm.Bpe.mergesSqlDuckFrom(Unicode.bpeInitCtesDuck, UMergeRounds)),
 
-    "unicode_bpe_segment" ->
-      graft.llm.Bpe.segmentedSqlDuckFrom(Unicode.bpeInitCtesDuck, UMergeRounds)
+    Gate("unicode_bpe_segment", (s, dir) =>
+      graft.llm.Bpe.segmented(
+        graft.llm.Bpe.learnMergesFromWf(
+          Unicode.wordFreqs(ud(s, dir), "utext"), UMergeRounds)._2)
+        .select("word", "freq", "form", "n_tokens"),
+      graft.llm.Bpe.segmentedSqlDuckFrom(Unicode.bpeInitCtesDuck, UMergeRounds))
   )
+
+  /** Unicode BPE merge rounds — matches the ASCII gates' k. */
+  private val UMergeRounds = 6
+
+  private val UD = Unicode.utextCteDuck
 }

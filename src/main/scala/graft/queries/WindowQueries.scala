@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,10 +23,10 @@ object WindowQueries {
 
   private val TrailingWindowUs = 2592000000000L // 30 d RANGE frame
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // Per-customer running order total in date order — the classic
     // cumulative-balance statement shape (ROWS UNBOUNDED PRECEDING).
-    "window_running_balance" -> ((s, dir) => {
+    Gate("window_running_balance", (s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -40,13 +39,18 @@ object WindowQueries {
           // UTC on both engines so the cast is instant-preserving
           unix_micros(col("o_orderdate").cast("timestamp")).as("order_date_us"),
           col("running_total"))
-    }),
+    },
+      """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
+        |FROM orders""".stripMargin.replace("\n", " ")),
 
     // Integer percent_rank / cume_dist per nation over account balance
     // — both rendered as exact per-mille from rank()/count() (the float
     // window built-ins don't hash-compare across engines; the integer
     // forms are the same statistics).
-    "window_percent_rank" -> ((s, dir) => {
+    Gate("window_percent_rank", (s, dir) => {
       val w = Window.partitionBy("c_nationkey")
         .orderBy(col("bal_cents"), col("c_custkey"))
       val cw = Window.partitionBy("c_nationkey")
@@ -60,12 +64,24 @@ object WindowQueries {
             .otherwise(expr("((_rk - 1) * 1000) div (_n - 1)")))
         .withColumn("cd_permille", expr("(_rk * 1000) div _n"))
         .drop("_rk", "_n")
-    }),
+    },
+      """WITH b AS (SELECT c_nationkey, c_custkey,
+        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS bal_cents
+        |  FROM customer),
+        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY c_nationkey
+        |    ORDER BY bal_cents, c_custkey) AS BIGINT) AS rk,
+        |    CAST(count(*) OVER (PARTITION BY c_nationkey) AS BIGINT) AS n
+        |  FROM b)
+        |SELECT c_nationkey, c_custkey, bal_cents,
+        |  CASE WHEN n = 1 THEN 0 ELSE ((rk - 1) * 1000) // (n - 1) END
+        |    AS pr_permille,
+        |  (rk * 1000) // n AS cd_permille
+        |FROM r""".stripMargin.replace("\n", " ")),
 
     // Per-source doc-length deciles: boundary d (1..10) = the token
     // count at exact rank ceil(n*d/10) — the distribution profile a
     // curation run eyeballs, no float percentile.
-    "source_token_deciles" -> ((s, dir) => {
+    Gate("source_token_deciles", (s, dir) => {
       val docs = Tables.documents(s, dir)
         .select(col("source"), col("doc_id"),
           graft.llm.TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"))
@@ -80,91 +96,7 @@ object WindowQueries {
         .filter(col("_rk") === expr("(_n * decile + 9) div 10"))
         .select(col("source"), col("decile").cast("long").as("decile"),
           col("n_tok").as("boundary_tokens"))
-    }),
-
-    // Per-nation balance quartiles: ntile within each nation partition,
-    // then quartile population stats. min/max are picked values (no
-    // float arithmetic); the sum goes through exact integer cents.
-    "ntile_nation_balance" -> ((s, dir) => {
-      val w = Window.partitionBy("c_nationkey")
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      Tables.customer(s, dir)
-        .withColumn("quartile", ntile(NtileBuckets).over(w))
-        .groupBy("c_nationkey", "quartile")
-        .agg(count(lit(1)).as("n"),
-          min("c_acctbal").as("min_bal"),
-          max("c_acctbal").as("max_bal"),
-          sum(expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)")).as("sum_cents"))
-    }),
-
-    // Per-user inter-event gaps via lag(): the session-gap profile that
-    // feeds gap-threshold sessionization — all integer microseconds.
-    "events_gap_stats" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("gap_us", col("ts_us") - lag("ts_us", 1).over(w))
-        .filter(col("gap_us").isNotNull)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_gaps"),
-          sum("gap_us").as("sum_gap_us"),
-          min("gap_us").as("min_gap_us"),
-          max("gap_us").as("max_gap_us"))
-    }),
-
-    // Trailing-30-day spend per order: a RANGE frame over the epoch-µs
-    // order date — the moving-window shape ROWS frames can't express
-    // (ties and gaps in dates are handled by value, not position).
-    "window_trailing_spend" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("order_date_us"))
-        .rangeBetween(-TrailingWindowUs, 0L)
-      Tables.orders(s, dir)
-        .withColumn("order_date_us",
-          unix_micros(col("o_orderdate").cast("timestamp")))
-        .withColumn("trailing_spend",
-          sum(expr("CAST(o_totalprice AS DECIMAL(18,2))")).over(w)
-            .cast("double"))
-        .select("o_custkey", "o_orderkey", "order_date_us", "trailing_spend")
-    }),
-
-    // Click→purchase attribution through the stream-stream-capable
-    // interval join (same plan runs on streaming inputs with watermarked
-    // state — StreamAttributionSpec proves batch/stream parity): per
-    // purchase, clicks by the same user in the prior 24 h and the latest
-    // such click.
-    "events_click_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      graft.streaming.StreamOps.clickAttribution(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"),
-        AttributionWindowUs)
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "window_running_balance" ->
-      """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total
-        |FROM orders""".stripMargin.replace("\n", " "),
-
-    "window_percent_rank" ->
-      """WITH b AS (SELECT c_nationkey, c_custkey,
-        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS bal_cents
-        |  FROM customer),
-        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY c_nationkey
-        |    ORDER BY bal_cents, c_custkey) AS BIGINT) AS rk,
-        |    CAST(count(*) OVER (PARTITION BY c_nationkey) AS BIGINT) AS n
-        |  FROM b)
-        |SELECT c_nationkey, c_custkey, bal_cents,
-        |  CASE WHEN n = 1 THEN 0 ELSE ((rk - 1) * 1000) // (n - 1) END
-        |    AS pr_permille,
-        |  (rk * 1000) // n AS cd_permille
-        |FROM r""".stripMargin.replace("\n", " "),
-
-    "source_token_deciles" ->
+    },
       """WITH d AS (SELECT source, doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
         |  FROM documents),
@@ -176,9 +108,22 @@ object WindowQueries {
         |SELECT source, CAST(u.d AS BIGINT) AS decile,
         |  n_tok AS boundary_tokens
         |FROM r, unnest(range(1, 11)) AS u(d)
-        |WHERE rk = (n * u.d + 9) // 10""".stripMargin.replace("\n", " "),
+        |WHERE rk = (n * u.d + 9) // 10""".stripMargin.replace("\n", " ")),
 
-    "ntile_nation_balance" ->
+    // Per-nation balance quartiles: ntile within each nation partition,
+    // then quartile population stats. min/max are picked values (no
+    // float arithmetic); the sum goes through exact integer cents.
+    Gate("ntile_nation_balance", (s, dir) => {
+      val w = Window.partitionBy("c_nationkey")
+        .orderBy(col("c_acctbal"), col("c_custkey"))
+      Tables.customer(s, dir)
+        .withColumn("quartile", ntile(NtileBuckets).over(w))
+        .groupBy("c_nationkey", "quartile")
+        .agg(count(lit(1)).as("n"),
+          min("c_acctbal").as("min_bal"),
+          max("c_acctbal").as("max_bal"),
+          sum(expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)")).as("sum_cents"))
+    },
       s"""WITH q AS (SELECT c_nationkey, c_acctbal,
          |    ntile($NtileBuckets) OVER (PARTITION BY c_nationkey
          |      ORDER BY c_acctbal, c_custkey) AS quartile
@@ -187,9 +132,22 @@ object WindowQueries {
          |  min(c_acctbal) AS min_bal, max(c_acctbal) AS max_bal,
          |  CAST(sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
          |FROM q GROUP BY c_nationkey, quartile"""
-        .stripMargin.replace("\n", " "),
+        .stripMargin.replace("\n", " ")),
 
-    "events_gap_stats" ->
+    // Per-user inter-event gaps via lag(): the session-gap profile that
+    // feeds gap-threshold sessionization — all integer microseconds.
+    Gate("events_gap_stats", (s, dir) => {
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("ts_us"), col("event_id"))
+      Tables.events(s, dir)
+        .withColumn("gap_us", col("ts_us") - lag("ts_us", 1).over(w))
+        .filter(col("gap_us").isNotNull)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_gaps"),
+          sum("gap_us").as("sum_gap_us"),
+          min("gap_us").as("min_gap_us"),
+          max("gap_us").as("max_gap_us"))
+    },
       """WITH g AS (SELECT user_id,
         |    epoch_us(ts) - lag(epoch_us(ts)) OVER (
         |      PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS gap_us
@@ -198,18 +156,43 @@ object WindowQueries {
         |  CAST(sum(gap_us) AS BIGINT) AS sum_gap_us,
         |  min(gap_us) AS min_gap_us, max(gap_us) AS max_gap_us
         |FROM g WHERE gap_us IS NOT NULL GROUP BY user_id"""
-        .stripMargin.replace("\n", " "),
+        .stripMargin.replace("\n", " ")),
 
-    "window_trailing_spend" ->
+    // Trailing-30-day spend per order: a RANGE frame over the epoch-µs
+    // order date — the moving-window shape ROWS frames can't express
+    // (ties and gaps in dates are handled by value, not position).
+    Gate("window_trailing_spend", (s, dir) => {
+      val w = Window.partitionBy("o_custkey")
+        .orderBy(col("order_date_us"))
+        .rangeBetween(-TrailingWindowUs, 0L)
+      Tables.orders(s, dir)
+        .withColumn("order_date_us",
+          unix_micros(col("o_orderdate").cast("timestamp")))
+        .withColumn("trailing_spend",
+          sum(expr("CAST(o_totalprice AS DECIMAL(18,2))")).over(w)
+            .cast("double"))
+        .select("o_custkey", "o_orderkey", "order_date_us", "trailing_spend")
+    },
       s"""SELECT o_custkey, o_orderkey,
          |  epoch_us(o_orderdate) AS order_date_us,
          |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
          |    PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate)
          |    RANGE BETWEEN $TrailingWindowUs PRECEDING AND CURRENT ROW)
          |    AS DOUBLE) AS trailing_spend
-         |FROM orders""".stripMargin.replace("\n", " "),
+         |FROM orders""".stripMargin.replace("\n", " ")),
 
-    "events_click_attribution" ->
+    // Click→purchase attribution through the stream-stream-capable
+    // interval join (same plan runs on streaming inputs with watermarked
+    // state — StreamAttributionSpec proves batch/stream parity): per
+    // purchase, clicks by the same user in the prior 24 h and the latest
+    // such click.
+    Gate("events_click_attribution", (s, dir) => {
+      val ev = Tables.events(s, dir)
+      graft.streaming.StreamOps.clickAttribution(
+        ev.filter(col("event_type") === "click"),
+        ev.filter(col("event_type") === "purchase"),
+        AttributionWindowUs)
+    },
       s"""WITH c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS cts
          |    FROM events WHERE event_type = 'click'),
          |p AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS pts
@@ -225,6 +208,6 @@ object WindowQueries {
          |SELECT a.purchase_id, a.user_id, a.pts AS purchase_ts_us,
          |  a.n_clicks, r.click_id AS last_click_id, r.cts AS last_click_ts_us
          |FROM agg a JOIN r ON a.purchase_id = r.purchase_id AND r.rn = 1"""
-        .stripMargin.replace("\n", " ")
+        .stripMargin.replace("\n", " "))
   )
 }

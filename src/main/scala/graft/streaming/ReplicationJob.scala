@@ -299,7 +299,7 @@ object ReplicationJob {
     val obs = Observation()
     val tagged = graft.util.Materialize.stable(
       batch.coalesce(spark.sparkContext.defaultParallelism)
-        .withColumn("error_type", err).withColumn("_is_truncate", isTruncate)
+        .select(col("*"), err.as("error_type"), isTruncate.as("_is_truncate"))
         .observe(obs, ctlAggs.head, ctlAggs.tail: _*))
     // visible to the finally block: if anything on the main thread throws
     // while the concurrent upsert is still running, the cached batch must
@@ -322,10 +322,9 @@ object ReplicationJob {
     // Truncate events are table-wide control operations, not rows: they
     // carry no key state, so they are excluded from the LWW fold and
     // applied to the target after the upsert (below).
-    val enriched = valid.filter(!isTruncate)
-      .withColumn("_cdc_deleted", col("event_type") === cfg.deleteType)
-      .withColumn("_cdc_timestamp_micros", col("ts_us"))
-      .withColumn("_last_event_id", col("event_id"))
+    val enriched = valid.filter(!isTruncate).select(col("*"),
+      (col("event_type") === cfg.deleteType).as("_cdc_deleted"),
+      col("ts_us").as("_cdc_timestamp_micros"), col("event_id").as("_last_event_id"))
     // The target, chosen once per batch: a JDBC table, or the parquet
     // state store that both the upsert and the truncate below run against.
     val target: Either[graft.sink.JdbcLwwExecutor.Target, ParquetStateStore] =
@@ -399,8 +398,8 @@ object ReplicationJob {
       // finally-block unpersist: record it, await the upsert, then throw
       try StreamingState.writeBatch(dlq.coalesce(dlqParts)
           .crossJoin(perBatch.hint("shuffle_replicate_nl"))
-          .withColumn("resolution_status", lit("PENDING"))
-          .withColumn("resolved_at_us", lit(null).cast("long")),
+          .select(col("*"), lit("PENDING").as("resolution_status"),
+            lit(null).cast("long").as("resolved_at_us")),
         cfg.dlqDir, batchId)
       catch { case t: Throwable => dlqErr = t }
     }

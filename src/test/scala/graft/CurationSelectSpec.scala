@@ -280,7 +280,7 @@ class CurationSelectSpec extends SparkSpecBase {
   }
 
   test("grouping sets plan: one Expand, no cartesian") {
-    val p = graft.queries.TpchQueries.queries("grouping_sets_revenue")(
+    val p = SparkEntry.queries("grouping_sets_revenue")(
       spark, sfDir).queryExecution.executedPlan.toString
     assert(p.contains("Expand"), "grouping sets must compile to Expand + one agg")
     assert(!p.contains("CartesianProduct"))

@@ -166,7 +166,7 @@ class TpchDecorrelationSpec extends SparkSpecBase {
     for (t <- Seq("orders", "lineitem", "part", "supplier", "customer",
         "nation", "region"))
       Tables.load(spark, dir, t).createOrReplaceTempView(t)
-    graft.queries.TpchQueries3.partsupp(spark, dir)
+    graft.queries.TpchQueries.partsupp(spark, dir)
       .createOrReplaceTempView("partsupp")
     val got = df.orderBy(sortCols.head, sortCols.tail: _*).collect().toSeq
     val want = spark.sql(sql).orderBy(sortCols.head, sortCols.tail: _*).collect().toSeq

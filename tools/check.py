@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run Verify's parquet
-dumps against DuckDB executing SparkEntry.oracleSql over the same fixture
-tables, compare strictly (columns sorted by name, rows sorted, exact cell
+dumps against DuckDB executing each gate's oracle SQL (SparkEntry.oracleSql,
+which Verify dumps as oracle_sql.json) over the same fixture tables, and
+compare strictly (columns sorted by name, rows sorted, exact cell
 equality). Usage: tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
 import sys, os, json, glob, decimal, math
