@@ -87,7 +87,6 @@ object BytesAudit {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       }.stages)
-      graft.util.Materialize.releaseTracked(spark)
       System.err.println(f"[bytes] $sfDir%-28s $name%-34s " +
         f"shuffle=${b.shuffleTotal}%12d spill=${b.memSpill + b.diskSpill}%12d")
       name -> b

@@ -104,8 +104,8 @@ object PlanLint {
       // --- bnl-join: Materialize.stable() hides the bound ---
       // these broadcast a stable()'d FIXED-SIZE table (centroid /
       // codebook samples: orderBy md5 + LIMIT numCentroids; or a
-      // register-sized rank/distribution table) — the default local-
-      // checkpoint materialization truncates lineage, so the bounding
+      // register-sized rank/distribution table) — stable() returns a
+      // checkpointed leaf in EVERY mode, so the bounding
       // TakeOrdered/limit/aggregate upstream is structurally invisible
       // to the walk and the bound is documented here instead
       ("ann_ivf_topk", "bnl-join") -> seeds,
@@ -268,13 +268,11 @@ object PlanLint {
     */
   def run(spark: SparkSession, sfDir: String,
       only: Set[String] = Set.empty): Seq[Hit] = {
-    val hits = SparkEntry.queries.toSeq.sortBy(_._1)
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .flatMap { case (name, fn) =>
-        try lintPlan(name, fn(spark, sfDir).queryExecution.sparkPlan)
-        finally { graft.util.Materialize.releaseTracked(spark); () }
+        lintPlan(name, fn(spark, sfDir).queryExecution.sparkPlan)
       }
-    hits
   }
 
   def toJson(sfDir: String, nQueries: Int, hits: Seq[Hit],
@@ -303,8 +301,7 @@ object PlanLint {
     // covers every gate cheaply; the executed section EXECUTES the
     // queries AQE actually re-plans the hardest and lints what ran
     val execHits = ScaleAudit.heavy.sorted.flatMap { name =>
-      try lintExecuted(name, SparkEntry.queries(name)(spark, sfDir))
-      finally { graft.util.Materialize.releaseTracked(spark); () }
+      lintExecuted(name, SparkEntry.queries(name)(spark, sfDir))
     }
     val bad = hits.filterNot(_.allowed) ++ execHits.filterNot(_.allowed)
     val json = toJson(sfDir, SparkEntry.queries.size, hits,

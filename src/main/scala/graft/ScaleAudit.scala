@@ -112,7 +112,6 @@ object ScaleAudit {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       }
-      graft.util.Materialize.releaseTracked(spark)
       val maxTasks = m.stages.map(_.numTasks).maxOption.getOrElse(0)
       if (maxTasks < width) collapsed ::= name
       f""""$name":{"stages":${m.stages.size},"max_tasks":$maxTasks,"wall_s":${m.seconds}%.2f}"""

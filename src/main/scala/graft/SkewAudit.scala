@@ -109,7 +109,6 @@ object SkewAudit {
       val run = Harness.measure(spark) {
         mk().write.format("noop").mode("overwrite").save()
       }
-      graft.util.Materialize.releaseTracked(spark)
       // straggler ratio of the HEAVIEST stage (by summed task time) with
       // enough tasks for a median to mean something
       val byStage = run.tasks.groupBy(_._1).filter(_._2.size >= 4)

@@ -29,12 +29,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally {
-        // the long-lived-session discipline: operators whose result plans
-        // read their stable() caches release between requests, not inside
-        graft.util.Materialize.releaseTracked(spark)
-        ()
-      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -693,10 +693,10 @@ object Dedup {
     * shallow (a duplicate family collapses in 2-3 rounds); for
     * adversarially long path graphs the alternating large-star/small-star
     * variant (Kiveris et al., "Connected Components in MapReduce") bounds
-    * rounds at O(log² n) with the same per-round join shape. Lineage is
-    * truncated every round ([[graft.util.Materialize.barrier]]) — an
-    * iterative plan otherwise grows exponentially and re-executes every
-    * prior round on each action.
+    * rounds at O(log² n) with the same per-round join shape. Each round
+    * ends on a checkpointed leaf ([[graft.util.Materialize.stable]],
+    * released by `ContextCleaner`) — an iterative plan otherwise grows
+    * exponentially and re-executes every prior round on each action.
     *
     * Convergence is detected with one tiny aggregate per round (labels
     * only ever decrease, so Σ labels strictly decreases iff any vertex
@@ -714,8 +714,7 @@ object Dedup {
       pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
     val edges = graft.util.Materialize.stable(
       p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
-    graft.util.Materialize.release(p)
-    var labels = graft.util.Materialize.barrier(
+    var labels = graft.util.Materialize.stable(
       edges.select(col("src").as("v")).distinct().withColumn("l", col("v")))
     // coalesce: sum over ZERO rows is NULL — an empty pair set (no
     // near-dups found) must converge immediately, not NPE the compare
@@ -728,7 +727,7 @@ object Dedup {
     while (!done && i < maxIter) {
       val viaNbr = edges.join(labels, col("dst") === col("v"))
         .select(col("src").as("v"), col("l"))
-      val next = graft.util.Materialize.barrier(
+      val next = graft.util.Materialize.stable(
         labels.union(viaNbr).groupBy("v").agg(min("l").as("l")))
       val cur = checksum(next)
       done = cur.compareTo(prev) == 0
@@ -736,7 +735,6 @@ object Dedup {
       labels = next
       i += 1
     }
-    graft.util.Materialize.release(edges)
     recordConvergence(metrics, "minlabel", i, done)
     if (!done) {
       // partial propagation SPLITS components (labels diverge from the
@@ -802,7 +800,7 @@ object Dedup {
       localThreshold: Long = 1L << 20): DataFrame = {
     val p0 = graft.util.Materialize.stable(
       pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    var edges = graft.util.Materialize.barrier(
+    var edges = graft.util.Materialize.stable(
       p0.filter(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
         .distinct())
@@ -810,9 +808,8 @@ object Dedup {
     // their own singleton cluster (its symmetrized edge (v,v) survives),
     // so this variant must too — the self-loop filter above would
     // otherwise silently drop them from the output contract
-    val selfVerts = graft.util.Materialize.barrier(
+    val selfVerts = graft.util.Materialize.stable(
       p0.filter(col("a") === col("b")).select(col("a").as("doc_id")).distinct())
-    graft.util.Materialize.release(p0)
     def withSelfSingletons(labels: DataFrame): DataFrame =
       labels.union(
         selfVerts.join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -864,8 +861,8 @@ object Dedup {
     var i = 0
     while (!done && i < maxIter &&
         !(integralIds && prev._1 <= localThreshold)) {
-      val ls = graft.util.Materialize.barrier(largeStar(edges))
-      val next = graft.util.Materialize.barrier(smallStar(ls))
+      val ls = graft.util.Materialize.stable(largeStar(edges))
+      val next = graft.util.Materialize.stable(smallStar(ls))
       val cur = checksum(next)
       done = cur == prev
       prev = cur

@@ -66,7 +66,8 @@ object Shuffling {
       else spark.sessionState.conf.numShufflePartitions
     // materialized so the counts pass and the numbering pass see the SAME
     // partitioning (range boundaries are deterministic, but one exchange
-    // is cheaper than two — and persist-mode survives executor loss)
+    // is cheaper than two — and persist mode reads a lost block from its
+    // replica)
     val keyed = graft.util.Materialize.stable(
       df.select(idAsLong(idCol).as("doc_id"), hash64(col(idCol)).as("_h"))
         .repartitionByRange(p, col("_h"), col("doc_id"))

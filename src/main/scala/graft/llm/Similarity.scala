@@ -903,9 +903,8 @@ object Similarity {
         .orderBy(col("_near").asc, col("vec_id"))
         .limit(1)
         .select("vec_id", "centv", "ncent")
-      seeds = graft.util.Materialize.barrier(seeds.unionByName(next))
+      seeds = graft.util.Materialize.stable(seeds.unionByName(next))
     }
-    graft.util.Materialize.release(base)
     seeds.select(col("vec_id").as("cent_id"), col("centv"), col("ncent"))
   }
 
@@ -971,7 +970,7 @@ object Similarity {
     */
   def kmeansCentroidsWith(corpus: DataFrame, seeds: DataFrame, iters: Int,
       metrics: Option[graft.ops.Metrics.Registry] = None): DataFrame = {
-    var cents = graft.util.Materialize.barrier(seeds)
+    var cents = graft.util.Materialize.stable(seeds)
     var rounds = 0
     for (_ <- 1 to iters) {
       val assigned = assignCells(corpus, cents, "cid", "cv", "nc", keep = 1)
@@ -981,7 +980,7 @@ object Similarity {
         .groupBy("cell").agg(
           expr("transform(array_sort(collect_list(named_struct('p', pos, 'v', s div n)))," +
             " x -> x.v)").as("centv"))
-      cents = graft.util.Materialize.barrier(
+      cents = graft.util.Materialize.stable(
         cents.select(col("cent_id"), col("centv").as("_old"), col("ncent").as("_oldn"))
           .join(means.withColumnRenamed("cell", "cent_id")
             .withColumnRenamed("centv", "_new"), Seq("cent_id"), "left")
@@ -1187,9 +1186,7 @@ object Similarity {
         .select(col("vec_id"), quantize(col("embedding")).as("qv"))
         .select(col("vec_id"), posexplode(array((0 until m).map(i =>
           expr(s"slice(qv, ${i * w + 1}, $w)")): _*)).as(Seq("m", "sv"))))
-    val out = lloydOnSubs(subs, pqCodebooks(corpus, m, kCent), iters)
-    graft.util.Materialize.release(subs)
-    out
+    lloydOnSubs(subs, pqCodebooks(corpus, m, kCent), iters)
   }
 
   /** The per-subspace Lloyd loop over ANY (vec_id, m, sv) sub-vector
@@ -1202,7 +1199,7 @@ object Similarity {
   private def lloydOnSubs(subs: DataFrame, seed: DataFrame,
       iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var cb = graft.util.Materialize.barrier(seed)
+    var cb = graft.util.Materialize.stable(seed)
     for (_ <- 1 to iters) {
       val win = Window.partitionBy("vec_id", "m")
         .orderBy(col("d").asc, col("code"))
@@ -1217,7 +1214,7 @@ object Similarity {
         .groupBy("m", "code").agg(
           expr("transform(array_sort(collect_list(named_struct('p', pos, 'v', s div c)))," +
             " x -> x.v)").as("_new"))
-      cb = graft.util.Materialize.barrier(
+      cb = graft.util.Materialize.stable(
         cb.join(means, Seq("m", "code"), "left")
           .select(col("m"), col("code"),
             coalesce(col("_new"), col("cv")).as("cv")))
@@ -1248,10 +1245,8 @@ object Similarity {
         .withColumn("_r", expr("zip_with(qv, centv, (a, b) -> a - b)"))
         .select(col("vec_id"), posexplode(array((0 until m).map(i =>
           expr(s"slice(_r, ${i * w + 1}, $w)")): _*)).as(Seq("m", "sv"))))
-    val out = lloydOnSubs(subs,
+    lloydOnSubs(subs,
       residualCodebooks(corpus, coarse, numCentroids, m, kCent), iters)
-    graft.util.Materialize.release(subs)
-    out
   }
 
   /** PQ asymmetric-distance top-k (the ADC construction): the query's
@@ -1613,8 +1608,7 @@ object Similarity {
     def prep(df: DataFrame, id: String, v: String) =
       df.select(col("vec_id").as(id), quantize(col("embedding")).as(v))
         .withColumn("code", expr(bucketSql(v, spark = true, nBits)))
-    // both frames feed two stages each — materialize once (tracked; the
-    // session's release discipline sweeps them between requests)
+    // both frames feed two stages each — materialize once
     val q = graft.util.Materialize.stable(prep(queries, "qid", "qv")
       .withColumn("nq", dotQ("qv", "qv")))
     val c = graft.util.Materialize.stable(prep(Dedup.widen(corpus), "cid", "cv")

@@ -63,7 +63,7 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
       }
     // materialize BEFORE the state write: the state append must not race
     // the novelty read of the same directory on lazy re-execution
-    val out = graft.util.Materialize.barrier(novel)
+    val out = graft.util.Materialize.stable(novel)
     StreamingState.writeBatch(out.select("_h"), stateDir, batchId)
     out.drop("_h")
   }

@@ -281,14 +281,14 @@ object ReplicationJob {
     // O(batch), never O(stream).
     //
     // The control row is an `observe` on the barrier's OWN action: the
-    // eager localCheckpoint / checkpoint / persist count runs the
-    // CollectMetrics node exactly once over every tagged row, so the row
-    // costs no job of its own. That is safe where an observe on the upsert
-    // job was not: there the CollectMetrics node fed a union with existing
-    // state, and Spark never delivered the metrics from the second
-    // micro-batch on. Every later consumer reads the materialized rows, so
-    // the node runs nowhere else. Delivery is still asynchronous (a
-    // query-execution listener), hence the bounded wait in [[controlRow]].
+    // eager checkpoint (every mode) runs the CollectMetrics node exactly
+    // once over every tagged row, so the row costs no job of its own.
+    // That is safe where an observe on the upsert job was not: there the
+    // CollectMetrics node fed a union with existing state, and Spark
+    // never delivered the metrics from the second micro-batch on. Every
+    // later consumer reads the materialized rows, so the node runs nowhere
+    // else. Delivery is still asynchronous (a query-execution listener),
+    // hence the bounded wait in [[controlRow]].
     //
     // Packed first with a narrow coalesce to at most one partition per
     // core: the Kafka and parquet sources hand over one partition per
@@ -302,8 +302,9 @@ object ReplicationJob {
         .select(col("*"), err.as("error_type"), isTruncate.as("_is_truncate"))
         .observe(obs, ctlAggs.head, ctlAggs.tail: _*))
     // visible to the finally block: if anything on the main thread throws
-    // while the concurrent upsert is still running, the cached batch must
-    // not be unpersisted out from under the in-flight job — drain first
+    // while the concurrent upsert is still running, the batch must not
+    // return (and its replay start) with that upsert still writing the
+    // target — drain first
     var pendingUpsert: Future[Unit] = null
     try {
     val ctl = controlRow(obs.future, batchId)
@@ -395,7 +396,7 @@ object ReplicationJob {
         java.util.List.of(Row(ctl.getAs[Long]("dlq_max_ts"))),
         StructType(Seq(StructField("failed_at_us", LongType, nullable = false))))
       // a DLQ failure must not leak a still-running upsert job past the
-      // finally-block unpersist: record it, await the upsert, then throw
+      // batch's end: record it, await the upsert, then throw
       try StreamingState.writeBatch(dlq.coalesce(dlqParts)
           .crossJoin(perBatch.hint("shuffle_replicate_nl"))
           .select(col("*"), lit("PENDING").as("resolution_status"),
@@ -437,13 +438,12 @@ object ReplicationJob {
     }
     cfg.backpressureChannel.foreach(
       AdmissionControl.reportLatency(_, (System.nanoTime() - batchT0) / 1e9))
-    // release the per-trigger materialization: in `persist` mode the cache
-    // entry lives until explicit unpersist, and a long-running stream must
-    // not accumulate one cached batch per trigger
+    // The tagged batch is a checkpointed leaf in every mode; its blocks
+    // are released by `ContextCleaner` once the trigger drops the frame,
+    // so a long-running stream keeps no cached batch per trigger.
     } finally {
       if (pendingUpsert != null && !pendingUpsert.isCompleted)
         scala.util.Try(Await.ready(pendingUpsert, Duration.Inf))
-      graft.util.Materialize.release(tagged)
     }
   }
 

@@ -69,7 +69,7 @@ final class StreamingScd(spark: SparkSession, changesDir: String,
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy((keyCols :+ tsUsCol :+ eventIdCol).map(col): _*)
       .orderBy(col("_is_del").desc)
-    val compacted = graft.util.Materialize.barrier(
+    val compacted = graft.util.Materialize.stable(
       merged.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1).drop("_rn"))
     compacted.write.mode(SaveMode.Overwrite)
@@ -79,7 +79,7 @@ final class StreamingScd(spark: SparkSession, changesDir: String,
     // overwrite exactly those history partitions
     val logTouched = spark.read.parquet(changesDir)
       .filter(col("_kb").isin(touched: _*))
-    val refolded = graft.util.Materialize.barrier(
+    val refolded = graft.util.Materialize.stable(
       Scd.scd2History(logTouched, keyCols,
           Seq(col(tsUsCol), col(eventIdCol)), tsUsCol,
           col("_is_del"), payloadCols)

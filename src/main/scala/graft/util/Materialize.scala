@@ -4,104 +4,56 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization of a DataFrame that feeds multiple plan branches
-  * (self-joins, size lookups): a LAZY `persist()` races when AQE launches
-  * the branches concurrently against a cold cache (measured ~6× recompute
-  * of the postings table in the Jaccard join), so every mode here is
-  * EAGER.
-  *
-  * Mode is `spark.graft.materialize`:
-  *  - `local` (default): `localCheckpoint(eager)` — fastest on local[n],
-  *    but non-replicated and lineage-truncating: on a real cluster an
-  *    executor loss kills the job. Test/bench default only.
-  *  - `persist`: eager `persist(MEMORY_AND_DISK)` — keeps lineage, so an
-  *    executor loss recomputes the lost partitions; the cluster default.
-  *  - `checkpoint`: reliable `checkpoint()` into
-  *    `sparkContext.setCheckpointDir` (HDFS/object store) — survives any
-  *    executor loss without recompute; for very expensive upstreams.
+  * (self-joins, size lookups) or closes a round of an iterative operator:
+  * a LAZY `persist()` races when AQE launches the branches concurrently
+  * against a cold cache (measured ~6× recompute of the postings table in
+  * the Jaccard join), so every mode here is EAGER.
   */
 object Materialize {
 
-  // persist-mode frames created by stable(), per session. Operators whose
-  // RESULT plan still references the cached frame cannot release inside
-  // themselves — a long-lived service calls releaseTracked() between
-  // requests instead. A plain strong-keyed map + an explicit sweep of
-  // stopped sessions: the previous WeakHashMap could never collect an
-  // entry because its DataFrame values strongly reference the session key
-  // via df.sparkSession, so "weak keys" was a fiction — the sweep frees
-  // dead sessions' entries deterministically on the next stable()/
-  // releaseTracked() call instead of hoping for GC.
-  private val tracked =
-    new java.util.HashMap[org.apache.spark.sql.SparkSession,
-      java.util.ArrayList[DataFrame]]()
-
-  private def sweepStopped(): Unit = {
-    val it = tracked.keySet().iterator()
-    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-  }
-
-  def stable(df: DataFrame): DataFrame = {
-    df.sparkSession.conf.get("spark.graft.materialize", "local") match {
-      case "persist" =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count() // eager: populate the cache before any branch races on it
-        tracked.synchronized {
-          sweepStopped()
-          tracked.computeIfAbsent(df.sparkSession, _ => new java.util.ArrayList[DataFrame]())
-            .add(p)
-        }
-        p
-      case "checkpoint" => df.checkpoint(eager = true)
-      case _            => df.localCheckpoint(eager = true)
-    }
-  }
-
-  /** Unpersist every persist-mode frame [[stable]] created on this
-    * session whose consumer is done. The dedup/similarity operators
-    * return plans that still read their cached inputs, so they cannot
-    * release internally; without this, a service invoking them per
-    * request accumulates one MEMORY_AND_DISK entry per call until OOM
-    * (CacheManager entries are not GC-managed). No-op in local/checkpoint
-    * modes; double-unpersist of frames already released individually is
-    * harmless.
+  /** Materialize `df` eagerly and return a frame over a checkpointed leaf:
+    * in every mode the returned logical plan is one `LogicalRDD` and the
+    * RDD lineage stops there. An iterative operator that re-reads the
+    * previous round therefore plans, renders and keeps a plan of constant
+    * size, not one that doubles per round.
+    *
+    * Mode is `spark.graft.materialize`:
+    *  - `local` (default): `localCheckpoint(eager)` — fastest on local[n];
+    *    blocks are not replicated, so on a real cluster an executor loss
+    *    fails the job. Test/bench default.
+    *  - `persist`: `localCheckpoint(eager, MEMORY_AND_DISK_2)` — the
+    *    cluster default: a lost block is read from its replica; losing
+    *    every replica fails the job, as in `local` mode.
+    *  - `checkpoint`: reliable `checkpoint(eager)` into
+    *    `sparkContext.setCheckpointDir` (HDFS/object store) — survives any
+    *    executor loss; for very expensive upstreams.
+    *
+    * Condition every mode must keep: the returned frame must NEVER
+    * recompute `df` from its sources. Callers overwrite what they read (a
+    * state store rewriting the files its own input scan reads, a
+    * compaction swapping its inputs): an executor lost mid-overwrite that
+    * recomputed its partitions from those files would read what the
+    * committer is replacing — silent corruption. With the lineage cut the
+    * same loss FAILS the job, and the caller's replay converges through
+    * the idempotent fold — failing is safe, re-reading overwritten files
+    * is not.
+    *
+    * The blocks are released by Spark's `ContextCleaner` once the frame is
+    * unreachable: the checkpointed RDD is registered for cleanup like any
+    * persisted RDD, so no caller unpersists.
     */
-  def releaseTracked(spark: org.apache.spark.sql.SparkSession): Int =
-    tracked.synchronized {
-      sweepStopped()
-      val list = tracked.remove(spark)
-      if (list == null) 0
-      else {
-        list.forEach(df => { df.unpersist(blocking = false); () })
-        list.size()
-      }
-    }
-
-  /** Materialization barrier for OVERWRITE-WHAT-YOU-READ plans (a state
-    * store rewriting the files its own input scan reads): unlike
-    * [[stable]], this must TRUNCATE lineage. In `persist` mode lineage
-    * survives, so an executor lost mid-overwrite would recompute its
-    * partitions from files the committer is already replacing — silent
-    * corruption. With a truncated lineage the same loss merely FAILS the
-    * job (localCheckpoint is non-replicated), and the caller's replay
-    * converges via the idempotent fold — failing is safe, re-reading
-    * overwritten files is not. `checkpoint` mode (replicated, reliable)
-    * is used when configured; everything else gets localCheckpoint.
-    */
-  def barrier(df: DataFrame): DataFrame =
+  def stable(df: DataFrame): DataFrame =
     df.sparkSession.conf.get("spark.graft.materialize", "local") match {
+      case "persist"    => df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_2)
       case "checkpoint" => df.checkpoint(eager = true)
       case _            => df.localCheckpoint(eager = true)
     }
 
-  /** Release a frame returned by [[stable]] once every consumer has run.
-    * REQUIRED on repeating paths (a streaming micro-batch, a per-bucket
-    * state rewrite): in `persist` mode Spark's CacheManager holds the
-    * cached plan until an explicit unpersist, so a long-running stream
-    * would otherwise accumulate one cached copy per trigger and OOM.
-    * `checkpoint`/`local` frames are GC-managed (ContextCleaner) — no-op.
+  /** Always 0: [[stable]] keeps no registry to release, since
+    * `ContextCleaner` frees every mode's blocks once the frame is
+    * unreachable. Kept only for the frozen benchmark harness, which calls
+    * it between passes; remove it with that call at the next benchmark
+    * change.
     */
-  def release(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get("spark.graft.materialize", "local") == "persist") {
-      df.unpersist(blocking = false)
-      ()
-    }
+  def releaseTracked(spark: org.apache.spark.sql.SparkSession): Int = 0
 }

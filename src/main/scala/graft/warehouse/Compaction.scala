@@ -36,8 +36,10 @@ object Compaction {
     * preserved exactly; file count shrinks to the target. The rewrite
     * reads the ENTIRE directory once and writes once — at cluster
     * scale run it per partition directory (shard=K/, dt=…/) so each
-    * rewrite is bounded; `Materialize.barrier`-style temp+swap keeps
-    * the read and the overwrite of the same path apart.
+    * rewrite is bounded. The temp+swap keeps the read and the overwrite
+    * of the same path apart, as `Materialize.stable`'s checkpointed leaf
+    * does for an in-memory rewrite (there the blocks, not a directory,
+    * hold the rows, and `ContextCleaner` releases them).
     * Returns (filesBefore, filesAfter, rows).
     */
   def compact(spark: SparkSession, dir: String,

@@ -99,15 +99,22 @@ class HarnessSpec extends SparkSpecBase {
   private def code(src: String): String =
     src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
 
-  test("SparkSession.builder() and addSparkListener appear only in Harness.scala") {
+  test("session builders, listeners and caching appear only in their one owning file") {
+    val owner = Seq(
+      "SparkSession.builder()" -> "graft/Harness.scala",
+      "addSparkListener" -> "graft/Harness.scala",
+      "localCheckpoint(" -> "util/Materialize.scala",
+      ".checkpoint(eager" -> "util/Materialize.scala",
+      ".persist(" -> "util/Materialize.scala")
     val files = mainSources()
     val offenders = for {
-      f <- files if f.getFileName.toString != "Harness.scala"
-      pat <- Seq("SparkSession.builder()", "addSparkListener")
+      f <- files
+      (pat, home) <- owner if !f.endsWith(home)
       if code(Files.readString(f)).contains(pat)
     } yield s"$pat in $f"
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    assert(files.exists(_.getFileName.toString == "Harness.scala"))
+    owner.map(_._2).distinct.foreach(home =>
+      assert(files.exists(_.endsWith(home)), home))
   }
 
   test("the codegen cache bound and CodeGenerator appear only in GraftCodegenBridge.scala") {

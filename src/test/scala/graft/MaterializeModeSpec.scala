@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.streaming.ReplicationJob
 
 /** The cluster materialization mode (`spark.graft.materialize=persist`)
-  * must produce identical results to the local[n] default AND release its
-  * cache per use — a leak here only ever surfaces as an executor OOM on a
-  * real cluster, days in.
+  * must produce identical results to the local[n] default AND leave no
+  * cached block behind once its frames are unreachable — a leak here only
+  * ever surfaces as an executor OOM on a real cluster, days in.
   */
 class MaterializeModeSpec extends SparkSpecBase {
   import spark.implicits._
@@ -44,82 +44,63 @@ class MaterializeModeSpec extends SparkSpecBase {
       "session cache hygiene must be able to drop every query-mode entry")
   }
 
-  test("persist mode: releaseTracked drains the dedup operators' pinned caches") {
-    inMode("persist") {
-      val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "q w e r t"))
-        .toDF("doc_id", "text")
-      // operators whose RESULT plans read their stable() caches — they
-      // cannot release internally
-      graft.llm.Dedup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, thresholdNum = 7, thresholdDen = 10).count()
-      assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-        "expected pinned cache entries after a persist-mode dedup run")
-      val released = graft.util.Materialize.releaseTracked(spark)
-      assert(released > 0, "releaseTracked must report the drained entries")
-      // unpersist is async; poll briefly for the cache to drain
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (spark.sparkContext.getPersistentRDDs.nonEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"leaked: ${spark.sparkContext.getPersistentRDDs.keys}")
-    }
-  }
-
-  test("persist mode: decontam pins nothing; retrieval/curation/shuffle drain via releaseTracked") {
+  test("persist mode: decontam's single-pass plans pin no cache") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     inMode("persist") {
       val docs = Seq(
         (1L, "a b c d e f", "s1"), (2L, "a b c d e f", "s1"),
         (3L, "q w e r t y", "s2"), (4L, "m n o p q r", "s2"))
         .toDF("doc_id", "text", "source")
       val evalSet = Seq((100L, "a b c")).toDF("doc_id", "text")
-      // Decontam is single-pass by construction (broadcast eval grams,
-      // one corpus aggregate) — it must not pin ANY cache, in any mode
+      // broadcast eval grams, one corpus aggregate: nothing to materialize
       graft.llm.Decontam.overlapReport(docs, evalSet, "doc_id", "text", n = 3).count()
       graft.llm.Decontam.evalContaminationReport(docs, evalSet, "doc_id", "text", n = 3).count()
       graft.llm.Decontam.decontaminate(docs, evalSet, "doc_id", "text",
         n = 3, minHitPermille = 100).count()
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         "decontam must not pin caches — its plan is single-pass")
-      // genuinely multi-consumer operators cache via stable() and hand
-      // release to session hygiene; all of them must be TRACKED
-      graft.llm.Retrieval.tfidfTopK(docs, evalSet, "doc_id", "text", k = 3).count()
-      graft.llm.Retrieval.bm25iTopK(docs, evalSet, "doc_id", "text", k = 3).count()
-      graft.llm.Shuffling.deterministicShuffle(docs, "doc_id", numShards = 2).count()
-      graft.llm.Curation.curate(docs, evalSet, "doc_id", "text", "source",
-        minTokens = 1, maxTokens = 100, minUniqPermille = 0,
-        maxTopTokPermille = 1000, decontamN = 3, minHitPermille = 900,
-        tokenBudgetPerSource = 1000L).count()
-      assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-        "expected pinned cache entries from the stable()-using operators")
-      assert(graft.util.Materialize.releaseTracked(spark) > 0)
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (spark.sparkContext.getPersistentRDDs.nonEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"leaked: ${spark.sparkContext.getPersistentRDDs.keys}")
     }
   }
 
-  test("persist mode: processBatch releases its per-trigger cache") {
+  test("persist mode: 100 processBatch triggers leave no persisted RDD once unreachable") {
+    // the hygiene path first, so every entry left at the end is this test's
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val base = tmpDir("matmode")
+    val triggers = 100
     inMode("persist") {
-      val base = tmpDir("matmode")
       val cfg = ReplicationJob.Config(sourceDir = base,
         targetDir = s"$base/target", dlqDir = s"$base/dlq",
         checkpointDir = s"$base/ckpt")
-      val batch = Seq(
-        (1L, 100L, 1L, "view", 1.0),
-        (2L, 200L, 2L, "click", 2.0))
-        .toDF("event_id", "ts_us", "user_id", "event_type", "value")
-        .withColumn("ts", col("ts_us") * 1000)
-        .withColumn("props", lit(null).cast("string"))
-      ReplicationJob.processBatch(spark, batch, cfg, batchId = 0L)
-      ReplicationJob.processBatch(spark, batch, cfg, batchId = 1L)
-      // the release contract: a long-running stream must not accumulate
-      // one cached batch per trigger
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"leaked cache entries: ${spark.sparkContext.getPersistentRDDs.keys}")
-      val state = spark.read.parquet(s"$base/target")
-      assert(state.count() == 2)
+      (0 until triggers).foreach { i =>
+        // two new keys per trigger, plus an update of key 0
+        val batch = Seq(
+          (3L * i, 100L + i, 2L * i + 1, "view", 1.0),
+          (3L * i + 1, 100L + i, 2L * i + 2, "click", 2.0),
+          (3L * i + 2, 100L + i, 0L, "purchase", 3.0))
+          .toDF("event_id", "ts_us", "user_id", "event_type", "value")
+          .withColumn("ts", col("ts_us") * 1000)
+          .withColumn("props", lit(null).cast("string"))
+        ReplicationJob.processBatch(spark, batch, cfg, batchId = i.toLong)
+      }
     }
+    // no unpersist call anywhere: ContextCleaner drops each trigger's
+    // checkpointed batch once it is unreachable
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (spark.sparkContext.getPersistentRDDs.nonEmpty &&
+      System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked: ${spark.sparkContext.getPersistentRDDs.keys}")
+    assert(spark.read.parquet(s"$base/target").count() == 2L * triggers + 1)
+  }
+
+  test("persist mode: bpe_merge_curve's analyzed plan is a leaf-cut plan, as in local mode") {
+    def nodes(): Int = SparkEntry.queries("bpe_merge_curve")(spark, sfDir)
+      .queryExecution.analyzed.collectWithSubqueries { case n => n }.size
+    val local = nodes()
+    val persisted = inMode("persist") { nodes() }
+    info(s"analyzed-plan nodes: local $local, persist $persisted")
+    // a plan that nests each round's plan grows with the round count; a
+    // checkpointed leaf per round keeps it to the final query's own nodes
+    assert(persisted <= local + 5, s"persist $persisted nodes against local $local")
   }
 }
