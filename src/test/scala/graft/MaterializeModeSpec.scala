@@ -62,7 +62,7 @@ class MaterializeModeSpec extends SparkSpecBase {
     }
   }
 
-  test("persist mode: 100 processBatch triggers leave no persisted RDD once unreachable") {
+  test("persist mode: 100 processBatch triggers leave no persisted RDD") {
     // the hygiene path first, so every entry left at the end is this test's
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val base = tmpDir("matmode")
